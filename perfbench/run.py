@@ -22,6 +22,7 @@ import argparse
 import hashlib
 import json
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -37,6 +38,18 @@ CONFIG = json.load(open(os.path.join(HERE, "workloads.json")))
 WORKLOADS = ["batch_mix", "stream_stateful"]
 # a run must end within this many seconds, build excluded
 RUN_BUDGET_S = 170
+
+
+def sf_dir():
+    """The sf0.1 test tables: SPARK_GRAFT_SF_DIR (as for graft.Bench), or
+    the directory TESTDATA.md lists for scale factor 0.1."""
+    if "SPARK_GRAFT_SF_DIR" in os.environ:
+        return os.environ["SPARK_GRAFT_SF_DIR"]
+    for line in open(os.path.join(ROOT, "TESTDATA.md")):
+        m = re.match(r"\|\s*0\.1\s*\|\s*`([^`]+)`", line)
+        if m:
+            return m.group(1).rstrip("/")
+    fail("TESTDATA.md lists no sf0.1 directory; set SPARK_GRAFT_SF_DIR")
 
 
 def fail(msg, code=2):
@@ -479,11 +492,11 @@ def main():
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args()
 
-    for f in ("build.sbt", os.path.join("src", "main", "scala"),
+    for f in ("build.sbt", "TESTDATA.md", os.path.join("src", "main", "scala"),
               os.path.join("scripts", "check_oracle.py")):
         if not os.path.exists(os.path.join(ROOT, f)):
             fail(f"no {f} beside perfbench/: run from a full checkout")
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", CONFIG["sf_dir"])
+    sf = sf_dir()
     if not os.path.isdir(sf):
         fail(f"test tables not found at {sf} (set SPARK_GRAFT_SF_DIR)")
 
@@ -500,7 +513,7 @@ def main():
     wcfg = CONFIG[a.workload]
     args = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
             "trace": a.trace, "sf": sf, "scratch": scratch,
-            "cpus": os.cpu_count(),
+            "cpus": len(os.sched_getaffinity(0)),
             "out": os.path.join(scratch, "result.json"),
             "trace_dir": os.path.join(build_dir, "traces",
                                       f"{a.workload}-s{a.seed}"),
