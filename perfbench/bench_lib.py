@@ -67,6 +67,21 @@ def uncovered(outer, inner):
     return sum((e - s) - union_length(clip(inner, s, e)) for s, e in m)
 
 
+def self_times(layers, lo, hi):
+    """Split the window [lo, hi] over layers given in precedence order.
+
+    layers: list of (name, intervals). A layer's self time is the part of
+    the window its intervals cover and no earlier layer covers, so the
+    self times never overlap. Returns ({name: self time}, residual), the
+    residual being the part of the window no layer covers."""
+    covered, out = [], {}
+    for name, intervals in layers:
+        before = union_length(covered)
+        covered += clip(intervals, lo, hi)
+        out[name] = union_length(covered) - before
+    return out, (hi - lo) - union_length(covered)
+
+
 def stratified_sample(population, seed, quota):
     """Seeded stratified sample.
 

@@ -50,7 +50,8 @@ object Stream {
   def envelope(e: Stateful.Ev): Array[Byte] = {
     val micros = e._2.getTime * 1000L + (e._2.getNanos / 1000) % 1000
     val json = s"""{"user_id":${e._1},"ts":$micros,"event_id":${e._3},""" +
-      s""""event_type":${Json(e._4)},"value":${e._5}}"""
+      s""""event_type":${Main.json.writeValueAsString(e._4)},""" +
+      s""""value":${e._5}}"""
     json.getBytes("UTF-8")
   }
 
@@ -79,10 +80,17 @@ object Stream {
   final class Phase(val name: String, val queries: Seq[(Twin, StreamingQuery)])
 
   /** One go through the workload. `tag` keeps the checkpoints of the
-    * traced run's two goes apart. */
-  def run(spark: SparkSession, a: Args, tracer: Option[Tracer], tag: String)
-      : Map[String, Any] = {
+    * traced run's goes apart; a go that is not `full` stops after the
+    * closed loop and returns only its drain time. */
+  def run(spark: SparkSession, a: Args, tracer: Option[Tracer], tag: String,
+      full: Boolean = true): Map[String, Any] = {
     import spark.implicits._
+    // wall time per phase, for the run's timing line
+    val marks = mutable.LinkedHashMap[String, Double]()
+    var last = System.nanoTime()
+    def mark(name: String): Unit = {
+      val now = System.nanoTime(); marks(name) = (now - last) / 1e9; last = now
+    }
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // the feed is the first `days` days of the events table; the twins'
@@ -102,12 +110,7 @@ object Stream {
     val rows = feed(events, a.seed)
     val payloads = rows.map(envelope)
     val tw = twins(endDay)
-    // wall time per phase, for the run's timing line
-    val marks = mutable.LinkedHashMap[String, Double]()
-    var last = System.nanoTime()
-    def mark(name: String): Unit = {
-      val now = System.nanoTime(); marks(name) = (now - last) / 1e9; last = now
-    }
+    mark("feed")
 
     def start(phase: String, topic: String): Phase =
       new Phase(phase, tw.map { t =>
@@ -156,6 +159,7 @@ object Stream {
     val drainStart = System.nanoTime()
     val drainStartMs = System.currentTimeMillis()
     val closed = start("closed", closedTopic)
+    val startedMs = System.currentTimeMillis()
     closed.queries.foreach(_._2.processAllAvailable())
     val drainS = (System.nanoTime() - drainStart) / 1e9
     val drainEndMs = System.currentTimeMillis()
@@ -163,6 +167,7 @@ object Stream {
     val closedOut = outputs(spark, closed)
     MessageBus.reset(closedTopic)
     mark("closed")
+    if (!full) return Map("drain_s" -> drainS)
 
     // open loop, for `seconds`: the generator sends row i when it is due,
     // t0 + i / rate, and records when it actually went out. Each twin's
@@ -204,6 +209,7 @@ object Stream {
       "twins" -> tw.map(_.name), "open_epochs" -> openEpochs,
       "closed_epochs" -> closedEpochs, "drain_s" -> drainS,
       "drain_window_ms" -> Seq(drainStartMs, drainEndMs),
+      "drain_started_ms" -> startedMs,
       "checks" -> checks, "phase_s" -> marks)
   }
 

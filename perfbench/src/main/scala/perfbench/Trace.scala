@@ -8,16 +8,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** A timed interval with its cause. Times are epoch milliseconds, the
   * clock Spark's listener events carry. */
 final case class Span(name: String, start: Long, end: Long, parent: String,
-    query: String) {
-  def toMap: Map[String, Any] = Map("name" -> name, "start" -> start,
-    "end" -> end, "parent" -> parent, "query" -> query)
-}
+    query: String)
 
 object Tracer {
   /** The local property that ties a Spark job to the query that ran it. */
@@ -25,11 +24,13 @@ object Tracer {
 }
 
 /** The traced run's instrumentation, attached from outside the engine:
-  * a SparkListener (jobs, stages, tasks, block updates), a
-  * QueryExecutionListener (planning phase times) and a
+  * a SparkListener (jobs, stages, tasks, block updates, SQL executions),
+  * a QueryExecutionListener (planning phase times) and a
   * StreamingQueryListener (epoch progress). Everything stays in memory
   * until the run ends. Jobs are tied to the query that launched them
-  * through the `perfbench.query` local property the client sets. */
+  * through the `perfbench.query` local property the client sets; SQL
+  * executions and planning phases carry no such tag and are tied to a
+  * query by time, in run.py. */
 final class Tracer {
   import Tracer.QueryKey
 
@@ -46,6 +47,8 @@ final class Tracer {
   private val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
   private val spans = mutable.ArrayBuffer.empty[Span]
   private val phases = mutable.ArrayBuffer.empty[(String, Long, Long)]
+  private val execStart = new ConcurrentHashMap[Long, Long]()
+  private val execs = mutable.ArrayBuffer.empty[(Long, Long)]
   private val blockBytes = new ConcurrentHashMap[String, Long]()
   @volatile private var cachedNow = 0L
   @volatile var cachedPeak = 0L
@@ -99,6 +102,17 @@ final class Tracer {
           }
         }
       }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        execStart.put(s.executionId, s.time)
+      case x: SparkListenerSQLExecutionEnd =>
+        Option(execStart.remove(x.executionId)).foreach { t0 =>
+          execs.synchronized { execs += ((t0, x.time)) }
+          span(Span(s"driver.execution.${x.executionId}", t0, x.time, null,
+            null))
+        }
+      case _ =>
+    }
     override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
       val b = e.blockUpdatedInfo
       if (b.blockId.isRDD) {
@@ -112,16 +126,20 @@ final class Tracer {
     }
   }
 
+  /** The planning phases `qe` has timed so far. The listener below sees
+    * the query execution of each action; the client calls this for the
+    * DataFrame it built, whose analysis ran eagerly at construction. */
+  def recordPhases(qe: QueryExecution): Unit = {
+    val ps = qe.tracker.phases.toSeq.map { case (name, p) =>
+      (name, p.startTimeMs, p.endTimeMs) }
+    phases.synchronized { phases ++= ps }
+  }
+
   val planListener: QueryExecutionListener = new QueryExecutionListener {
-    private def record(qe: QueryExecution): Unit = {
-      val ps = qe.tracker.phases.toSeq.map { case (name, p) =>
-        (name, p.startTimeMs, p.endTimeMs) }
-      phases.synchronized { phases ++= ps }
-    }
     override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-      record(qe)
+      recordPhases(qe)
     override def onFailure(f: String, qe: QueryExecution,
-        e: Exception): Unit = record(qe)
+        e: Exception): Unit = recordPhases(qe)
   }
 
   val streamListener: StreamingQueryListener = new StreamingQueryListener {
@@ -189,6 +207,9 @@ final class Tracer {
 
   def planPhases: Seq[(String, Long, Long)] =
     phases.synchronized { phases.toSeq }
+
+  /** (start, end) of every SQL execution seen while attached. */
+  def executions: Seq[(Long, Long)] = execs.synchronized { execs.toSeq }
 
   def allSpans: Seq[Span] = spans.synchronized { spans.toSeq }
 }

@@ -66,6 +66,19 @@ class IntervalTest(unittest.TestCase):
         tasks = [(0, 10)] * 4
         self.assertEqual(lib.uncovered([(0, 10)], tasks), 0)
 
+    def test_self_times_are_disjoint_in_precedence_order(self):
+        layers = [("compute", [(2, 4)]), ("dispatch", [(1, 5)]),
+                  ("driver", [(0, 6), (30, 40)]), ("build", [(0, 3)])]
+        got, residual = lib.self_times(layers, 0, 10)
+        self.assertEqual(got, {"compute": 2, "dispatch": 2, "driver": 2,
+                               "build": 0})
+        self.assertEqual(residual, 4)          # 6-10: no layer covers it
+
+    def test_a_missing_layer_shows_as_residual(self):
+        got, residual = lib.self_times([("compute", [(0, 3)]),
+                                        ("driver", [])], 0, 10)
+        self.assertEqual((got["compute"], got["driver"], residual), (3, 0, 7))
+
 
 class SampleTest(unittest.TestCase):
     POP = [(f"{f}{i:02d}", f"{f}:{i % 3}") for f in "qdst" for i in range(12)]
@@ -100,6 +113,15 @@ class SampleTest(unittest.TestCase):
             self.assertEqual(len(s), sum(cfg["quota"].values()))
             families |= {q[0] for q in s}
         self.assertEqual(families, set("qdstxm"))
+
+    def test_forced_queries_come_from_the_population(self):
+        cfg = json.load(open(os.path.join(os.path.dirname(HERE),
+                                          "workloads.json")))["batch_mix"]
+        pop = [(q, f"{f}:{t}") for q, (f, t) in cfg["population"].items()]
+        sample = lib.stratified_sample(pop, cfg["sample_seed"], cfg["quota"])
+        for q in cfg["forced"]:
+            self.assertIn(q, cfg["population"])
+            self.assertNotIn(q, sample)
 
 
 class LatencyTest(unittest.TestCase):
