@@ -9,6 +9,23 @@ object Bench {
     * its epoch count stays under whatever cap its session carries. */
   val ProgressCap = 100000
 
+  /** The closing stdout lines of a bench run. Consumers parse only the
+    * LAST line, from a bounded tail of the output, so that line is the
+    * contract alone: metric, value, unit, an empty queries map and sf.
+    * The per-query map goes on the line above it, under short keys (the
+    * unique prefix before the first '_': q01, d03, t04…; full names when
+    * two queries share a prefix); bench_full.json keeps full names. */
+  private[graft] def reportLines(perQuery: Seq[(String, Double)],
+      total: Double, sfDir: String): Seq[String] = {
+    def shortKey(n: String): String = n.takeWhile(_ != '_')
+    val unique = perQuery.map(q => shortKey(q._1)).distinct.size == perQuery.size
+    val qs = perQuery.map { case (k, v) =>
+      "\"" + (if (unique) shortKey(k) else k) + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    Seq(s"""{"queries":$qs}""",
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{},"sf":"$sfDir"}""")
+  }
+
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared posture lives in Sessions.builder (r15): bench, verify,
@@ -183,29 +200,14 @@ object Bench {
     }
     val calibBefore = calibSeries.head._2
     val calibAfter = calibSeries.last._2
-    // The reporting line must stay SHORT: the driver keeps only a tail of
-    // the sbt output, and a ~2.7 kB line gets head-truncated past parsing.
-    // Short keys = the unique prefix before the first '_' (q01, d03, t04…);
-    // full names live in CORRECTNESS_r*.json / SparkEntry.queries.
-    def shortKey(n: String): String = n.takeWhile(_ != '_')
-    val keys = results.map { case (n, _, _) => n -> shortKey(n) }.toMap
-    val unique = keys.values.toSet.size == keys.size
-    val qs = results.map { case (k, v, _) =>
-      "\"" + (if (unique) keys(k) else k) + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val normTotal = results.map(_._3).filter(_ >= 0).sum
-    // Calibration drift + the probe-normalized total go on their OWN
-    // line, BEFORE the contract line: r10-r14 injected them (plus an
-    // empty queries map) into the final {"metric":"total"...} line and
-    // the driver's parser rejected that shape every round — PERF_r1x
-    // carried `parsed: null` / an empty per_query map for five rounds
-    // (r14 verdict item 2). The FINAL stdout line is now EXACTLY the
-    // driver-contract form — metric/value/unit/queries/sf, no extra
-    // fields — with the full short-key per-query map.
+    // Calibration drift and the probe-normalized total go on their own
+    // line, before the report lines.
     println(f"""{"calib_sec":{"before":$calibBefore%.3f,"after":$calibAfter%.3f},"norm_value":$normTotal%.3f,"n_queries":${results.size}}""")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    println(line)
+    val lines = reportLines(results.map(r => r._1 -> r._2), total, sfDir)
+    lines.foreach(println)
+    val line = lines.last
     // Also persist the metric JSON next to the repo: the driver parses a
     // bounded tail of sbt stdout (and sbt may prefix lines with [info]),
     // so the perf signal must not depend on that parsing surviving.

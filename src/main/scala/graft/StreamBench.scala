@@ -232,9 +232,9 @@ object StreamBench {
       md ++= "\nReading the table: state rows track the DOCUMENTED "
       md ++= "domain (grid cells, entity keys,\nsketch key set), never "
       md ++= "event volume — the only shapes that survive a 100 TB "
-      md ++= "stream.\nkllQuantileStream's final=0 row is the "
-      md ++= "reclaim-on-close proof (round 9): closed-key\nsketch state "
-      md ++= "is removed, not tombstoned.\n"
+      md ++= "stream.\nThe grid and sketch twins' final=0 rows are the "
+      md ++= "reclaim-on-close proof: `Stateful.closeOnce`\nremoves a "
+      md ++= "closed key's state instead of keeping a tombstone.\n"
       if (curveResults.nonEmpty) {
         md ++= "\n## Throughput vs batch size (measured curve)\n\n"
         md ++= "The same shuffled-within-horizon feed replayed per "
@@ -307,8 +307,8 @@ object StreamBench {
         op: DataFrame => Dataset[_])
     val twins = Seq(
       TwinDef("dailyRevenueStream", "commutative-grid",
-        "one exact-cents counter per (type, day) cell",
-        "calendar grid cells + sentinel cell", gridCells + 1L,
+        "one exact-cents counter per (type, day) cell, reclaimed on close",
+        "calendar grid cells", gridCells,
         df => Stateful.dailyRevenueStream(df.select(col("event_type"),
           col("ts"),
           expr("cast(round(value * 100) as bigint)").as("cents")),

@@ -1,6 +1,11 @@
 package graft.streaming
 
+import java.sql.Timestamp
+
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
@@ -172,6 +177,11 @@ object Stateful {
   /** One event-log row: (user_id, ts, event_id, event_type, value). */
   type Ev = (Long, java.sql.Timestamp, Long, String, Double)
 
+  /** The event log as `Ev` columns under a `slack` watermark. */
+  private def evRows(df: DataFrame, slack: String): DataFrame =
+    df.withWatermark("ts", slack)
+      .select("user_id", "ts", "event_id", "event_type", "value")
+
   /** Run `apply` over each key's rows in event-time order, buffering
     * rows newer than the watermark. `apply(key, row, state)` returns the
     * next state and rows to emit (append mode). `keyOf` picks the
@@ -192,8 +202,7 @@ object Stateful {
       watermarkWakeups: Boolean = false)(
       implicit stEnc: Encoder[(S, Seq[Ev])], outEnc: Encoder[O],
       keyEnc: Encoder[K], evEnc: Encoder[Ev]): Dataset[O] = {
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
+    val ds = evRows(df, slack).as[Ev]
     ds.groupByKey(keyOf)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
@@ -229,6 +238,52 @@ object Stateful {
       implicit stEnc: Encoder[(S, Seq[Ev])], outEnc: Encoder[O],
       keyEnc: Encoder[Long], evEnc: Encoder[Ev]): Dataset[O] =
     orderedPerKeyBy[Long, S, O](df, slack, zero)(_._1)(apply)
+
+  /** The commutative-grid state family: fold each key's rows into an `S`
+    * and emit the key's output once, when the watermark passes the key's
+    * close instant `closeMs(key)` (epoch ms); then remove the state.
+    *
+    * `rows` carries the caller's watermark. Rows at or past their key's
+    * close still advance it but never reach state, and a row below the
+    * close that arrives after the close is below the watermark, so Spark
+    * drops it under EventTimeTimeout. An emitted key therefore never sees
+    * another row: its state is reclaimed, never kept as a tombstone, and
+    * a key whose only rows are past its close never gets state at all
+    * (harness sentinels form no cells). `fold(state, rows, wm)` takes the
+    * key's whole micro-batch, so a sketch state is deserialized once per
+    * batch rather than per row, plus the watermark, for folds that prune
+    * pending rows below it. An open key sleeps until the watermark
+    * passes its close or new rows arrive.
+    *
+    * Drop unwanted rows in `fold`, not with a filter in `rows`: Spark
+    * pushes a filter on a non-time column below the watermark, and the
+    * rows it removes (a sentinel among them) then stop advancing it. */
+  def closeOnce[R: TypeTag, K: TypeTag, S: TypeTag, O: TypeTag](
+      rows: DataFrame, ts: R => Timestamp, key: R => K,
+      closeMs: K => Long, zero: S)(
+      fold: (S, Iterator[R], Long) => S,
+      emit: (K, S) => IterableOnce[O]): Dataset[O] = {
+    implicit val stEnc: Encoder[S] = ExpressionEncoder[S]()
+    implicit val outEnc: Encoder[O] = ExpressionEncoder[O]()
+    rows.as[R](ExpressionEncoder[R]()).groupByKey(key)(ExpressionEncoder[K]())
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout) {
+        (k: K, it: Iterator[R], state: GroupState[S]) =>
+          val close = closeMs(k)
+          val live = it.filter(ts(_).getTime < close)
+          if (!state.exists && !live.hasNext) Iterator.empty
+          else {
+            val wm = state.getCurrentWatermarkMs()
+            val s = fold(state.getOption.getOrElse(zero), live, wm)
+            if (wm > close) { state.remove(); emit(k, s).iterator }
+            else {
+              state.update(s)
+              state.setTimeoutTimestamp(math.max(wm + 1L, close + 1L))
+              Iterator.empty
+            }
+          }
+      }
+  }
 
   /** Out-of-order-tolerant streaming SCD2: same output as `scd2Stream`
     * but the feed may be shuffled within `slack` of true event order —
@@ -1218,7 +1273,6 @@ object Stateful {
 
   /** One user's running rarity tally (q110's per-user row). */
   final case class RarityRow(user_id: Long, n_events: Long, sm: Long)
-  final case class RarityState(n: Long, sm: Long, done: Boolean)
 
   /** Streaming twin of q110's per-user pass — the live UEBA score. The
     * surprise-weight cell table ((event_type, hour) → micro-nats)
@@ -1229,42 +1283,18 @@ object Stateful {
     * the timeline end; the top-20 board runs over them via the shared
     * Security.q110Rollup — bit-for-bit with batch. */
   def rarityStream(df: DataFrame, cells: Map[(String, Int), Long],
-      endDay: Long, slack: String = "2 hours"): Dataset[RarityRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[RarityState] = Encoders.product[RarityState]
-    implicit val outEnc: Encoder[RarityRow] = Encoders.product[RarityRow]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-    val HourUs = 3600000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[RarityState]) =>
-          val st0 = state.getOption.getOrElse(RarityState(0L, 0L, false))
-          var n = st0.n; var sm = st0.sm
-          rows.foreach { e =>
-            val hod = ((microsOf(e._2) / HourUs) % 24L).toInt
-            cells.get((e._4, hod)).foreach { w => n += 1L; sm += w }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(RarityState(n, sm, true))
-            if (n == 0L) Iterator.empty
-            else Iterator.single(RarityRow(user, n, sm))
-          } else {
-            state.update(RarityState(n, sm, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      endDay: Long, slack: String = "2 hours"): Dataset[RarityRow] =
+    closeOnce[Ev, Long, (Long, Long), RarityRow](evRows(df, slack), _._2,
+      _._1, _ => (endDay + 1L) * 86400000L, (0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st) { (s, e) =>
+        val hod = ((microsOf(e._2) / 3600000000L) % 24L).toInt
+        cells.get((e._4, hod)).fold(s)(w => (s._1 + 1L, s._2 + w))
+      },
+      (user, s) => Option.when(s._1 > 0L)(RarityRow(user, s._1, s._2)))
 
   /** One (user, event_type) pair's first-seen day (q112's row). */
   final case class FirstSeenRow(user_id: Long, event_type: String,
       first_day: Long)
-  final case class FirstSeenState(minDay: Long, done: Boolean)
 
   /** Streaming twin of q112's per-pair pass — live first-time-seen
     * tracking. The fold is a commutative min over the event day, so no
@@ -1277,47 +1307,17 @@ object Stateful {
     * fold the series incrementally; the snapshot form is the
     * batch-parity twin.) */
   def firstSeenStream(df: DataFrame, endDayExclusive: Long,
-      slack: String = "2 hours"): Dataset[FirstSeenRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[FirstSeenState] =
-      Encoders.product[FirstSeenState]
-    implicit val outEnc: Encoder[FirstSeenRow] =
-      Encoders.product[FirstSeenRow]
-    implicit val keyEnc: Encoder[(Long, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-    val DayUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
-    ds.groupByKey(e => (e._1, e._4))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, String), rows: Iterator[Ev],
-            state: GroupState[FirstSeenState]) =>
-          val st0 = state.getOption.getOrElse(
-            FirstSeenState(Long.MaxValue, false))
-          var minDay = st0.minDay
-          rows.foreach { e =>
-            val day = microsOf(e._2) / DayUs
-            if (day < minDay) minDay = day
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(FirstSeenState(minDay, true))
-            if (minDay == Long.MaxValue) Iterator.empty
-            else Iterator.single(FirstSeenRow(key._1, key._2, minDay))
-          } else {
-            state.update(FirstSeenState(minDay, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[FirstSeenRow] =
+    closeOnce[Ev, (Long, String), Long, FirstSeenRow](evRows(df, slack),
+      _._2, e => (e._1, e._4), _ => endDayExclusive * 86400000L,
+      Long.MaxValue)(
+      (min, rows, _) => rows.foldLeft(min)((m, e) =>
+        math.min(m, microsOf(e._2) / 86400000000L)),
+      (key, min) => Some(FirstSeenRow(key._1, key._2, min)))
 
   /** One (feature, x, y) cell's closed count (q169's grid row). */
   final case class RelevanceCell(feature: String, x: String, y: Long,
       nxy: Long)
-  final case class RelCellState(n: Long, done: Boolean)
 
   /** Streaming twin of q169's cell pass — live feature-relevance
     * contingency counting. Both candidate features are row-local
@@ -1330,12 +1330,6 @@ object Stateful {
     * operators.Statistics.q169Finish — identical code to batch. */
   def relevanceStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[RelevanceCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[RelCellState] = Encoders.product[RelCellState]
-    implicit val outEnc: Encoder[RelevanceCell] =
-      Encoders.product[RelevanceCell]
-    implicit val keyEnc: Encoder[(String, String, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong)
     val DayUs = 86400000000L
     val cells = df.withWatermark("ts", slack)
       .select(col("event_type").as("x"), col("ts"),
@@ -1348,36 +1342,18 @@ object Stateful {
               lit(9L)), lit(0L)).as("y")))).as("f"))
       .select(col("f.feature").as("feature"), col("x"), col("f.y").as("y"),
         col("ts"))
-      .as[(String, String, Long, java.sql.Timestamp)](
-        Encoders.product[(String, String, Long, java.sql.Timestamp)])
-    cells.groupByKey(r => (r._1, r._2, r._3))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, String, Long),
-            rows: Iterator[(String, String, Long, java.sql.Timestamp)],
-            state: GroupState[RelCellState]) =>
-          val st0 = state.getOption.getOrElse(RelCellState(0L, done = false))
-          var n = st0.n
-          rows.foreach(_ => n += 1L)
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(RelCellState(n, done = true))
-            if (n > 0L)
-              Iterator.single(RelevanceCell(key._1, key._2, key._3, n))
-            else Iterator.empty
-          } else {
-            state.update(RelCellState(n, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(String, String, Long, Timestamp), (String, String, Long),
+        Long, RelevanceCell](cells, _._4, r => (r._1, r._2, r._3),
+      _ => endDayExclusive * 86400000L, 0L)(
+      (n, rows, _) => n + rows.size,
+      (key, n) => Some(RelevanceCell(key._1, key._2, key._3, n)))
   }
 
   /** One template's closed profile cell (q170's grid row). */
   final case class TemplateCell(template: String, n: Long, first_us: Long,
       last_us: Long, example: String)
   final case class TemplateState(n: Long, first_us: Long, last_us: Long,
-      example: String, done: Boolean)
+      example: String)
 
   /** Streaming twin of q170's template rollup — live log-template
     * triage: the view a security pipeline wants AS lines land, not at
@@ -1391,49 +1367,23 @@ object Stateful {
     * batch, so OrderedReplaySpec pins bit-for-bit parity. */
   def templateStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[TemplateCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[TemplateState] =
-      Encoders.product[TemplateState]
-    implicit val outEnc: Encoder[TemplateCell] =
-      Encoders.product[TemplateCell]
     val rows = graft.operators.Security
       .q170Lines(df.withWatermark("ts", slack))
       .select(col("template"), col("line"), col("us"), col("ts"))
-      .as[(String, String, Long, java.sql.Timestamp)](
-        Encoders.product[(String, String, Long, java.sql.Timestamp)])
-    rows.groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: String,
-            it: Iterator[(String, String, Long, java.sql.Timestamp)],
-            state: GroupState[TemplateState]) =>
-          val st0 = state.getOption.getOrElse(
-            TemplateState(0L, Long.MaxValue, Long.MinValue, "￿", false))
-          var n = st0.n; var lo = st0.first_us; var hi = st0.last_us
-          var ex = st0.example
-          it.foreach { r =>
-            n += 1L
-            if (r._3 < lo) lo = r._3
-            if (r._3 > hi) hi = r._3
-            if (r._2 < ex) ex = r._2
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(TemplateState(n, lo, hi, ex, done = true))
-            if (n > 0L) Iterator.single(TemplateCell(key, n, lo, hi, ex))
-            else Iterator.empty
-          } else {
-            state.update(TemplateState(n, lo, hi, ex, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(String, String, Long, Timestamp), String, TemplateState,
+        TemplateCell](rows, _._4, _._1, _ => endDayExclusive * 86400000L,
+      TemplateState(0L, Long.MaxValue, Long.MinValue, "￿"))(
+      (st, it, _) => it.foldLeft(st)((s, r) => TemplateState(s.n + 1L,
+        math.min(s.first_us, r._3), math.max(s.last_us, r._3),
+        if (r._2 < s.example) r._2 else s.example)),
+      (key, s) => Some(TemplateCell(key, s.n, s.first_us, s.last_us,
+        s.example)))
   }
 
   /** One (nation, year) cell's closed profit counters (q165's grid row). */
   final case class ProfitCell(n_name: String, o_year: Int, n_lines: Long,
       profit_cents: Long)
-  final case class ProfitState(n: Long, cents: Long, done: Boolean)
+  final case class ProfitState(n: Long, cents: Long)
 
   /** Streaming twin of q165's per-cell pass — live profit tracking by
     * supplier nation and order year. The dimension enrichment (part
@@ -1445,43 +1395,21 @@ object Stateful {
     * over the emitted grid — identical code to batch.
     * Input columns: n_name, ts, o_year, profit_cents. */
   def profitStream(df: DataFrame, endDayExclusive: Long,
-      slack: String = "2 hours"): Dataset[ProfitCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[ProfitState] = Encoders.product[ProfitState]
-    implicit val outEnc: Encoder[ProfitCell] = Encoders.product[ProfitCell]
-    implicit val keyEnc: Encoder[(String, Int)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
-    val ds = df.withWatermark("ts", slack)
-      .select(col("n_name"), col("ts"), col("o_year"), col("profit_cents"))
-      .as[(String, java.sql.Timestamp, Int, Long)](
-        Encoders.product[(String, java.sql.Timestamp, Int, Long)])
-    ds.groupByKey(r => (r._1, r._3))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Int),
-            rows: Iterator[(String, java.sql.Timestamp, Int, Long)],
-            state: GroupState[ProfitState]) =>
-          val st0 = state.getOption.getOrElse(ProfitState(0L, 0L, false))
-          var n = st0.n; var c = st0.cents
-          rows.foreach { r => n += 1L; c += r._4 }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(ProfitState(n, c, done = true))
-            if (n > 0L) Iterator.single(ProfitCell(key._1, key._2, n, c))
-            else Iterator.empty
-          } else {
-            state.update(ProfitState(n, c, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[ProfitCell] =
+    closeOnce[(String, Timestamp, Int, Long), (String, Int), ProfitState,
+        ProfitCell](df.withWatermark("ts", slack)
+        .select(col("n_name"), col("ts"), col("o_year"), col("profit_cents")),
+      _._2, r => (r._1, r._3), _ => endDayExclusive * 86400000L,
+      ProfitState(0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st)((s, r) =>
+        ProfitState(s.n + 1L, s.cents + r._4)),
+      (key, s) => Some(ProfitCell(key._1, key._2, s.n, s.cents)))
 
   /** One event type's closed DQ counters (q167's grid row). */
   final case class DqCounts(event_type: String, n: Long, n_range: Long,
       n_enum: Long, n_k: Long, n_user: Long)
   final case class DqState(n: Long, nRange: Long, nEnum: Long, nK: Long,
-      nUser: Long, done: Boolean)
+      nUser: Long)
 
   /** Streaming twin of q167's per-type pass — live expectation
     * monitoring over the event feed. Every rule flag is row-local
@@ -1495,10 +1423,6 @@ object Stateful {
     * batch. Input columns: event_type, ts, value, user_id, props. */
   def dqStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[DqCounts] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[DqState] = Encoders.product[DqState]
-    implicit val outEnc: Encoder[DqCounts] = Encoders.product[DqCounts]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
     val flagged = df.withWatermark("ts", slack)
       .select(col("event_type"), col("ts"),
         when(col("value") > 0 && col("value") <= 400.0, 1L)
@@ -1509,35 +1433,13 @@ object Stateful {
         when(col("props").rlike("^\\{\"k\": -?[0-9]+\\}$"), 1L)
           .otherwise(0L).as("ok_k"),
         when(col("user_id") >= 0, 1L).otherwise(0L).as("ok_user"))
-    val ds = flagged
-      .select(col("event_type"), col("ts"), col("ok_range"),
-        col("ok_enum"), col("ok_k"), col("ok_user"))
-      .as[(String, java.sql.Timestamp, Long, Long, Long, Long)](
-        Encoders.product[(String, java.sql.Timestamp, Long, Long, Long, Long)])
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: String,
-            rows: Iterator[(String, java.sql.Timestamp, Long, Long, Long, Long)],
-            state: GroupState[DqState]) =>
-          val st0 = state.getOption.getOrElse(
-            DqState(0L, 0L, 0L, 0L, 0L, done = false))
-          var n = st0.n; var r = st0.nRange; var e = st0.nEnum
-          var k = st0.nK; var u = st0.nUser
-          rows.foreach { row =>
-            n += 1L; r += row._3; e += row._4; k += row._5; u += row._6
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(DqState(n, r, e, k, u, done = true))
-            if (n > 0L) Iterator.single(DqCounts(key, n, r, e, k, u))
-            else Iterator.empty
-          } else {
-            state.update(DqState(n, r, e, k, u, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(String, Timestamp, Long, Long, Long, Long), String, DqState,
+        DqCounts](flagged, _._2, _._1, _ => endDayExclusive * 86400000L,
+      DqState(0L, 0L, 0L, 0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st)((s, r) => DqState(s.n + 1L,
+        s.nRange + r._3, s.nEnum + r._4, s.nK + r._5, s.nUser + r._6)),
+      (key, s) => Some(DqCounts(key, s.n, s.nRange, s.nEnum, s.nK,
+        s.nUser)))
   }
 
   /** One channel's closed gap statistics (q111's per-channel row). */
@@ -1644,8 +1546,7 @@ object Stateful {
 
   /** One exposed user's experiment outcome (q106's `per` table). */
   final case class AbUser(user_id: Long, conv: Long)
-  final case class AbState(minViewUs: Long, purchases: Seq[Long],
-      done: Boolean)
+  final case class AbState(minViewUs: Long, purchases: Seq[Long])
 
   /** Streaming twin of q106's per-user pass — the live experiment
     * counter. State per user: the running min first-view time plus the
@@ -1664,57 +1565,38 @@ object Stateful {
     * snapshot via Behavioral.q106Rollup — identical code to batch. */
   def abStream(df: DataFrame, endDay: Long, slack: String = "2 hours")
       : Dataset[AbUser] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[AbState] = Encoders.product[AbState]
-    implicit val outEnc: Encoder[AbUser] = Encoders.product[AbUser]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val TolUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[AbState]) =>
-          val st0 = state.getOption.getOrElse(AbState(Long.MaxValue, Nil,
-            false))
-          var minView = st0.minViewUs
-          var purch = st0.purchases
-          rows.foreach { e =>
-            val t = microsOf(e._2)
-            e._4 match {
-              case "view" if t < minView =>
-                minView = t
-                purch = purch.filter(p => p - minView <= TolUs)
-              case "purchase" if minView == Long.MaxValue ||
-                  t - minView <= TolUs =>
-                purch = purch :+ t
-              case _ => ()
-            }
+    closeOnce[Ev, Long, AbState, AbUser](evRows(df, slack), _._2, _._1,
+      _ => (endDay + 1L) * 86400000L, AbState(Long.MaxValue, Nil))(
+      (st, rows, wm) => {
+        var minView = st.minViewUs
+        var purch = st.purchases
+        rows.foreach { e =>
+          val t = microsOf(e._2)
+          e._4 match {
+            case "view" if t < minView =>
+              minView = t
+              purch = purch.filter(p => p - minView <= TolUs)
+            case "purchase" if minView == Long.MaxValue ||
+                t - minView <= TolUs =>
+              purch = purch :+ t
+            case _ => ()
           }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(AbState(minView, Nil, true))
-            if (minView == Long.MaxValue) Iterator.empty
-            else {
-              val conv = purch.exists(p =>
-                p > minView && p - minView <= TolUs)
-              Iterator.single(AbUser(user, if (conv) 1L else 0L))
-            }
-          } else {
-            // a user with purchases but no view yet: any FUTURE view
-            // arrives with event time >= the watermark (older rows are
-            // dropped), so a pending purchase at p < wm can never
-            // satisfy p >= t1 — prune it; pending state stays bounded
-            // by purchase-rate × watermark delay, not stream lifetime
-            val kept =
-              if (minView == Long.MaxValue) purch.filter(_ >= wm * 1000L)
-              else purch
-            state.update(AbState(minView, kept, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+        }
+        // a user with purchases but no view yet: any FUTURE view
+        // arrives with event time >= the watermark (older rows are
+        // dropped), so a pending purchase at p < wm can never
+        // satisfy p >= t1 — prune it; pending state stays bounded
+        // by purchase-rate × watermark delay, not stream lifetime
+        if (minView == Long.MaxValue)
+          AbState(minView, purch.filter(_ >= wm * 1000L))
+        else AbState(minView, purch)
+      },
+      (user, s) => Option.when(s.minViewUs != Long.MaxValue) {
+        val conv = s.purchases.exists(p =>
+          p > s.minViewUs && p - s.minViewUs <= TolUs)
+        AbUser(user, if (conv) 1L else 0L)
+      })
   }
 
   /** One closed day of the transformWithState daily-mean twin. */
@@ -1853,8 +1735,7 @@ object Stateful {
     implicit val evEnc: Encoder[Ev] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
+    val ds = evRows(df, slack).as[Ev]
     ds.groupByKey(_._4)
       .transformWithState(new DailyMeanSeededProcessor,
         TimeMode.EventTime(), OutputMode.Append(),
@@ -1871,8 +1752,7 @@ object Stateful {
     implicit val evEnc: Encoder[Ev] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
+    val ds = evRows(df, slack).as[Ev]
     ds.groupByKey(_._4)
       .transformWithState(new DailyMeanProcessor, TimeMode.EventTime(),
         OutputMode.Append())
@@ -1881,8 +1761,7 @@ object Stateful {
   /** One closed day of the sequential-A/B experiment grid. */
   final case class SeqAbCell(day: Long, na_d: Long, xa_d: Long,
       nb_d: Long, xb_d: Long)
-  final case class SeqAbState(na: Long, xa: Long, nb: Long, xb: Long,
-      done: Boolean)
+  final case class SeqAbState(na: Long, xa: Long, nb: Long, xb: Long)
 
   /** Streaming twin of q184's day pass — the LIVE interim analysis a
     * group-sequential experiment actually runs: arm/conversion flags
@@ -1894,47 +1773,23 @@ object Stateful {
     * closed grid, identical code to batch, bit-for-bit. */
   def seqAbStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[SeqAbCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[SeqAbState] = Encoders.product[SeqAbState]
-    implicit val outEnc: Encoder[SeqAbCell] = Encoders.product[SeqAbCell]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
     val rows = graft.operators.Statistics
       .q184Flags(df.withWatermark("ts", slack))
       .select(col("day"), col("is_a"), col("is_p"), col("ts"))
-      .as[(Long, Long, Long, java.sql.Timestamp)](
-        Encoders.product[(Long, Long, Long, java.sql.Timestamp)])
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (day: Long, it: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-            state: GroupState[SeqAbState]) =>
-          val st0 = state.getOption.getOrElse(
-            SeqAbState(0L, 0L, 0L, 0L, done = false))
-          var na = st0.na; var xa = st0.xa; var nb = st0.nb
-          var xb = st0.xb
-          it.foreach { r =>
-            if (r._2 == 1L) { na += 1L; xa += r._3 }
-            else { nb += 1L; xb += r._3 }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(SeqAbState(na, xa, nb, xb, done = true))
-            if (na + nb > 0L)
-              Iterator.single(SeqAbCell(day, na, xa, nb, xb))
-            else Iterator.empty
-          } else {
-            state.update(SeqAbState(na, xa, nb, xb, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(Long, Long, Long, Timestamp), Long, SeqAbState, SeqAbCell](
+      rows, _._4, _._1, _ => endDayExclusive * 86400000L,
+      SeqAbState(0L, 0L, 0L, 0L))(
+      (st, it, _) => it.foldLeft(st) { (s, r) =>
+        if (r._2 == 1L) s.copy(na = s.na + 1L, xa = s.xa + r._3)
+        else s.copy(nb = s.nb + 1L, xb = s.xb + r._3)
+      },
+      (day, s) => Some(SeqAbCell(day, s.na, s.xa, s.nb, s.xb)))
   }
 
   /** One closed (type, day) live-distinct cell: the sketch estimate
     * plus the exact count the spec gates it against. */
   final case class DistinctCell(event_type: String, day: Long,
       est_users: Long)
-  final case class HllState(sketch: Array[Byte], done: Boolean)
 
   /** Live approximate distinct users per (type, day) with a MERGEABLE
     * SKETCH AS THE STATE VALUE — the streaming rendition of q67's HLL
@@ -1949,55 +1804,26 @@ object Stateful {
     * the q67/q164 convention). */
   def hllDistinctStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[DistinctCell] = {
-    import org.apache.spark.sql.Encoders
     import org.apache.datasketches.hll.HllSketch
-    implicit val stEnc: Encoder[HllState] = Encoders.product[HllState]
-    implicit val outEnc: Encoder[DistinctCell] =
-      Encoders.product[DistinctCell]
-    implicit val keyEnc: Encoder[(String, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    // Post-timeline rows advance the watermark but never reach state
-    // (see kllQuantileStream): an emitted cell's state is then
-    // RECLAIMED with state.remove() instead of a permanent done
-    // tombstone — the sketch-state family's key domain grows with the
-    // calendar, so tombstones would leak for the life of the query.
-    val rows = df.withWatermark("ts", slack)
-      .filter(expr(
-        s"unix_micros(ts) < ${endDayExclusive * 86400000000L}L"))
-      .select(col("event_type"), col("ts"), col("user_id"))
-      .as[(String, java.sql.Timestamp, Long)](
-        Encoders.product[(String, java.sql.Timestamp, Long)])
-    rows.groupByKey(r =>
-      (r._1, Math.floorDiv(microsOf(r._2), 86400000000L)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long),
-            it: Iterator[(String, java.sql.Timestamp, Long)],
-            state: GroupState[HllState]) =>
-          val st0 = state.getOption.getOrElse(
-            HllState(Array.emptyByteArray, done = false))
-          val sk =
-            if (st0.sketch.isEmpty) new HllSketch(14)
-            else HllSketch.heapify(st0.sketch)
-          it.foreach(r => sk.update(r._3))
-          val wm = state.getCurrentWatermarkMs()
-          if (wm > endDayExclusive * 86400000L + 1L) {
-            state.remove() // emit-once then reclaim (see pre-filter)
-            Iterator.single(DistinctCell(key._1, key._2,
-              Math.round(sk.getEstimate)))
-          } else {
-            state.update(HllState(sk.toUpdatableByteArray, done = false))
-            state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(String, Timestamp, Long), (String, Long), Array[Byte],
+        DistinctCell](df.withWatermark("ts", slack)
+        .select(col("event_type"), col("ts"), col("user_id")),
+      _._2, r => (r._1, Math.floorDiv(microsOf(r._2), 86400000000L)),
+      _ => endDayExclusive * 86400000L, Array.emptyByteArray)(
+      (bytes, it, _) => {
+        val sk =
+          if (bytes.isEmpty) new HllSketch(14) else HllSketch.heapify(bytes)
+        it.foreach(r => sk.update(r._3))
+        sk.toUpdatableByteArray
+      },
+      (key, bytes) => Some(DistinctCell(key._1, key._2,
+        Math.round(HllSketch.heapify(bytes).getEstimate))))
   }
 
   /** One type's live quantile snapshot (milli-unit values; n is exact —
     * the sketch tracks its update count precisely). */
   final case class QuantileCell(event_type: String, n: Long,
       p50_milli: Long, p90_milli: Long, p99_milli: Long)
-  final case class KllState(sketch: Array[Byte], done: Boolean)
 
   /** Live quantile monitor — q86's GK posture carried into streaming
     * state, and the second sketch-state twin beside hllDistinctStream:
@@ -2014,53 +1840,25 @@ object Stateful {
     * target rank, and n exactly equal to the batch count. */
   def kllQuantileStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[QuantileCell] = {
-    import org.apache.spark.sql.Encoders
     import org.apache.datasketches.kll.KllDoublesSketch
     import org.apache.datasketches.memory.Memory
-    implicit val stEnc: Encoder[KllState] = Encoders.product[KllState]
-    implicit val outEnc: Encoder[QuantileCell] =
-      Encoders.product[QuantileCell]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    // Rows past the monitored timeline still advance the watermark
-    // (withWatermark sees them) but must never reach a key's state:
-    // with post-timeline rows excluded and late rows dropped by the
-    // watermark, a key that has emitted can never see another row, so
-    // its state can be REMOVED instead of tombstoned with a done flag —
-    // for a wide key domain the tombstones would be a permanent leak.
-    val rows = df.withWatermark("ts", slack)
-      .filter(expr(
-        s"unix_micros(ts) < ${endDayExclusive * 86400000000L}L"))
-      .select(col("event_type"), col("ts"),
-        expr("cast(round(value * 1000) as bigint)").as("vm"))
-      .as[(String, java.sql.Timestamp, Long)](
-        Encoders.product[(String, java.sql.Timestamp, Long)])
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[(String, java.sql.Timestamp, Long)],
-            state: GroupState[KllState]) =>
-          val st0 = state.getOption.getOrElse(
-            KllState(Array.emptyByteArray, done = false))
-          val sk =
-            if (st0.sketch.isEmpty) KllDoublesSketch.newHeapInstance(200)
-            else KllDoublesSketch.heapify(Memory.wrap(st0.sketch))
-          it.foreach(r => sk.update(r._3.toDouble))
-          val wm = state.getCurrentWatermarkMs()
-          if (wm > endDayExclusive * 86400000L + 1L) {
-            // emit-once then reclaim: no row for this key can arrive
-            // after the pre-filter + watermark, so no done tombstone
-            state.remove()
-            if (sk.isEmpty) Iterator.empty
-            else Iterator.single(QuantileCell(key, sk.getN,
-              Math.round(sk.getQuantile(0.5)),
-              Math.round(sk.getQuantile(0.9)),
-              Math.round(sk.getQuantile(0.99))))
-          } else {
-            state.update(KllState(sk.toByteArray, done = false))
-            state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    def heapify(bytes: Array[Byte]) =
+      if (bytes.isEmpty) KllDoublesSketch.newHeapInstance(200)
+      else KllDoublesSketch.heapify(Memory.wrap(bytes))
+    closeOnce[(String, Timestamp, Long), String, Array[Byte], QuantileCell](
+      df.withWatermark("ts", slack).select(col("event_type"), col("ts"),
+        expr("cast(round(value * 1000) as bigint)").as("vm")),
+      _._2, _._1, _ => endDayExclusive * 86400000L, Array.emptyByteArray)(
+      (bytes, it, _) => {
+        val sk = heapify(bytes)
+        it.foreach(r => sk.update(r._3.toDouble))
+        sk.toByteArray
+      },
+      (key, bytes) => {
+        val sk = heapify(bytes)
+        Some(QuantileCell(key, sk.getN, Math.round(sk.getQuantile(0.5)),
+          Math.round(sk.getQuantile(0.9)), Math.round(sk.getQuantile(0.99))))
+      })
   }
 
   /** KllQuantileProcessor — the sketch-bytes state family on Spark 4's
@@ -2219,7 +2017,6 @@ object Stateful {
     * kind "net" carries interval deltas, "start" the session count). */
   final case class ConcCell(event_type: String, day: Long, minute: Long,
       kind: String, n: Long)
-  final case class ConcState(n: Long, done: Boolean)
 
   /** Streaming twin of q83's delta pass — live peak-concurrency
     * tracking. Each event explodes row-locally into its interval
@@ -2232,12 +2029,6 @@ object Stateful {
     * identical code to batch, exact integers, bit-for-bit. */
   def concurrencyStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[ConcCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[ConcState] = Encoders.product[ConcState]
-    implicit val outEnc: Encoder[ConcCell] = Encoders.product[ConcCell]
-    implicit val keyEnc: Encoder[(String, Long, Long, String)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.STRING)
     val cells = df.withWatermark("ts", slack)
       .select(col("event_type"), col("ts"),
         expr("unix_micros(ts) div 60000000").as("m0"))
@@ -2254,31 +2045,12 @@ object Stateful {
         col("c.minute") === (col("day") + 1L) * 1440L))
       .select(col("event_type"), col("day"), col("c.minute").as("minute"),
         col("c.kind").as("kind"), col("c.d").as("d"), col("ts"))
-      .as[(String, Long, Long, String, Long, java.sql.Timestamp)](
-        Encoders.product[(String, Long, Long, String, Long,
-          java.sql.Timestamp)])
-    cells.groupByKey(r => (r._1, r._2, r._3, r._4))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long, Long, String),
-            rows: Iterator[(String, Long, Long, String, Long,
-              java.sql.Timestamp)],
-            state: GroupState[ConcState]) =>
-          val st0 = state.getOption.getOrElse(ConcState(0L, done = false))
-          var n = st0.n
-          rows.foreach(n += _._5)
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > endDayExclusive * 86400000L + 1L) {
-            state.update(ConcState(n, done = true))
-            if (n != 0L)
-              Iterator.single(ConcCell(key._1, key._2, key._3, key._4, n))
-            else Iterator.empty
-          } else {
-            state.update(ConcState(n, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(String, Long, Long, String, Long, Timestamp),
+        (String, Long, Long, String), Long, ConcCell](cells, _._6,
+      r => (r._1, r._2, r._3, r._4), _ => endDayExclusive * 86400000L, 0L)(
+      (n, rows, _) => n + rows.map(_._5).sum,
+      (key, n) => Option.when(n != 0L)(
+        ConcCell(key._1, key._2, key._3, key._4, n)))
   }
 
   /** One closed session of the transformWithState sessionize twin. */
@@ -2378,8 +2150,7 @@ object Stateful {
     implicit val evEnc: Encoder[Ev] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
+    val ds = evRows(df, slack).as[Ev]
     ds.groupByKey(_._1)
       .transformWithState(new SessionProcessor, TimeMode.EventTime(),
         OutputMode.Append())
@@ -2484,8 +2255,7 @@ object Stateful {
     implicit val evEnc: Encoder[Ev] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
+    val ds = evRows(df, slack).as[Ev]
     ds.groupByKey(_._4)
       .transformWithState(new TwapProcessor, TimeMode.EventTime(),
         OutputMode.Append())
@@ -2568,8 +2338,7 @@ object Stateful {
     implicit val evEnc: Encoder[Ev] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
+    val ds = evRows(df, slack).as[Ev]
     ds.groupByKey(_._4)
       .transformWithState(new PeakProcessor, TimeMode.EventTime(),
         OutputMode.Append())
@@ -2578,7 +2347,7 @@ object Stateful {
   /** One user's closed time-to-event observation (q143's `durs` row). */
   final case class DurRow(user_id: Long, t: Long, ev: Long)
   final case class SurvState(minSignupUs: Long, minQualUs: Long,
-      pending: Seq[Long], done: Boolean)
+      pending: Seq[Long])
 
   /** Streaming twin of q143's per-user duration pass — the live
     * time-to-event tracker behind the survival curve. State per user:
@@ -2597,65 +2366,43 @@ object Stateful {
     * identical code to batch. */
   def survivalStream(df: DataFrame, d1: Long, slack: String = "2 hours")
       : Dataset[DurRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[SurvState] = Encoders.product[SurvState]
-    implicit val outEnc: Encoder[DurRow] = Encoders.product[DurRow]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
     val DayUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .filter(col("event_type").isin("signup", "purchase"))
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[SurvState]) =>
-          val st0 = state.getOption.getOrElse(
-            SurvState(Long.MaxValue, Long.MaxValue, Nil, false))
-          var sg = st0.minSignupUs; var q = st0.minQualUs
-          var pend = st0.pending
-          rows.foreach { e =>
-            val t = microsOf(e._2)
-            e._4 match {
-              case "signup" if t < sg =>
-                sg = t
-                val (promote, keep) = pend.partition(_ >= sg)
-                if (promote.nonEmpty) q = math.min(q, promote.min)
-                pend = keep
-              case "purchase" =>
-                if (t >= sg) q = math.min(q, t)
-                else pend = pend :+ t
-              case _ => ()
-            }
+    closeOnce[Ev, Long, SurvState, DurRow](evRows(df, slack), _._2, _._1,
+      _ => (d1 + 1L) * 86400000L,
+      SurvState(Long.MaxValue, Long.MaxValue, Nil))(
+      (st, rows, wm) => {
+        var sg = st.minSignupUs; var q = st.minQualUs
+        var pend = st.pending
+        rows.foreach { e =>
+          val t = microsOf(e._2)
+          e._4 match {
+            case "signup" if t < sg =>
+              sg = t
+              val (promote, keep) = pend.partition(_ >= sg)
+              if (promote.nonEmpty) q = math.min(q, promote.min)
+              pend = keep
+            case "purchase" =>
+              if (t >= sg) q = math.min(q, t)
+              else pend = pend :+ t
+            case _ => ()
           }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > d1 * 86400000L + 1L) {
-            state.update(SurvState(sg, q, Nil, true))
-            if (sg == Long.MaxValue) Iterator.empty
-            else {
-              val t =
-                if (q != Long.MaxValue) Math.floorDiv(q - sg, DayUs)
-                else Math.floorDiv((d1 + 1L) * DayUs - sg, DayUs)
-              Iterator.single(DurRow(user,
-                t, if (q != Long.MaxValue) 1L else 0L))
-            }
-          } else {
-            // a future signup arrives with event time >= the watermark,
-            // so pending purchases below it can never qualify — prune
-            val kept = pend.filter(_ >= wm * 1000L)
-            state.update(SurvState(sg, q, kept, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+        }
+        // a future signup arrives with event time >= the watermark,
+        // so pending purchases below it can never qualify — prune
+        SurvState(sg, q, pend.filter(_ >= wm * 1000L))
+      },
+      (user, s) => Option.when(s.minSignupUs != Long.MaxValue) {
+        val ev = s.minQualUs != Long.MaxValue
+        val end = if (ev) s.minQualUs else (d1 + 1L) * DayUs
+        DurRow(user, Math.floorDiv(end - s.minSignupUs, DayUs),
+          if (ev) 1L else 0L)
+      })
   }
 
   /** One (event_type, value-bin) drift cell (q137's `grid` table). */
   final case class PsiCell(event_type: String, bin: Long, train_n: Long,
       serve_n: Long)
-  final case class PsiState(trainN: Long, serveN: Long, done: Boolean)
+  final case class PsiState(trainN: Long, serveN: Long)
 
   /** Streaming twin of q137's histogram pass — the LIVE drift monitor:
     * the model-serving stack wants PSI against the training snapshot
@@ -2673,49 +2420,24 @@ object Stateful {
     * Input: the standard event columns (event_type, ts, value). */
   def psiStream(df: DataFrame, d0: Long, d1: Long,
       slack: String = "2 hours"): Dataset[PsiCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[PsiState] = Encoders.product[PsiState]
-    implicit val outEnc: Encoder[PsiCell] = Encoders.product[PsiCell]
-    implicit val keyEnc: Encoder[(String, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    implicit val rowEnc: Encoder[(String, java.sql.Timestamp, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP,
-        Encoders.scalaLong)
-    val DayUs = 86400000000L
     val mid = (d0 + d1 + 1) / 2
-    val ds = df.withWatermark("ts", slack)
-      .select(col("event_type"), col("ts"),
+    closeOnce[(String, Timestamp, Long), (String, Long), PsiState, PsiCell](
+      df.withWatermark("ts", slack).select(col("event_type"), col("ts"),
         greatest(least(
           expr("cast(round(value * 1000) as bigint) div 50000"),
-          lit(9L)), lit(0L)).as("bin"))
-      .as[(String, java.sql.Timestamp, Long)]
-    ds.groupByKey(r => (r._1, r._3))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long),
-            rows: Iterator[(String, java.sql.Timestamp, Long)],
-            state: GroupState[PsiState]) =>
-          val st0 = state.getOption.getOrElse(PsiState(0L, 0L, false))
-          var tn = st0.trainN; var sn = st0.serveN
-          rows.foreach { r =>
-            if (microsOf(r._2) / DayUs < mid) tn += 1L else sn += 1L
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > d1 * 86400000L + 1L) {
-            state.update(PsiState(tn, sn, true))
-            Iterator.single(PsiCell(key._1, key._2, tn, sn))
-          } else {
-            state.update(PsiState(tn, sn, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+          lit(9L)), lit(0L)).as("bin")),
+      _._2, r => (r._1, r._3), _ => (d1 + 1L) * 86400000L,
+      PsiState(0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st) { (s, r) =>
+        if (microsOf(r._2) / 86400000000L < mid) s.copy(trainN = s.trainN + 1L)
+        else s.copy(serveN = s.serveN + 1L)
+      },
+      (key, s) => Some(PsiCell(key._1, key._2, s.trainN, s.serveN)))
   }
 
   /** One contingency cell's running count (q148's `obs` grid). */
   final case class ContingencyCell(l_returnflag: String,
       l_linestatus: String, o: Long)
-  final case class CellState(n: Long, done: Boolean)
 
   /** Streaming twin of q148's contingency pass — the LIVE
     * categorical-independence monitor: a data-quality gate wants the
@@ -2731,43 +2453,16 @@ object Stateful {
     *
     * Input columns: l_returnflag, l_linestatus, ts (ship timestamp). */
   def chiSquareStream(df: DataFrame, endDay: Long,
-      slack: String = "2 hours"): Dataset[ContingencyCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[CellState] = Encoders.product[CellState]
-    implicit val outEnc: Encoder[ContingencyCell] =
-      Encoders.product[ContingencyCell]
-    implicit val keyEnc: Encoder[(String, String)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    implicit val rowEnc: Encoder[(String, String, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING,
-        Encoders.TIMESTAMP)
-    val ds = df.withWatermark("ts", slack)
-      .select("l_returnflag", "l_linestatus", "ts")
-      .as[(String, String, java.sql.Timestamp)]
-    ds.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, String),
-            rows: Iterator[(String, String, java.sql.Timestamp)],
-            state: GroupState[CellState]) =>
-          val st0 = state.getOption.getOrElse(CellState(0L, false))
-          var n = st0.n
-          rows.foreach(_ => n += 1L)
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(CellState(n, true))
-            Iterator.single(ContingencyCell(key._1, key._2, n))
-          } else {
-            state.update(CellState(n, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[ContingencyCell] =
+    closeOnce[(String, String, Timestamp), (String, String), Long,
+        ContingencyCell](df.withWatermark("ts", slack)
+        .select("l_returnflag", "l_linestatus", "ts"),
+      _._3, r => (r._1, r._2), _ => (endDay + 1L) * 86400000L, 0L)(
+      (n, rows, _) => n + rows.size,
+      (key, n) => Some(ContingencyCell(key._1, key._2, n)))
 
   /** One calendar cell's running revenue (q147/q154's shared grid). */
   final case class DayRevCell(event_type: String, day: Long, c: Long)
-  final case class DayRevState(c: Long, done: Boolean)
 
   /** Streaming builder of the (event_type, day) daily-revenue calendar
     * grid — ONE stream feeding TWO batch readouts: q147's Theil-Sen
@@ -2783,45 +2478,17 @@ object Stateful {
     *
     * Input columns: event_type, ts, cents (exact BIGINT). */
   def dailyRevenueStream(df: DataFrame, endDay: Long,
-      slack: String = "2 hours"): Dataset[DayRevCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[DayRevState] =
-      Encoders.product[DayRevState]
-    implicit val outEnc: Encoder[DayRevCell] =
-      Encoders.product[DayRevCell]
-    implicit val keyEnc: Encoder[(String, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    implicit val rowEnc: Encoder[(String, java.sql.Timestamp, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP,
-        Encoders.scalaLong)
-    val ds = df.withWatermark("ts", slack)
-      .select("event_type", "ts", "cents")
-      .as[(String, java.sql.Timestamp, Long)]
-    ds.groupByKey(r =>
-      (r._1, Math.floorDiv(microsOf(r._2), 86400000000L)))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long),
-            rows: Iterator[(String, java.sql.Timestamp, Long)],
-            state: GroupState[DayRevState]) =>
-          val st0 = state.getOption.getOrElse(DayRevState(0L, false))
-          var c = st0.c
-          rows.foreach(c += _._3)
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(DayRevState(c, true))
-            Iterator.single(DayRevCell(key._1, key._2, c))
-          } else {
-            state.update(DayRevState(c, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[DayRevCell] =
+    closeOnce[(String, Timestamp, Long), (String, Long), Long, DayRevCell](
+      df.withWatermark("ts", slack).select("event_type", "ts", "cents"),
+      _._2, r => (r._1, Math.floorDiv(microsOf(r._2), 86400000000L)),
+      _ => (endDay + 1L) * 86400000L, 0L)(
+      (c, rows, _) => c + rows.map(_._3).sum,
+      (key, c) => Some(DayRevCell(key._1, key._2, c)))
 
   /** One value-histogram bin's running group counts (q149's `h` grid). */
   final case class MwBin(vm: Long, n1: Long, n2: Long)
-  final case class MwState(n1: Long, n2: Long, done: Boolean)
+  final case class MwState(n1: Long, n2: Long)
 
   /** Streaming twin of q149's histogram pass — the LIVE Mann-Whitney
     * rank-sum monitor: an experimentation stack wants the
@@ -2833,56 +2500,24 @@ object Stateful {
     * `endDay`; the tied-rank/U/z/effect projection then runs over the
     * emitted histogram via operators.Statistics.q149Finish — identical
     * code to batch, so the twin is bit-for-bit. Rows whose `grp` is
-    * neither 1 (purchase) nor 0 (click) advance the watermark but
-    * count nowhere: their bins close as (0, 0) cells, which every
-    * q149Finish aggregate treats as exact zeros — sentinels need no
-    * downstream filter.
+    * neither 1 (purchase) nor 0 (click) count nowhere: a bin holding
+    * only such rows closes as a (0, 0) cell, which every q149Finish
+    * aggregate treats as exact zeros; rows past `endDay` (harness
+    * sentinels) form no bin at all (see closeOnce).
     *
     * Input columns: vm (BIGINT milli-value bin), grp (1 purchase /
     * 0 click / anything else ignored), ts. */
   def mannWhitneyStream(df: DataFrame, endDay: Long,
-      slack: String = "2 hours"): Dataset[MwBin] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[MwState] = Encoders.product[MwState]
-    implicit val outEnc: Encoder[MwBin] = Encoders.product[MwBin]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val rowEnc: Encoder[(Long, Int, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt,
-        Encoders.TIMESTAMP)
-    // Post-timeline rows (incl. harness sentinels) advance the
-    // watermark but are kept OUT of the keyed state, so an emitted
-    // bin's state can be reclaimed with state.remove() instead of a
-    // permanent done tombstone — this key domain (the value grid) is
-    // wide enough that tombstones would be a real leak at 100 TB.
-    // Their bins simply never form; q149Finish/q188Finish treat a
-    // missing bin and a (0, 0) bin identically (both contribute exact
-    // zeros to every aggregate).
-    val ds = df.withWatermark("ts", slack)
-      .filter(expr(
-        s"unix_micros(ts) < ${(endDay + 1L) * 86400000000L}L"))
-      .select("vm", "grp", "ts")
-      .as[(Long, Int, java.sql.Timestamp)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, Int, java.sql.Timestamp)],
-            state: GroupState[MwState]) =>
-          val st0 = state.getOption.getOrElse(MwState(0L, 0L, false))
-          var n1 = st0.n1; var n2 = st0.n2
-          rows.foreach { r =>
-            if (r._2 == 1) n1 += 1L else if (r._2 == 0) n2 += 1L
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (wm > (endDay + 1L) * 86400000L + 1L) {
-            state.remove() // emit-once then reclaim (see pre-filter)
-            Iterator.single(MwBin(key, n1, n2))
-          } else {
-            state.update(MwState(n1, n2, done = false))
-            state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[MwBin] =
+    closeOnce[(Long, Int, Timestamp), Long, MwState, MwBin](
+      df.withWatermark("ts", slack).select("vm", "grp", "ts"),
+      _._3, _._1, _ => (endDay + 1L) * 86400000L, MwState(0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st) { (s, r) =>
+        if (r._2 == 1) s.copy(n1 = s.n1 + 1L)
+        else if (r._2 == 0) s.copy(n2 = s.n2 + 1L)
+        else s
+      },
+      (key, s) => Some(MwBin(key, s.n1, s.n2)))
 
   /** Streaming twin of q188's histogram pass — the LIVE two-sample
     * Kolmogorov–Smirnov monitor. The KS supremum folds over EXACTLY
@@ -2905,7 +2540,7 @@ object Stateful {
   /** One closed order's SLA observation (q131's `j` table). */
   final case class SlaGap(o_orderpriority: String, gap_days: Long)
   final case class SlaState(openUs: Long, priority: String,
-      lastShipUs: Long, done: Boolean)
+      lastShipUs: Long)
 
   /** Streaming twin of q131's per-order pass — live SLA attainment.
     * Order-open events (kind 0, carrying the priority) and line-ship
@@ -2923,51 +2558,26 @@ object Stateful {
     *
     * Input columns: o_orderkey, ts, kind (0 open / 1 ship), priority. */
   def slaStream(df: DataFrame, endDay: Long, slack: String = "2 hours")
-      : Dataset[SlaGap] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[SlaState] = Encoders.product[SlaState]
-    implicit val outEnc: Encoder[SlaGap] = Encoders.product[SlaGap]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val rowEnc: Encoder[(Long, java.sql.Timestamp, Int, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaInt, Encoders.STRING)
-    val DayUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("o_orderkey", "ts", "kind", "priority")
-      .as[(Long, java.sql.Timestamp, Int, String)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[(Long, java.sql.Timestamp, Int, String)],
-            state: GroupState[SlaState]) =>
-          val st0 = state.getOption.getOrElse(
-            SlaState(Long.MinValue, "", Long.MinValue, false))
-          var open = st0.openUs; var pri = st0.priority
-          var last = st0.lastShipUs
-          rows.foreach { r =>
-            val t = microsOf(r._2)
-            if (r._3 == 0) { open = t; pri = r._4 }
-            else if (t > last) last = t
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(SlaState(open, pri, last, true))
-            if (open != Long.MinValue && last != Long.MinValue)
-              Iterator.single(SlaGap(pri, (last - open) / DayUs))
-            else Iterator.empty
-          } else {
-            state.update(SlaState(open, pri, last, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      : Dataset[SlaGap] =
+    closeOnce[(Long, Timestamp, Int, String), Long, SlaState, SlaGap](
+      df.withWatermark("ts", slack)
+        .select("o_orderkey", "ts", "kind", "priority"),
+      _._2, _._1, _ => (endDay + 1L) * 86400000L,
+      SlaState(Long.MinValue, "", Long.MinValue))(
+      (st, rows, _) => rows.foldLeft(st) { (s, r) =>
+        val t = microsOf(r._2)
+        if (r._3 == 0) s.copy(openUs = t, priority = r._4)
+        else s.copy(lastShipUs = math.max(s.lastShipUs, t))
+      },
+      (_, s) => Option.when(s.openUs != Long.MinValue &&
+          s.lastShipUs != Long.MinValue)(
+        SlaGap(s.priority, (s.lastShipUs - s.openUs) / 86400000000L)))
 
   /** One brand's running return counters (q136's `brands` grid). */
   final case class BrandCounts(p_brand: String, n_lines: Long,
       n_returned: Long, cents: Long, ret_cents: Long)
   final case class BrandState(n: Long, ret: Long, cents: Long,
-      retCents: Long, done: Boolean)
+      retCents: Long)
 
   /** Streaming twin of q136's per-brand pass — live return-rate QC.
     * State per brand is four exact BIGINT counters (line count,
@@ -2982,48 +2592,24 @@ object Stateful {
     *
     * Input columns: p_brand, ts, ret (0/1), cc (exact cents). */
   def returnRateStream(df: DataFrame, endDay: Long,
-      slack: String = "2 hours"): Dataset[BrandCounts] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[BrandState] = Encoders.product[BrandState]
-    implicit val outEnc: Encoder[BrandCounts] = Encoders.product[BrandCounts]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val rowEnc: Encoder[(String, java.sql.Timestamp, Long, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.scalaLong)
-    val ds = df.withWatermark("ts", slack)
-      .select("p_brand", "ts", "ret", "cc")
-      .as[(String, java.sql.Timestamp, Long, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (brand: String,
-            rows: Iterator[(String, java.sql.Timestamp, Long, Long)],
-            state: GroupState[BrandState]) =>
-          val st0 = state.getOption.getOrElse(
-            BrandState(0L, 0L, 0L, 0L, false))
-          var n = st0.n; var ret = st0.ret
-          var cents = st0.cents; var retCents = st0.retCents
-          rows.foreach { r =>
-            n += 1L; cents += r._4
-            if (r._3 == 1L) { ret += 1L; retCents += r._4 }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(BrandState(n, ret, cents, retCents, true))
-            Iterator.single(BrandCounts(brand, n, ret, cents, retCents))
-          } else {
-            state.update(BrandState(n, ret, cents, retCents, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[BrandCounts] =
+    closeOnce[(String, Timestamp, Long, Long), String, BrandState,
+        BrandCounts](df.withWatermark("ts", slack)
+        .select("p_brand", "ts", "ret", "cc"),
+      _._2, _._1, _ => (endDay + 1L) * 86400000L,
+      BrandState(0L, 0L, 0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st) { (s, r) =>
+        if (r._3 == 1L) BrandState(s.n + 1L, s.ret + 1L, s.cents + r._4,
+          s.retCents + r._4)
+        else s.copy(n = s.n + 1L, cents = s.cents + r._4)
+      },
+      (brand, s) => Some(BrandCounts(brand, s.n, s.ret, s.cents,
+        s.retCents)))
 
   /** Per-customer running RFM state (q102's `per` table). */
   final case class RfmRow(o_custkey: Long, rec_days: Long, freq: Long,
       mon_cents: Long)
-  final case class RfmState(lastDay: Long, freq: Long, cents: Long,
-      done: Boolean)
+  final case class RfmState(lastDay: Long, freq: Long, cents: Long)
 
   /** Streaming twin of q102's per-customer pass: recency/frequency/
     * monetary folded as O(1) state per customer — max order day, an
@@ -3037,50 +2623,20 @@ object Stateful {
     *
     * Input columns: o_custkey, ts (order timestamp), cents. */
   def rfmStream(df: DataFrame, endDay: Long, slack: String = "2 hours")
-      : Dataset[RfmRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[RfmState] = Encoders.product[RfmState]
-    implicit val outEnc: Encoder[RfmRow] = Encoders.product[RfmRow]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val rowEnc: Encoder[(Long, java.sql.Timestamp, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong)
-    val DayUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("o_custkey", "ts", "cents")
-      .as[(Long, java.sql.Timestamp, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (cust: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-            state: GroupState[RfmState]) =>
-          val st0 = state.getOption.getOrElse(RfmState(Long.MinValue, 0L, 0L,
-            false))
-          var lastDay = st0.lastDay; var freq = st0.freq
-          var cents = st0.cents
-          rows.foreach { r =>
-            val day = microsOf(r._2) / DayUs
-            if (day > lastDay) lastDay = day
-            freq += 1L; cents += r._3
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(RfmState(lastDay, freq, cents, true))
-            Iterator.single(RfmRow(cust, endDay - lastDay, freq, cents))
-          } else {
-            state.update(RfmState(lastDay, freq, cents, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      : Dataset[RfmRow] =
+    closeOnce[(Long, Timestamp, Long), Long, RfmState, RfmRow](
+      df.withWatermark("ts", slack).select("o_custkey", "ts", "cents"),
+      _._2, _._1, _ => (endDay + 1L) * 86400000L,
+      RfmState(Long.MinValue, 0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st)((s, r) => RfmState(
+        math.max(s.lastDay, microsOf(r._2) / 86400000000L), s.freq + 1L,
+        s.cents + r._3)),
+      (cust, s) => Some(RfmRow(cust, endDay - s.lastDay, s.freq, s.cents)))
 
   /** One (customer, order-month) accumulator cell (q103's `custMonth`
     * table): cm = the customer's cohort month, om = the order month. */
   final case class CustMonth(o_custkey: Long, cm: Long, om: Long, n: Long,
       mcents: Long)
-  final case class CohortState(months: Seq[(Long, Long, Long)],
-      done: Boolean)
 
   /** Streaming twin of q103's per-customer pass: each customer's order
     * history folds into a month → (order count, exact BIGINT cents)
@@ -3095,53 +2651,33 @@ object Stateful {
     *
     * Input columns: o_custkey, ts (order timestamp), cents. */
   def cohortStream(df: DataFrame, endDay: Long, slack: String = "2 hours")
-      : Dataset[CustMonth] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[CohortState] = Encoders.product[CohortState]
-    implicit val outEnc: Encoder[CustMonth] = Encoders.product[CustMonth]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val rowEnc: Encoder[(Long, java.sql.Timestamp, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong)
-    val ds = df.withWatermark("ts", slack)
-      .select("o_custkey", "ts", "cents")
-      .as[(Long, java.sql.Timestamp, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (cust: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-            state: GroupState[CohortState]) =>
-          val st0 = state.getOption.getOrElse(CohortState(Nil, false))
-          val acc = scala.collection.mutable.LinkedHashMap
-            .from(st0.months.map(m => m._1 -> (m._2, m._3)))
-          rows.foreach { r =>
-            val c = java.util.Calendar.getInstance(
-              java.util.TimeZone.getTimeZone("UTC"))
-            c.setTimeInMillis(r._2.getTime)
-            val om = (c.get(java.util.Calendar.YEAR) * 12
-              + c.get(java.util.Calendar.MONTH) + 1).toLong
-            val (n0, s0) = acc.getOrElse(om, (0L, 0L))
-            acc(om) = (n0 + 1L, s0 + r._3)
-          }
-          val months = acc.iterator.map(kv => (kv._1, kv._2._1, kv._2._2))
-            .toSeq
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(CohortState(months, true))
-            val cm = months.iterator.map(_._1).min
-            months.iterator
-              .map(m => CustMonth(cust, cm, m._1, m._2, m._3))
-          } else {
-            state.update(CohortState(months, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      : Dataset[CustMonth] =
+    closeOnce[(Long, Timestamp, Long), Long, Seq[(Long, Long, Long)],
+        CustMonth](df.withWatermark("ts", slack)
+        .select("o_custkey", "ts", "cents"),
+      _._2, _._1, _ => (endDay + 1L) * 86400000L, Nil)(
+      (months, rows, _) => {
+        val acc = scala.collection.mutable.LinkedHashMap
+          .from(months.map(m => m._1 -> (m._2, m._3)))
+        rows.foreach { r =>
+          val c = java.util.Calendar.getInstance(
+            java.util.TimeZone.getTimeZone("UTC"))
+          c.setTimeInMillis(r._2.getTime)
+          val om = (c.get(java.util.Calendar.YEAR) * 12
+            + c.get(java.util.Calendar.MONTH) + 1).toLong
+          val (n0, s0) = acc.getOrElse(om, (0L, 0L))
+          acc(om) = (n0 + 1L, s0 + r._3)
+        }
+        acc.iterator.map(kv => (kv._1, kv._2._1, kv._2._2)).toSeq
+      },
+      (cust, months) => {
+        val cm = months.iterator.map(_._1).min
+        months.map(m => CustMonth(cust, cm, m._1, m._2, m._3))
+      })
 
   /** Per-user event counts in each timeline half (q85's `wide` table). */
   final case class HalfCounts(user_id: Long, c1: Long, c2: Long)
-  final case class HalfState(c1: Long, c2: Long, done: Boolean)
+  final case class HalfState(c1: Long, c2: Long)
 
   /** Streaming twin of q85's volume-proportional half: per-user event
     * counts before/after `splitDay`, emitted once when the watermark
@@ -3152,39 +2688,18 @@ object Stateful {
     * The decile cross-tab then runs over the emitted user-sized snapshot
     * via Behavioral.q85DecileCrossTab — identical code to batch. */
   def halfCountsStream(df: DataFrame, splitDay: Long, endDay: Long,
-      slack: String = "2 hours"): Dataset[HalfCounts] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[HalfState] = Encoders.product[HalfState]
-    implicit val outEnc: Encoder[HalfCounts] = Encoders.product[HalfCounts]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-    val DayUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[HalfState]) =>
-          val st0 = state.getOption.getOrElse(HalfState(0L, 0L, false))
-          var c1 = st0.c1; var c2 = st0.c2
-          rows.foreach { e =>
-            if (microsOf(e._2) / DayUs < splitDay) c1 += 1L else c2 += 1L
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(HalfState(c1, c2, true))
-            Iterator.single(HalfCounts(user, c1, c2))
-          } else {
-            state.update(HalfState(c1, c2, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[HalfCounts] =
+    closeOnce[Ev, Long, HalfState, HalfCounts](evRows(df, slack), _._2,
+      _._1, _ => (endDay + 1L) * 86400000L, HalfState(0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st) { (s, e) =>
+        if (microsOf(e._2) / 86400000000L < splitDay) s.copy(c1 = s.c1 + 1L)
+        else s.copy(c2 = s.c2 + 1L)
+      },
+      (user, s) => Some(HalfCounts(user, s.c1, s.c2)))
 
   /** One closed hour of the live SLO monitor (q128's grid cell). */
   final case class HourCounts(hour: Long, errs: Long, total: Long)
-  final case class HourState(errs: Long, total: Long, done: Boolean)
+  final case class HourState(errs: Long, total: Long)
 
   /** Streaming twin of q128's hourly grid: the live burn-rate monitor.
     * State per hour is TWO commutative BIGINT counters; each hour
@@ -3195,46 +2710,19 @@ object Stateful {
     * over the closed hours via Security.q128Finish — identical code to
     * batch. */
   def burnRateStream(df: DataFrame, slack: String = "2 hours")
-      : Dataset[HourCounts] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[HourState] = Encoders.product[HourState]
-    implicit val outEnc: Encoder[HourCounts] =
-      Encoders.product[HourCounts]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-    val HourUs = 3600000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_id", "event_type", "value").as[Ev]
-    ds.groupByKey(e => microsOf(e._2) / HourUs)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hour: Long, rows: Iterator[Ev], state: GroupState[HourState]) =>
-          val st0 = state.getOption.getOrElse(HourState(0L, 0L, false))
-          var errs = st0.errs; var total = st0.total
-          rows.foreach { e =>
-            total += 1L
-            if (e._4 == "error") errs += 1L
-          }
-          val hourEndMs = (hour + 1L) * 3600000L
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > hourEndMs) {
-            state.update(HourState(errs, total, true))
-            Iterator.single(HourCounts(hour, errs, total))
-          } else {
-            state.update(HourState(errs, total, st0.done))
-            if (!st0.done)
-              state.setTimeoutTimestamp(math.max(wm + 1L, hourEndMs + 1L))
-            Iterator.empty
-          }
-      }
-  }
+      : Dataset[HourCounts] =
+    closeOnce[Ev, Long, HourState, HourCounts](evRows(df, slack), _._2,
+      e => microsOf(e._2) / 3600000000L, hour => (hour + 1L) * 3600000L,
+      HourState(0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st)((s, e) => HourState(
+        s.errs + (if (e._4 == "error") 1L else 0L), s.total + 1L)),
+      (hour, s) => Some(HourCounts(hour, s.errs, s.total)))
 
   /** One brand's period totals for the live revenue bridge (q118's
     * pivot row): exact BIGINT quantity/cents per compared year. */
   final case class BridgeRow(p_brand: String, q1: Long, c1: Long,
       q2: Long, c2: Long)
-  final case class BridgeState(q1: Long, c1: Long, q2: Long, c2: Long,
-      done: Boolean)
+  final case class BridgeState(q1: Long, c1: Long, q2: Long, c2: Long)
 
   /** Streaming twin of q118: the live price-volume bridge. Input rows
     * are brand-enriched line items (the dimension lookup happens at
@@ -3248,53 +2736,27 @@ object Stateful {
     *
     * Input columns: p_brand, ts (order timestamp), qc, cc. */
   def bridgeStream(df: DataFrame, y1: Int, y2: Int, endDay: Long,
-      slack: String = "2 hours"): Dataset[BridgeRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[BridgeState] = Encoders.product[BridgeState]
-    implicit val outEnc: Encoder[BridgeRow] = Encoders.product[BridgeRow]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val rowEnc
-        : Encoder[(String, java.sql.Timestamp, Long, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.scalaLong)
-    val ds = df.withWatermark("ts", slack)
-      .select("p_brand", "ts", "qc", "cc")
-      .as[(String, java.sql.Timestamp, Long, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (brand: String,
-            rows: Iterator[(String, java.sql.Timestamp, Long, Long)],
-            state: GroupState[BridgeState]) =>
-          val st0 = state.getOption.getOrElse(
-            BridgeState(0L, 0L, 0L, 0L, false))
-          var q1 = st0.q1; var c1 = st0.c1
-          var q2 = st0.q2; var c2 = st0.c2
-          rows.foreach { r =>
-            val yr = java.time.Instant.ofEpochSecond(microsOf(r._2) / 1000000L)
-              .atZone(java.time.ZoneOffset.UTC).getYear
-            if (yr == y1) { q1 += r._3; c1 += r._4 }
-            else if (yr == y2) { q2 += r._3; c2 += r._4 }
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(BridgeState(q1, c1, q2, c2, true))
-            Iterator.single(BridgeRow(brand, q1, c1, q2, c2))
-          } else {
-            state.update(BridgeState(q1, c1, q2, c2, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
-  }
+      slack: String = "2 hours"): Dataset[BridgeRow] =
+    closeOnce[(String, Timestamp, Long, Long), String, BridgeState,
+        BridgeRow](df.withWatermark("ts", slack)
+        .select("p_brand", "ts", "qc", "cc"),
+      _._2, _._1, _ => (endDay + 1L) * 86400000L,
+      BridgeState(0L, 0L, 0L, 0L))(
+      (st, rows, _) => rows.foldLeft(st) { (s, r) =>
+        val yr = java.time.Instant.ofEpochSecond(microsOf(r._2) / 1000000L)
+          .atZone(java.time.ZoneOffset.UTC).getYear
+        if (yr == y1) s.copy(q1 = s.q1 + r._3, c1 = s.c1 + r._4)
+        else if (yr == y2) s.copy(q2 = s.q2 + r._3, c2 = s.c2 + r._4)
+        else s
+      },
+      (brand, s) => Some(BridgeRow(brand, s.q1, s.c1, s.q2, s.c2)))
 
   /** One order's lifecycle for the live backlog (q122's per-order
     * row): open day + the day AFTER its last observed ship (None if
     * nothing shipped). */
   final case class OrderLife(o_orderkey: Long, open_day: Long,
       close_day: Option[Long])
-  final case class OrderLifeState(openUs: Long, maxShipUs: Long,
-      done: Boolean)
+  final case class OrderLifeState(openUs: Long, maxShipUs: Long)
 
   /** Streaming twin of q122: the live order-backlog tracker. The feed
     * interleaves order-open rows and line-ship rows keyed by order;
@@ -3310,49 +2772,25 @@ object Stateful {
     * Input columns: kind ('open' | 'ship'), o_orderkey, ts. */
   def backlogStream(df: DataFrame, endDay: Long,
       slack: String = "2 hours"): Dataset[OrderLife] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[OrderLifeState] =
-      Encoders.product[OrderLifeState]
-    implicit val outEnc: Encoder[OrderLife] = Encoders.product[OrderLife]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val rowEnc: Encoder[(String, Long, java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        Encoders.TIMESTAMP)
     val DayUs = 86400000000L
-    val ds = df.withWatermark("ts", slack)
-      .select("kind", "o_orderkey", "ts")
-      .as[(String, Long, java.sql.Timestamp)]
-    ds.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (okey: Long, rows: Iterator[(String, Long, java.sql.Timestamp)],
-            state: GroupState[OrderLifeState]) =>
-          val st0 = state.getOption.getOrElse(
-            OrderLifeState(Long.MinValue, Long.MinValue, false))
-          var openUs = st0.openUs; var maxShipUs = st0.maxShipUs
-          rows.foreach { r =>
-            val us = microsOf(r._3)
-            if (r._1 == "open") openUs = us
-            else if (r._1 == "ship" && us > maxShipUs) maxShipUs = us
-          }
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > (endDay + 1L) * 86400000L + 1L) {
-            state.update(OrderLifeState(openUs, maxShipUs, true))
-            Iterator.single(OrderLife(okey, openUs / DayUs,
-              if (maxShipUs == Long.MinValue) None
-              else Some(maxShipUs / DayUs + 1L)))
-          } else {
-            state.update(OrderLifeState(openUs, maxShipUs, st0.done))
-            if (!st0.done) state.setTimeoutTimestamp(wm + 1L)
-            Iterator.empty
-          }
-      }
+    closeOnce[(String, Long, Timestamp), Long, OrderLifeState, OrderLife](
+      df.withWatermark("ts", slack).select("kind", "o_orderkey", "ts"),
+      _._3, _._2, _ => (endDay + 1L) * 86400000L,
+      OrderLifeState(Long.MinValue, Long.MinValue))(
+      (st, rows, _) => rows.foldLeft(st) { (s, r) =>
+        val us = microsOf(r._3)
+        if (r._1 == "open") s.copy(openUs = us)
+        else if (r._1 == "ship") s.copy(maxShipUs = math.max(s.maxShipUs, us))
+        else s
+      },
+      (okey, s) => Some(OrderLife(okey, s.openUs / DayUs,
+        if (s.maxShipUs == Long.MinValue) None
+        else Some(s.maxShipUs / DayUs + 1L))))
   }
 
   /** One closed (user, day) basket as an event-type bitmask (q116's
     * distinct basket membership, packed). */
   final case class BasketRow(user_id: Long, day: Long, mask: Long)
-  final case class BasketMaskState(mask: Long, done: Boolean)
 
   /** Streaming twin of q116's basket construction: per-(user, day)
     * state is ONE Long — a bitmask over the event-type taxonomy
@@ -3367,45 +2805,13 @@ object Stateful {
     * code to batch. */
   def basketStream(df: DataFrame, typeIndex: Map[String, Int],
       slack: String = "2 hours"): Dataset[BasketRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[BasketMaskState] =
-      Encoders.product[BasketMaskState]
-    implicit val outEnc: Encoder[BasketRow] = Encoders.product[BasketRow]
-    implicit val keyEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val rowEnc: Encoder[(Long, java.sql.Timestamp, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.STRING)
-    val DayUs = 86400000000L
     val idx = df.sparkSession.sparkContext.broadcast(typeIndex)
-    val ds = df.withWatermark("ts", slack)
-      .select("user_id", "ts", "event_type")
-      .as[(Long, java.sql.Timestamp, String)]
-    ds.groupByKey(r => (r._1, microsOf(r._2) / DayUs))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, Long),
-            rows: Iterator[(Long, java.sql.Timestamp, String)],
-            state: GroupState[BasketMaskState]) =>
-          val st0 = state.getOption.getOrElse(BasketMaskState(0L, false))
-          var mask = st0.mask
-          rows.foreach { r =>
-            idx.value.get(r._3).foreach(i => mask |= (1L << i))
-          }
-          // close at the day's EXCLUSIVE end: by the watermark contract
-          // no further row with ts inside this day can arrive once the
-          // watermark passes it
-          val dayEndMs = (key._2 + 1L) * 86400000L
-          val wm = state.getCurrentWatermarkMs()
-          if (!st0.done && wm > dayEndMs) {
-            state.update(BasketMaskState(mask, true))
-            Iterator.single(BasketRow(key._1, key._2, mask))
-          } else {
-            state.update(BasketMaskState(mask, st0.done))
-            if (!st0.done)
-              state.setTimeoutTimestamp(math.max(wm + 1L, dayEndMs + 1L))
-            Iterator.empty
-          }
-      }
+    closeOnce[(Long, Timestamp, String), (Long, Long), Long, BasketRow](
+      df.withWatermark("ts", slack).select("user_id", "ts", "event_type"),
+      _._2, r => (r._1, microsOf(r._2) / 86400000000L),
+      key => (key._2 + 1L) * 86400000L, 0L)(
+      (mask, rows, _) => rows.foldLeft(mask)((m, r) =>
+        idx.value.get(r._3).fold(m)(i => m | (1L << i))),
+      (key, mask) => Some(BasketRow(key._1, key._2, mask)))
   }
 }

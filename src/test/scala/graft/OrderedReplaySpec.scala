@@ -2344,6 +2344,8 @@ class OrderedReplaySpec extends SparkSpec {
     info(s"grid state peak=$gridPeak final=$gridFinal bound=${gridCells + 1}")
     assert(gridPeak <= gridCells + 1L,
       s"grid state rows $gridPeak exceed the ${gridCells + 1} calendar cells")
+    assert(gridFinal == 0L,
+      s"closed grid state must be reclaimed, found $gridFinal rows")
 
     // family: reorder buffer (scd2StreamOoo) — state rows are the KEY
     // set (one buffered machine per user + the sentinel user), bounded
