@@ -24,7 +24,7 @@ package graft
   * class (fixed k·(init+rounds) passes over the corpus) while
   * artifact-warm stays ~flat (a tiny-table read). Point the second slot
   * at the 8× probe corpus (scripts/make_scale_probe.py) to extend
-  * docs/SCALE_PROBE.md's `_fit_ivf` row to the whole lifecycle.
+  * docs/SCALE_PROBE.md's `_fit_ann` row to the whole lifecycle.
   *
   * Output: one JSON line + artifact_probe.json (root recorded, so a
   * capture can be identified as cold-root or reused-root; one entry per

@@ -4,10 +4,12 @@ package graft
   * the single-operator feedback loop used while iterating on a plan, with
   * the same session config and noop-sink materialization as Bench.
   *
-  * The pseudo-name `_fit_ivf` times the ingest-time IVF k-means fit
-  * ITSELF (IntKMeans.fit, bypassing the artifact/memo caches): normal
-  * query timings exclude `prepare`, so the fit's own corpus-linear cost
-  * claim needs this dedicated row (docs/SCALE_PROBE.md).
+  * The pseudo-name `_fit_ann` times the ingest-time ANN k-means fit
+  * ITSELF (Similarity.annFit: the IVF quantizer and the 8 PQ codebooks
+  * in one lockstep IntKMeans.fit, bypassing the artifact/memo caches):
+  * normal query timings exclude `prepare`, so the fit's own
+  * corpus-linear cost claim needs this dedicated row
+  * (docs/SCALE_PROBE.md).
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -25,21 +27,15 @@ object BenchOne {
           .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
           .write.format("noop").mode("overwrite").save()
         println(f"[benchone] _calib ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      case "_fit_ivf" =>
-        // the s03/s13/s15 coarse-quantizer fit (Gonzalez init = k-1
-        // bounded argmaxes + exact-integer Lloyd rounds over the full
-        // corpus) — timed fresh, not through the persisted artifact.
-        // The configuration is read FROM Similarity's constants so the
-        // probe always times the shipped fit, not a stale copy.
-        import org.apache.spark.sql.functions._
-        import graft.operators.Similarity.{Dim, LloydRounds, NList}
+      case "_fit_ann" =>
+        // the s03/s04/s13/s15 ANN fit (Gonzalez init = k-1 bounded
+        // argmaxes + exact-integer Lloyd rounds over the full corpus) —
+        // timed fresh, not through the persisted artifacts, by calling
+        // the helper annFits publishes from, so the probe always times
+        // the shipped fit, not a stale copy
         val t0 = System.nanoTime()
-        val sub = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), lit(0).as("m"),
-            col("embedding").cast("array<double>").as("e"))
-        graft.operators.IntKMeans.fit(sub, nSub = 1, k = NList,
-          rounds = LloydRounds, dim = Dim)
-        println(f"[benchone] _fit_ivf ${(System.nanoTime() - t0) / 1e9}%.2fs")
+        graft.operators.Similarity.annFit(spark, sfDir)
+        println(f"[benchone] _fit_ann ${(System.nanoTime() - t0) / 1e9}%.2fs")
       case name =>
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)

@@ -45,11 +45,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one TTL, or immediately after an explicit [[refresh]].
   *
   * Publication is write-to-unique-temp + rename-into-place, hardened
-  * (round 13) against the cross-JVM failure shapes the per-JVM lock
-  * cannot cover: (1) a table dir WITHOUT _SUCCESS is treated as
-  * corrupt — deleted and re-published, not read — but only once it is
-  * STALE (no write activity for `graft.artifacts.repair.grace.ms`,
-  * default 60 s; round 14): on the documented s3a production target a
+  * (round 13) against the cross-JVM failure shapes the per-JVM,
+  * per-path lock cannot cover: (1) a table dir WITHOUT _SUCCESS is
+  * treated as corrupt — deleted and re-published, not read — but only
+  * once it is STALE (no write activity for
+  * `graft.artifacts.repair.grace.ms`, default 60 s; round 14): on the
+  * documented s3a production target a
   * non-atomic rename makes a concurrent producer's mid-publish table
   * indistinguishable from a crashed one by shape alone, so the repair
   * path waits out a FRESH partial (its newest mtime keeps advancing
@@ -69,7 +70,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * window — closing it entirely would need an external lock service,
   * which the reference (a single-process daemon) does not have either. */
 object IngestArtifacts {
-  private val lock = new Object
+  // one lock per artifact path: a JVM publishes each table once, while
+  // unrelated tables (the ANN fit and the d03 labels in
+  // SparkEntry.prepare) compute concurrently; one entry per table a JVM
+  // ever touches (a handful), never a scale concern
+  private val locks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]
 
   /** One listing per corpus dir per TTL window; 0 disables the memo. */
   private def fpTtlMs: Long =
@@ -101,7 +107,7 @@ object IngestArtifacts {
     * when its corpus dir's fingerprint changes. */
   def registerMemo(
       m: scala.collection.concurrent.Map[(SparkSession, String, String), _])
-      : Unit = lock.synchronized { memoRegistry = m :: memoRegistry }
+      : Unit = synchronized { memoRegistry = m :: memoRegistry }
 
   /** Drop the memoized fingerprint for `d` so the next access re-lists
     * immediately — the explicit hook for "I just rewrote this corpus,
@@ -195,7 +201,7 @@ object IngestArtifacts {
     val p = new Path(path(d, table, conf))
     val fs = p.getFileSystem(conf)
     def published() = fs.exists(new Path(p, "_SUCCESS"))
-    lock.synchronized {
+    locks.computeIfAbsent(p.toString, _ => new Object).synchronized {
       val rnd = new scala.util.Random(p.hashCode)
       var attempts = 0
       while (!published() && attempts < 3) {

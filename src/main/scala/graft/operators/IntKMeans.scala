@@ -37,9 +37,11 @@ import graft.expressions.VectorExpressions
   * each Lloyd round is one map (codegen'd integer argmin over the
   * broadcast codebook) + a partial-aggregating groupBy that collects only
   * k·dim centroid sums — the corpus itself never moves to the driver.
-  * All subspaces of a PQ fit ride the SAME jobs (the subspace id is just
-  * a grouping key), so fitting 8 codebooks costs the same number of
-  * passes as fitting one. */
+  * All subspaces ride the SAME jobs (the subspace id is just a grouping
+  * key, and each subspace carries its own dim), so the shipped ingest
+  * fit is ONE call: the IVF quantizer as subspace 0 (64 dims) beside the
+  * 8 PQ subspaces (8 dims each) — nine codebooks for the passes of one
+  * (Similarity.annFit). */
 object IntKMeans {
 
   /** Micro-units per 1.0 — quantization is floor(x·Scale + 0.5), computed
@@ -61,9 +63,9 @@ object IntKMeans {
     * order by mind desc, vec_id)` filtered to `rn === 1` — NOT as a sort.
     * The pattern is load-bearing at scale: Catalyst rewrites it into a
     * bounded heap — per-partition WindowGroupLimit (the q08/q52 idiom)
-    * when m is a data-born column (the PQ fit), or a global
-    * TakeOrderedAndProject(1) when the single-subspace caller passes a
-    * constant m that folds out of the partition spec (the IVF fit) — so
+    * when m is a data-born column (the shipped IVF+PQ fit), or a global
+    * TakeOrderedAndProject(1) when a single-subspace caller passes a
+    * constant m that folds out of the partition spec — so
     * each of the k-1 init rounds costs one corpus-linear pass + an
     * O(1)-state heap per task, never a full per-subspace sort inside
     * every ingest fit. PlanSpec pins both shapes on this exact stage. */
@@ -78,12 +80,16 @@ object IntKMeans {
       .select("m", "vec_id", "ei")
   }
 
-  /** Fit `nSub` independent k-means (one per subspace) in lockstep over a
-    * frame of (vec_id: long, m: int, e: array<double> of `dim`).
-    * Returns centroids in micro-units, indexed [m][cell][dim] — flattened
-    * row m·k + cell matches the PqEncodeInt/PqLutInt codebook layout. */
-  def fit(sub: DataFrame, nSub: Int, k: Int, rounds: Int, dim: Int)
+  /** Fit one independent k-means per subspace in lockstep over a frame
+    * of (vec_id: long, m: int, e: array<double>), where subspace m's
+    * vectors have `dims(m)` entries (m ranges over dims.indices).
+    * Subspaces never interact, so each result equals that subspace fitted
+    * alone. Returns centroids in micro-units, indexed [m][cell][dim] —
+    * for equal dims, flattened row m·k + cell matches the
+    * PqEncodeInt/PqLutInt codebook layout. */
+  def fit(sub: DataFrame, k: Int, rounds: Int, dims: Seq[Int])
       : IndexedSeq[IndexedSeq[Array[Long]]] = {
+    val nSub = dims.length
     val q = sub.select(col("vec_id"), col("m"), col("e"),
         quantize(col("e")).as("ei"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -109,7 +115,7 @@ object IntKMeans {
       def mindCol: Column = {
         val branches = (0 until nSub).map { m =>
           (m, array_min(VectorExpressions.pqLutInt(col("e"),
-            cents(m).toSeq.map(_.toSeq), 1, cents(m).length, dim, Scale)))
+            cents(m).toSeq.map(_.toSeq), 1, cents(m).length, dims(m), Scale)))
         }
         branches.tail.foldLeft(
           when(col("m") === branches.head._1, branches.head._2)) {
@@ -131,7 +137,7 @@ object IntKMeans {
       def assignCol: Column = {
         val branches = (0 until nSub).map { m =>
           (m, element_at(VectorExpressions.pqEncodeInt(col("e"),
-            cents(m).toSeq.map(_.toSeq), 1, k, dim, Scale), 1))
+            cents(m).toSeq.map(_.toSeq), 1, k, dims(m), Scale), 1))
         }
         branches.tail.foldLeft(
           when(col("m") === branches.head._1, branches.head._2)) {
@@ -148,7 +154,7 @@ object IntKMeans {
           cents.map(_.map(_.clone()))
         sums.groupBy(r => (r.getInt(0), r.getInt(1))).foreach {
           case ((m, cell), rs) =>
-            val c = new Array[Long](dim)
+            val c = new Array[Long](dims(m))
             rs.foreach { r =>
               c(r.getInt(2)) = floorDiv2(r.getLong(3), r.getLong(4))
             }

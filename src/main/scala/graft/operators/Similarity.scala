@@ -141,68 +141,85 @@ object Similarity {
             |FROM ranked WHERE rank <= $K ORDER BY qid, rank""".stripMargin))
 
   // ------------------------------------------------------ IVF ANN
-  // private[graft]: BenchOne's `_fit_ivf` probe times the shipped fit
-  // configuration by referencing these directly — hardcoded copies there
-  // silently diverged when a constant moved (round-13 ADVICE)
+  // private[graft]: BenchOne's `_fit_ann` probe times the shipped fit
+  // through annFit itself — hardcoded copies there silently diverged
+  // when a constant moved (round-13 ADVICE)
   private[graft] val NList = 16
   private[graft] val LloydRounds = 3
   private[graft] val Dim = 64
-  // Memoized coarse quantizer per (session, sfDir): in production the IVF
-  // model is fitted ONCE at ingest and persisted alongside the data; the
-  // per-query path only broadcasts the (tiny) centroid table and probes.
-  // Fitting inside every query run (round 1) put an iterative k-means —
-  // the #2 bench item — on the query path for no semantic gain.
-  // memo keys include the corpus fingerprint (IngestArtifacts.memoKey)
-  // so an in-place corpus regeneration invalidates live sessions too
-  private val modelCache = scala.collection.concurrent.TrieMap
+  private val PqM = 8       // subvectors
+  private val PqK = NList   // centroids per subvector (4-bit codes); one
+                            // lockstep fit needs one k for IVF and PQ
+  private val PqSubDim = Dim / PqM
+
+  /** The ANN fit's input frame: subspace 0 is the whole 64-dim embedding
+    * (the IVF quantizer), subspaces 1..8 its 8-dim slices (the PQ
+    * codebooks), so one lockstep IntKMeans.fit serves both. */
+  private def annFrame(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame = {
+    val e = col("embedding").cast("array<double>")
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), explode(array(
+        struct(lit(0).as("m"), e.as("e")) +: (0 until PqM).map { m =>
+          struct(lit(m + 1).as("m"),
+            slice(e, m * PqSubDim + 1, PqSubDim).as("e"))
+        }: _*)).as("s"))
+      .select(col("vec_id"), col("s.m").as("m"), col("s.e").as("e"))
+  }
+
+  /** The IVF quantizer and the PQ codebooks in ONE deterministic integer
+    * k-means (Gonzalez init + exact-integer Lloyd rounds, see IntKMeans):
+    * [0] is IVF, [1..8] are the PQ subspaces. Subspaces never interact,
+    * so each codebook is bit-identical to fitting it alone — which the
+    * DuckDB oracle does (ivfFitCtes/pqFitCtes), so s03/s04/s13/s15
+    * hash-match. */
+  private[graft] def annFit(s: org.apache.spark.sql.SparkSession, d: String)
+      : IndexedSeq[IndexedSeq[Array[Long]]] =
+    IntKMeans.fit(annFrame(s, d), k = NList, rounds = LloydRounds,
+      dims = Dim +: Seq.fill(PqM)(PqSubDim))
+
+  /** Ingest-time ANN artifacts per (session, sfDir): in production the
+    * ANN models are fitted ONCE when data lands and persisted beside it;
+    * the query path only broadcasts the tiny tables. Both artifacts
+    * (`ivf_k…_r…` and `pq_m…_k…_r…` parquet, fit parameters in the name)
+    * publish from one lazily forced annFit, so a root that already holds
+    * both never fits, and a root holding only one publishes the other from
+    * the same fit. This map is only a per-JVM cache over the artifacts
+    * (IngestArtifacts): a second session finds the tables instead of
+    * re-fitting. Memo keys include the corpus fingerprint
+    * (IngestArtifacts.memoKey), so an in-place corpus regeneration
+    * invalidates live sessions too. */
+  private val annCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String, String),
-      IndexedSeq[Seq[Long]]]
-  IngestArtifacts.registerMemo(modelCache)
+      (IndexedSeq[Seq[Long]], Seq[Seq[Long]])]
+  IngestArtifacts.registerMemo(annCache)
 
-  /** Persisted-fit plumbing: ANN fits are INGEST ARTIFACTS — tiny parquet
-    * tables written once per corpus and READ by the query path, exactly
-    * like d03's cluster labels (Dedup.minhashClustersCached). The TrieMap
-    * memo above is only a per-JVM cache over the artifact: a second
-    * session (or, on a cluster, a second driver) finds the table instead
-    * of re-fitting. In production the artifact lives NEXT TO the corpus;
-    * the sandbox corpus dirs are read-only, so the default root maps each
-    * data dir to a stable sibling under java.io.tmpdir (override with
-    * SPARK_GRAFT_ARTIFACTS to point anywhere Hadoop-FS writable — s3a://
-    * in prod). The fit parameters ride in the table name, so a constant
-    * bump can never read a stale layout. Correctness is unaffected either
-    * way: the fit is a pure function of the data (IntKMeans), so artifact
-    * and re-fit are bit-identical — which is also why the DuckDB oracle
-    * can keep replaying the fit from the raw corpus. */
-  /** See IngestArtifacts (the shared helper): the fit lands as one tiny
-    * parquet file (coalesce(1) — k·dim longs) and the consumer always
-    * reads the table back. */
-  private def fitArtifact(s: org.apache.spark.sql.SparkSession, d: String,
-      table: String)(fit: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    IngestArtifacts.readOrCreate(s, d, table)(fit.coalesce(1))
-
-  /** The IVF coarse quantizer: 16 centroids in micro-units, fitted by the
-    * deterministic integer k-means (Gonzalez init + 3 exact-integer Lloyd
-    * rounds — see IntKMeans). A pure function of the data, so the DuckDB
-    * oracle replays the SAME fit and s03/s13/s15 hash-match (round 11;
-    * previously Spark ML's k-means|| float fit kept them spec-gated).
-    * Persisted as the `ivf_k…_r…` parquet artifact (round 12); the query
-    * path reads the artifact and broadcasts the k×dim longs. */
-  private[graft] def ivfCentroids(s: org.apache.spark.sql.SparkSession,
-      d: String): IndexedSeq[Seq[Long]] =
-    modelCache.getOrElseUpdate(IngestArtifacts.memoKey(s, d), {
-      val art = fitArtifact(s, d, s"ivf_k${NList}_r$LloydRounds.parquet") {
-        val sub = Tables.embeddings(s, d)
-          .select(col("vec_id"), lit(0).as("m"),
-            col("embedding").cast("array<double>").as("e"))
-        val fit = IntKMeans.fit(sub, nSub = 1, k = NList,
-          rounds = LloydRounds, dim = Dim)(0)
-        import s.implicits._
-        fit.zipWithIndex.map { case (e, cell) => (cell, e.toSeq) }
-          .toDF("cell", "e")
+  /** (IVF centroids, cell order; PQ codebook rows, flattened m·k + cell —
+    * the PqEncodeInt/PqLutInt layout), in micro-units. */
+  private[graft] def annFits(s: org.apache.spark.sql.SparkSession, d: String)
+      : (IndexedSeq[Seq[Long]], Seq[Seq[Long]]) =
+    annCache.getOrElseUpdate(IngestArtifacts.memoKey(s, d), {
+      lazy val fit = annFit(s, d)
+      import s.implicits._
+      // coalesce(1): each artifact lands as one tiny parquet file
+      val ivf = IngestArtifacts.readOrCreate(s, d,
+        s"ivf_k${NList}_r$LloydRounds.parquet") {
+        fit(0).zipWithIndex.map { case (e, cell) => (cell, e.toSeq) }
+          .toDF("cell", "e").coalesce(1)
       }
-      art.orderBy("cell").collect().map(_.getSeq[Long](1).toSeq).toIndexedSeq
+      val pq = IngestArtifacts.readOrCreate(s, d,
+        s"pq_m${PqM}_k${PqK}_r$LloydRounds.parquet") {
+        fit.tail.zipWithIndex.flatMap { case (cb, m) =>
+          cb.zipWithIndex.map { case (e, cell) => (m, cell, e.toSeq) }
+        }.toDF("m", "cell", "e").coalesce(1)
+      }
+      (ivf.orderBy("cell").collect().map(_.getSeq[Long](1).toSeq).toIndexedSeq,
+        pq.orderBy("m", "cell").collect().map(_.getSeq[Long](2).toSeq).toSeq)
     })
+
+  /** The IVF coarse quantizer: 16 centroids in micro-units (annFits). */
+  private[graft] def ivfCentroids(s: org.apache.spark.sql.SparkSession,
+      d: String): IndexedSeq[Seq[Long]] = annFits(s, d)._1
 
   /** IVF probe stage shared by s03 and the s15 sweep: every corpus
     * vector in the query's `nProbe` nearest cells, exact-cosine scored.
@@ -427,42 +444,10 @@ object Similarity {
          |ORDER BY h.nprobe""".stripMargin))
 
   // ------------------------------------------------------ PQ ANN
-  private val PqM = 8       // subvectors
-  private val PqK = 16      // centroids per subvector (4-bit codes)
-  private val PqSubDim = 64 / PqM
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), Seq[Seq[Long]]]
-  IngestArtifacts.registerMemo(pqCache)
-
   /** Per-subspace PQ codebooks (m·k rows of subDim micro-unit integers,
-    * row m·k + ki), fitted once per (session, data dir) like the IVF
-    * centroids — at scale this is an ingest-time artifact persisted next
-    * to the data. One IntKMeans.fit call fits all 8 subspaces in lockstep
-    * (the subspace id is a grouping key, so 8 codebooks cost the same
-    * passes as one); deterministic integer arithmetic end to end, so the
-    * DuckDB oracle replays the fit and s04/s13 hash-match (round 11). */
+    * row m·k + ki): subspaces 1..8 of the shared ANN fit (annFits). */
   private[graft] def pqCodebook(s: org.apache.spark.sql.SparkSession, d: String)
-      : Seq[Seq[Long]] =
-    pqCache.getOrElseUpdate(IngestArtifacts.memoKey(s, d), {
-      val art = fitArtifact(s, d,
-        s"pq_m${PqM}_k${PqK}_r$LloydRounds.parquet") {
-        val subs = Tables.embeddings(s, d)
-          .select(col("vec_id"), explode(array((0 until PqM).map { m =>
-            struct(lit(m).as("m"),
-              slice(col("embedding").cast("array<double>"),
-                m * PqSubDim + 1, PqSubDim).as("e"))
-          }: _*)).as("s"))
-          .select(col("vec_id"), col("s.m").as("m"), col("s.e").as("e"))
-        val fit = IntKMeans.fit(subs, nSub = PqM, k = PqK,
-          rounds = LloydRounds, dim = PqSubDim)
-        import s.implicits._
-        fit.zipWithIndex.flatMap { case (cb, m) =>
-          cb.zipWithIndex.map { case (e, cell) => (m, cell, e.toSeq) }
-        }.toDF("m", "cell", "e")
-      }
-      // flattened row m·k + cell — the PqEncodeInt/PqLutInt layout
-      art.orderBy("m", "cell").collect().map(_.getSeq[Long](2).toSeq).toSeq
-    })
+      : Seq[Seq[Long]] = annFits(s, d)._2
 
   /** Product-quantization ANN: corpus vectors are PQ-coded (8×4-bit — at
     * scale this code table is persisted at ingest, 32× smaller than the

@@ -168,4 +168,29 @@ class IngestArtifactsSpec extends SparkSpec {
         "the superseded-fingerprint entry must be evicted, not accumulate")
     }
   }
+
+  test("unrelated artifacts publish concurrently: the lock is per table") {
+    // each compute waits inside readOrCreate for the OTHER table's
+    // compute to start — a JVM-wide publication lock would hold the
+    // second thread outside until the first timed out
+    val corpus = tmpDir("ia-concurrent")
+    writeCorpus(corpus, "theta-")
+    val started = Seq.fill(2)(new java.util.concurrent.CountDownLatch(1))
+    val met = Seq.fill(2)(new java.util.concurrent.atomic.AtomicBoolean)
+    val threads = (0 to 1).map { i =>
+      new Thread(() => {
+        IngestArtifacts.readOrCreate(spark, corpus, s"table$i.parquet") {
+          started(i).countDown()
+          met(i).set(started(1 - i).await(10,
+            java.util.concurrent.TimeUnit.SECONDS))
+          spark.range(1).select(lit(i).as("t")).coalesce(1)
+        }
+        ()
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(met.forall(_.get()),
+      "two different tables must compute at the same time, not in turn")
+  }
 }

@@ -30,9 +30,9 @@ class IntKMeansSpec extends SparkSpec {
 
   test("fit is invariant to partitioning — the order-proof-sums claim") {
     val base = corpus(1)
-    val a = IntKMeans.fit(base.repartition(1), 1, 16, 3, 64)
-    val b = IntKMeans.fit(base.repartition(13, col("vec_id")), 1, 16, 3, 64)
-    val c = IntKMeans.fit(base.orderBy(col("vec_id").desc), 1, 16, 3, 64)
+    val a = IntKMeans.fit(base.repartition(1), 16, 3, Seq(64))
+    val b = IntKMeans.fit(base.repartition(13, col("vec_id")), 16, 3, Seq(64))
+    val c = IntKMeans.fit(base.orderBy(col("vec_id").desc), 16, 3, Seq(64))
     def flat(r: IndexedSeq[IndexedSeq[Array[Long]]]): Seq[Seq[Long]] =
       r.flatMap(_.map(_.toSeq))
     assert(flat(a) == flat(b), "centroids changed under repartition")
@@ -40,7 +40,7 @@ class IntKMeansSpec extends SparkSpec {
   }
 
   test("fit lands on the micro-unit grid, k centroids per subspace, distinct") {
-    val cents = IntKMeans.fit(corpus(4), 4, 8, 2, 16)
+    val cents = IntKMeans.fit(corpus(4), 8, 2, Seq.fill(4)(16))
     assert(cents.length == 4)
     cents.foreach { cb =>
       assert(cb.length == 8)
@@ -52,12 +52,26 @@ class IntKMeansSpec extends SparkSpec {
     cents.flatten.flatten.foreach(v => assert(math.abs(v) <= 2000000L))
   }
 
+  test("mixed dims in one lockstep fit == each subspace fitted alone") {
+    // the shipped ANN fit's shape: a whole-vector subspace beside sliced
+    // ones, each with its own dim, riding the same jobs
+    val mixed = corpus(1).union(corpus(4).withColumn("m", col("m") + 1))
+    def flat(r: IndexedSeq[IndexedSeq[Array[Long]]]): Seq[Seq[Seq[Long]]] =
+      r.map(_.map(_.toSeq))
+    val both = IntKMeans.fit(mixed, 16, 3, 64 +: Seq.fill(4)(16))
+    val whole = IntKMeans.fit(corpus(1), 16, 3, Seq(64))
+    val sliced = IntKMeans.fit(corpus(4), 16, 3, Seq.fill(4)(16))
+    assert(both.length == 5)
+    assert(flat(both) == flat(whole) ++ flat(sliced),
+      "a subspace's centroids changed when fitted beside others")
+  }
+
   test("Gonzalez seed = quantized vector of the lowest vec_id") {
     val emb = Tables.embeddings(spark, sf)
       .orderBy("vec_id").limit(1)
       .select(IntKMeans.quantize(col("embedding").cast("array<double>")))
       .collect()(0).getSeq[Long](0)
-    val cents = IntKMeans.fit(corpus(1), 1, 16, 0, 64)
+    val cents = IntKMeans.fit(corpus(1), 16, 0, Seq(64))
     assert(cents(0)(0).toSeq == emb,
       "cell 0 with zero Lloyd rounds must be the seed data point")
   }
@@ -129,7 +143,7 @@ class IntKMeansSpec extends SparkSpec {
       val df = vecs.toDF("vec_id", "e")
         .select(col("vec_id"), lit(0).as("m"), col("e"))
         .repartition(parts)
-      val got = IntKMeans.fit(df, 1, k, rounds, dim)(0).map(_.toSeq)
+      val got = IntKMeans.fit(df, k, rounds, Seq(dim))(0).map(_.toSeq)
       val want = modelFit(vecs, k, rounds, dim)
       if (got != want)
         println(s"intkmeans mismatch k=$k rounds=$rounds parts=$parts\n" +

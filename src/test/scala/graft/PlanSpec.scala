@@ -628,11 +628,14 @@ class PlanSpec extends SparkSpec {
     // scale-safe ONLY because Catalyst rewrites it into a bounded heap —
     // the same property pinned for q08/q52. Two shapes, both pinned
     // against the fit's exact construction:
-    //  - the IVF fit (nSub=1) builds m as lit(0): the constant partition
-    //    key folds away and the rank-1 filter plans as a GLOBAL
-    //    TakeOrderedAndProject(limit=1);
-    //  - the PQ fit (nSub=8) has a data-born m: InferWindowGroupLimit
-    //    plans a per-partition WindowGroupLimit heap.
+    //  - the shipped fit (IVF as subspace 0 beside the 8 PQ subspaces,
+    //    Similarity.annFit) has a data-born m: InferWindowGroupLimit
+    //    plans a per-partition WindowGroupLimit heap (the second shape
+    //    below);
+    //  - a single-subspace caller that builds m as lit(0) (the specs'
+    //    IVF-alone fits) keeps the constant-m shape: the partition key
+    //    folds away and the rank-1 filter plans as a GLOBAL
+    //    TakeOrderedAndProject(limit=1).
     // A refactor that breaks the pattern (e.g. ranking on a derived
     // column) would silently plan a full per-subspace sort inside every
     // one of the k-1 init rounds of every ingest fit.

@@ -301,7 +301,7 @@ class RecallSpec extends SparkSpec {
     val sub = Tables.embeddings(spark, sf)
       .select(col("vec_id"), lit(0).as("m"),
         col("embedding").cast("array<double>").as("e"))
-    val refit = IntKMeans.fit(sub, nSub = 1, k = 16, rounds = 3, dim = 64)(0)
+    val refit = IntKMeans.fit(sub, k = 16, rounds = 3, dims = Seq(64))(0)
       .map(_.toSeq)
     assert(refit == cents,
       "persisted artifact diverges from an independent re-fit — the fit " +
