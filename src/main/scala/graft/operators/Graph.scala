@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.Rounding.r6
@@ -13,17 +13,43 @@ import graft.functions.Rounding.r6
   */
 object Graph {
 
-  /** Shared lineage cut for the iterative loops (q73 ranks, q82
-    * frontiers): re-root the round's result on its materialized RDD so
-    * plan depth stays constant and the parent round's blocks can be
-    * freed deterministically — see q73's loop comment for the full
-    * rationale (on a cluster: checkpoint() to reliable storage, same
-    * contract). */
-  private def materialize(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val out = s.createDataFrame(df.rdd, df.schema).persist()
-    out.count()
-    out
+  private val RowCount: Seq[Column] = Seq(count(lit(1)))
+
+  /** Lineage cut for the iterative loops: re-root `df` on its RDD and
+    * persist it, then run ONE aggregate action that both fills the cache
+    * and returns the round's signature row (default: the row count).
+    * Persist alone leaves the logical plan nesting, and Catalyst
+    * analysis over stacked join+agg rounds blows up super-linearly; the
+    * re-rooted frame is a LogicalRDD leaf, so plan depth stays constant,
+    * and — unlike localCheckpoint, whose blocks only die at a driver
+    * GC — the round can be freed deterministically. (On a cluster:
+    * checkpoint() to reliable storage, same contract.) */
+  private def cut(df: DataFrame, sig: Seq[Column] = RowCount)
+      : (DataFrame, Row) = {
+    val out = df.sparkSession.createDataFrame(df.rdd, df.schema).persist()
+    (out, out.agg(sig.head, sig.tail: _*).collect()(0))
+  }
+
+  /** Fixpoint driver for q73/q82/q96/q120/q152: `cut`s `step` of the
+    * previous round, `maxRounds` times or — with `untilStable` — until a
+    * round's signature equals its predecessor's (at least one round
+    * runs). Each intermediate round is freed once its successor is cut;
+    * `start` never is, and the returned last round belongs to the
+    * caller too. */
+  private def iterate(start: (DataFrame, Row), maxRounds: Int,
+      untilStable: Boolean = false, sig: Seq[Column] = RowCount)
+      (step: DataFrame => DataFrame): (DataFrame, Row) = {
+    var cur = start
+    var stable = false
+    var rounds = 0
+    while (rounds < maxRounds && !stable) {
+      val next = cut(step(cur._1), sig)
+      stable = untilStable && next._2 == cur._2
+      if (cur ne start) cur._1.unpersist()
+      cur = next
+      rounds += 1
+    }
+    cur
   }
 
   /** Pre-checkpoint "interior" builders (r15). Every graph query ends in
@@ -49,16 +75,15 @@ object Graph {
     "q180_harmonic_centrality" -> (q180Interior _),
     "q186_assortativity" -> (q186Interior _))
 
-  private def checkpointed(interior: (SparkSession, String)
+  private[graft] def checkpointed(interior: (SparkSession, String)
       => (DataFrame, () => Unit)): (SparkSession, String) => DataFrame =
     (s, d) => {
       val (res, free) = interior(s, d)
-      // materialize the bounded answer, then free ALL cached state — a
-      // persist left alive after the query returns taxes every LATER
+      // materialize the bounded answer, then free ALL cached state, also
+      // when the answer fails — Verify and Bench keep the session going
+      // past a failed query, and a persist left alive taxes every LATER
       // query in the session (the d03-artifact lesson)
-      val out = res.localCheckpoint(true)
-      free()
-      out
+      try res.localCheckpoint(true) finally free()
     }
 
   /** Co-purchase pair substrate shared by the family: unordered part
@@ -163,53 +188,37 @@ object Graph {
         .persist()
       val nodes = e.select(col("src").as("node")).distinct().persist()
       val n = nodes.count() // one job; a catalog stat at ingest (d08 precedent)
-      // The loop must cut LINEAGE each round, not just cache: persist
-      // alone leaves the logical plan nesting, and Catalyst analysis
-      // over 8 rounds of stacked join+agg+join blows up super-linearly.
-      // Re-rooting on the materialized RDD keeps plan depth constant
-      // (LogicalRDD leaf) and — unlike localCheckpoint, whose blocks
-      // only die at a driver GC — lets each round free its parent's
-      // blocks deterministically. (On a cluster: checkpoint() to
-      // reliable storage, same contract.)
-      var ranks = materialize(s, nodes.select(col("node"),
-        lit(1000000000000L / n).as("r")))
-      var lastMat = ranks
-      for (it <- 1 to 8) {
-        // shuffle_hash hint: ranks is a stats-less LogicalRDD after
-        // re-rooting, so unhinted the planner sort-merge-joins and
-        // re-shuffles the cached edges every round. Hinted, e streams
-        // in place (its cached HashPartitioning(src) satisfies the
-        // join) and only the O(V) rank table moves — the Pregel shape.
-        // Dangling/teleport handling by UNION + one agg instead of a
-        // left join against a per-round broadcast of the O(V) contrib
-        // table (r14): zero-contribution rows for every node ride the
-        // same map-side-combined sum, so sum(c) == coalesce(in_sum, 0)
-        // row-for-row while the round drops its driver collect +
-        // broadcast build job AND the O(V)-broadcast scale hazard.
-        // Measured 4.8 s vs 6.3 s for the 8-round loop at sf0.1.
-        val contrib = e.join(ranks.hint("shuffle_hash"),
-            col("src") === col("node"))
+      // shuffle_hash hint: ranks is a stats-less LogicalRDD after
+      // re-rooting, so unhinted the planner sort-merge-joins and
+      // re-shuffles the cached edges every round. Hinted, e streams
+      // in place (its cached HashPartitioning(src) satisfies the
+      // join) and only the O(V) rank table moves — the Pregel shape.
+      // Dangling/teleport handling by UNION + one agg instead of a
+      // left join against a per-round broadcast of the O(V) contrib
+      // table (r14): zero-contribution rows for every node ride the
+      // same map-side-combined sum, so sum(c) == coalesce(in_sum, 0)
+      // row-for-row while the round drops its driver collect +
+      // broadcast build job AND the O(V)-broadcast scale hazard.
+      // Measured 4.8 s vs 6.3 s for the 8-round loop at sf0.1.
+      def rankStep(ranks: DataFrame): DataFrame =
+        e.join(ranks.hint("shuffle_hash"), col("src") === col("node"))
           .select(col("dst"), expr("r div deg").as("c"))
-        val next = contrib
           .unionByName(nodes.select(col("node").as("dst"), lit(0L).as("c")))
           .groupBy("dst").agg(sum("c").as("in_sum"))
           .select(col("dst").as("node"),
             (lit(150000000000L / n) +
               expr("(85 * in_sum) div 100")).as("r"))
-        // materialize every SECOND round: plan depth stays ≤ 2 rounds
-        // (analysis is fine there) while the per-round action count —
-        // the dominant cost of a small-graph iteration — halves.
-        if (it % 2 == 0 || it == 8) {
-          ranks = materialize(s, next)
-          lastMat.unpersist()
-          lastMat = ranks
-        } else ranks = next
-      }
+      // 8 rounds, cut every SECOND one: plan depth stays ≤ 2 rounds
+      // (analysis is fine there) while the per-round action count —
+      // the dominant cost of a small-graph iteration — halves.
+      val start = cut(nodes.select(col("node"),
+        lit(1000000000000L / n).as("r")))
+      val (ranks, _) = iterate(start, 4)(r => rankStep(rankStep(r)))
+      start._1.unpersist()
       val res = ranks.select(col("node").as("part"),
           col("r").as("rank_micro"), r6(col("r") / 1e12).as("rank"))
         .orderBy("part")
-      val fin = lastMat
-      (res, () => { fin.unpersist(); e.unpersist(); nodes.unpersist() })
+      (res, () => { ranks.unpersist(); e.unpersist(); nodes.unpersist() })
   }
 
   val q73CopurchaseRank = QueryDef(
@@ -379,8 +388,8 @@ object Graph {
     * Scale shape: the edge list is built once (hash-partitioned on
     * src by its one exchange) and never re-shuffled; each round joins
     * the O(V) level table against it, hash-aggs min(level) on node
-    * (partial agg map-side), and re-roots the plan on a materialized
-    * RDD (q73's lineage-cut contract). Per-round traffic is O(V). */
+    * (partial agg map-side), and `iterate` `cut`s each round's lineage.
+    * Per-round traffic is O(V). */
   private[graft] def q82Interior(s: SparkSession, d: String)
       : (DataFrame, () => Unit) = {
       // ≥2 shared orders (set-first build, r15), then symmetrize: one
@@ -392,22 +401,17 @@ object Graph {
       val seeds = Tables.part(s, d)
         .filter(col("p_partkey") % 97 === 0)
         .select(col("p_partkey").as("node"), lit(0).as("lvl"))
-      var levels = materialize(s, seeds)
-      var lastMat = levels
-      for (_ <- 1 to 4) {
-        val next = edges.join(levels.hint("shuffle_hash"),
-            col("src") === col("node"))
+      val start = cut(seeds)
+      val (levels, _) = iterate(start, 4) { lv =>
+        edges.join(lv.hint("shuffle_hash"), col("src") === col("node"))
           .select(col("dst").as("node"), (col("lvl") + 1).as("lvl"))
-          .unionByName(levels)
+          .unionByName(lv)
           .groupBy("node").agg(min("lvl").as("lvl"))
-        levels = materialize(s, next)
-        lastMat.unpersist()
-        lastMat = levels
       }
+      start._1.unpersist()
       val res = levels.select(col("node").as("part"), col("lvl").as("level"))
         .orderBy("part")
-      val fin = lastMat
-      (res, () => { fin.unpersist(); edges.unpersist() })
+      (res, () => { levels.unpersist(); edges.unpersist() })
   }
 
   val q82BfsLevels = QueryDef(
@@ -444,8 +448,8 @@ object Graph {
     * stays canonical and the fixpoint test is a count + hash-sum
     * aggregate, not a set diff. Scale shape: each phase is one
     * map-side-combined min-agg on the gather key + one equi-join —
-    * d03/q73/q82's iterated-exchange pattern with materialize()
-    * lineage cuts; nothing driver-sized ever collects. */
+    * d03/q73/q82's iterated-exchange pattern, run by `iterate` until
+    * the signature is stable; nothing driver-sized ever collects. */
   private[graft] def q96Interior(s: SparkSession, d: String)
       : (DataFrame, () => Unit) = {
       val pairs = sparsePairs(s, d)
@@ -466,50 +470,27 @@ object Graph {
           else moved.union(n2.select(col("m").as("lo"), col("u").as("hi")))
         base.filter(col("lo") =!= col("hi")).distinct()
       }
-      // ONE action per round both fills the round's cache and returns
-      // the fixpoint signature (count + order-invariant xor) — the
-      // former count()-then-collect pair was two jobs per round (r14)
-      def matWithSig(df: org.apache.spark.sql.DataFrame)
-          : (org.apache.spark.sql.DataFrame, (Long, Long)) = {
-        val out = s.createDataFrame(df.rdd, df.schema).persist()
-        val r = out.agg(count(lit(1)), expr("bit_xor(xxhash64(lo, hi))"))
-          .collect()(0)
-        (out, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      }
+      // the fixpoint signature (count + order-invariant xor) rides the
+      // ONE action `cut` runs per round to fill the round's cache
+      val ccSig = Seq(count(lit(1)), expr("bit_xor(xxhash64(lo, hi))"))
+      val start = cut(pairs.select(col("u").as("lo"), col("v").as("hi")),
+        ccSig)
       // NOTE (r14): wrapping this loop in an AQE-off scope was measured
       // 4-8× SLOWER (34-80 s vs 9.4 s) — AQE's partition coalescing on
       // the tiny per-round exchanges is worth far more than the
       // query-stage job submissions cost. Loop stays AQE-on.
-      locally {
-        var state = matWithSig(
-          pairs.select(col("u").as("lo"), col("v").as("hi")))
-        var edges = state._1
-        var lastMat = edges
-        var prevSig = state._2
-        var converged = false
-        var it = 0
-        while (!converged && it < 12) {
-          state = matWithSig(star(star(edges, large = true), large = false))
-          val next = state._1
-          val nextSig = state._2
-          converged = nextSig == prevSig
-          prevSig = nextSig
-          lastMat.unpersist()
-          lastMat = next
-          edges = next
-          it += 1
-        }
-        // at the fixpoint every edge is (root, member)
-        val lbl = edges.select(col("hi").as("node"), col("lo").as("root"))
-          .union(edges.select(col("lo").as("node"), col("lo").as("root"))
-            .distinct())
-        val res = lbl.distinct().groupBy("root")
-          .agg(count(lit(1)).as("n_nodes"))
-          .orderBy(col("n_nodes").desc, col("root"))
-          .limit(20)
-        val fin = lastMat
-        (res, () => fin.unpersist())
-      }
+      val (edges, _) = iterate(start, 12, untilStable = true, ccSig)(
+        e => star(star(e, large = true), large = false))
+      start._1.unpersist()
+      // at the fixpoint every edge is (root, member)
+      val lbl = edges.select(col("hi").as("node"), col("lo").as("root"))
+        .union(edges.select(col("lo").as("node"), col("lo").as("root"))
+          .distinct())
+      val res = lbl.distinct().groupBy("root")
+        .agg(count(lit(1)).as("n_nodes"))
+        .orderBy(col("n_nodes").desc, col("root"))
+        .limit(20)
+      (res, () => edges.unpersist())
   }
 
   val q96ConnectedComponents = QueryDef(
@@ -550,40 +531,35 @@ object Graph {
     * argmax — so the plurality pick never sorts; both levels partial-
     * aggregate before the exchange (measured faster than the
     * row_number-window form it replaced). d03/q82's iterated-exchange
-    * pattern with materialize() lineage cuts; labels move as
+    * pattern, run by `iterate` for 3 rounds; labels move as
     * (node, label) pairs; nothing driver-sized ever collects. */
   private[graft] def q152Interior(s: SparkSession, d: String)
       : (DataFrame, () => Unit) = {
       val pairs = sparsePairs(s, d)
-      val edges = materialize(s,
+      val (edges, _) = cut(
         pairs.select(col("u").as("src"), col("v").as("dst"))
           .union(pairs.select(col("v").as("src"), col("u").as("dst"))))
-      var labels = materialize(s, edges.select(col("src").as("node"))
+      val start = cut(edges.select(col("src").as("node"))
         .distinct().withColumn("lab", col("node")))
-      var lastMat = labels
-      for (_ <- 1 to 3) {
-        // plurality winner via min-of-struct argmax — both aggs combine
-        // map-side, no per-node sort (beats row_number-over-window here)
-        val next = edges.join(labels.hint("shuffle_hash"),
-            col("dst") === col("node"))
+      // plurality winner via min-of-struct argmax — both aggs combine
+      // map-side, no per-node sort (beats row_number-over-window here)
+      val (labels, _) = iterate(start, 3) { lb =>
+        edges.join(lb.hint("shuffle_hash"), col("dst") === col("node"))
           .groupBy(col("src"), col("lab"))
           .agg(count(lit(1)).as("c"))
           .groupBy("src")
           .agg(min(struct((-col("c")).as("nc"), col("lab").as("lab")))
             .as("m"))
           .select(col("src").as("node"), col("m.lab").as("lab"))
-        labels = materialize(s, next)
-        lastMat.unpersist()
-        lastMat = labels
       }
+      start._1.unpersist()
       val sizes = labels.groupBy(col("lab").as("lab2"))
         .agg(count(lit(1)).as("n_members"))
       val res = labels.join(sizes, col("lab") === col("lab2"))
         .select(col("node").as("part"), col("lab").as("community"),
           col("n_members"))
         .orderBy("part")
-      val fin = lastMat
-      (res, () => { fin.unpersist(); edges.unpersist() })
+      (res, () => { labels.unpersist(); edges.unpersist() })
   }
 
   val q152LabelCommunities = QueryDef(
@@ -792,24 +768,13 @@ object Graph {
     *
     * Scale shape: per round ONE symmetric-degree hash-agg + two
     * left-semi equi-joins of the edge list against the survivor set —
-    * O(E) per round, the d03/q96 iterate-a-bounded-op posture with
-    * materialize/unpersist hygiene; the fixpoint check is a 1-row
-    * count (the q96 signature pattern). Cores are NESTED, so the k=3
-    * peel starts from the k=2 fixpoint instead of the full graph —
+    * O(E) per round, run by `iterate` until the edge count (`cut`'s
+    * default 1-row signature) stops changing. Cores are NESTED, so the
+    * k=3 peel starts from the k=2 fixpoint instead of the full graph —
     * identical fixpoints (peeling is confluent), ~half the rounds. */
   val q120KCore = QueryDef(
     "q120_kcore",
     (s, d) => {
-      val pairs = sparsePairs(s, d)
-        .select("u", "v")
-      // materialize + edge count in ONE action per step (the former
-      // materialize-then-recount pair was two jobs per peel round, r14)
-      def matCounted(df: org.apache.spark.sql.DataFrame)
-          : (org.apache.spark.sql.DataFrame, Long) = {
-        val out = s.createDataFrame(df.rdd, df.schema).persist()
-        (out, out.count())
-      }
-      val (edges0, nEdges0) = matCounted(pairs)
       // k-cores are NESTED (3-core ⊆ 2-core ⊆ G): each k's peel starts
       // from the PREVIOUS k's fixpoint instead of the full graph (r15,
       // guide §1 / dispatch-floor item). Peeling is confluent — the
@@ -818,41 +783,25 @@ object Graph {
       // so 3-core(2-core(G)) = 3-core(G): identical results with ~half
       // the peel rounds (and their job dispatches), and later rounds
       // scan the already-shrunk core.
-      var start = edges0
-      var startEdges = nEdges0
+      var core = cut(sparsePairs(s, d).select("u", "v"))
       val rows = Seq(2, 3).map { k =>
-        var edges = start
-        var lastMat: org.apache.spark.sql.DataFrame = null
-        var prevEdges = -1L
-        var nEdges = startEdges
-        var it = 0
-        while (nEdges != prevEdges && it < KCoreRounds) {
-          val deg = edges.select(col("u").as("node"))
-            .union(edges.select(col("v").as("node")))
+        val peeled = iterate(core, KCoreRounds, untilStable = true) { e =>
+          val keep = e.select(col("u").as("node"))
+            .union(e.select(col("v").as("node")))
             .groupBy("node").agg(count(lit(1)).as("deg"))
-          val keep = deg.filter(col("deg") >= k).select("node")
-          val (next, nNext) = matCounted(
-            edges.join(keep, edges("u") === keep("node"), "left_semi")
-              .join(keep, edges("v") === keep("node"), "left_semi"))
-          if ((lastMat != null) && (lastMat ne start)) lastMat.unpersist()
-          lastMat = next
-          edges = next
-          prevEdges = nEdges
-          nEdges = nNext
-          it += 1
+            .filter(col("deg") >= k).select("node")
+          e.join(keep, e("u") === keep("node"), "left_semi")
+            .join(keep, e("v") === keep("node"), "left_semi")
         }
+        core._1.unpersist()
+        core = peeled
+        val edges = peeled._1
         val nNodes = edges.select(col("u").as("node"))
           .union(edges.select(col("v").as("node")))
           .distinct().count()
-        // hand this k-core to the next k as its start; free the previous
-        // start unless it is the base graph (freed once at the end)
-        if ((start ne edges0) && (start ne edges)) start.unpersist()
-        start = edges
-        startEdges = nEdges
-        (k, nNodes, nEdges)
+        (k, nNodes, peeled._2.getLong(0))
       }
-      if (start ne edges0) start.unpersist()
-      edges0.unpersist()
+      core._1.unpersist()
       import s.implicits._
       rows.toDF("k", "n_nodes", "n_edges")
         .select(col("k"), col("n_nodes"), col("n_edges"),

@@ -44,6 +44,10 @@ class ScaleInvarianceSpec extends SparkSpec {
     invariant("q82_bfs_levels", sf001)
   }
 
+  test("q96 connected components invariant to partition count") {
+    invariant("q96_connected_components", sf001)
+  }
+
   test("q84 interval-overlap counts invariant to partition count") {
     invariant("q84_interval_join", sf01)
   }
