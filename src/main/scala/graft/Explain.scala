@@ -16,10 +16,10 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=============== $n ===============")
-      // graph queries end in localCheckpoint — their own plan is a
-      // checkpoint scan; dump the pre-checkpoint INTERIOR plan instead
+      // checkpointed queries end in localCheckpoint — their own plan is
+      // a checkpoint scan; dump the pre-checkpoint INTERIOR plan instead
       // so the dump shows the shipped pipeline (r15)
-      try operators.Graph.interiors.get(n) match {
+      try SparkEntry.interiors.get(n) match {
         case Some(build) =>
           val (df, free) = build(spark, sfDir)
           println(df.queryExecution.explainString(

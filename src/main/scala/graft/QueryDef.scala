@@ -10,6 +10,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String]) {
+    oracle: Option[String],
+    interior: Option[QueryDef.Interior] = None) {
   def run(s: SparkSession, dir: String): DataFrame = fn(s, dir)
+}
+
+object QueryDef {
+  /** A query up to its bounded answer, plus the thunk freeing its state. */
+  type Interior = (SparkSession, String) => (DataFrame, () => Unit)
+
+  /** A query whose answer `operators.Rounds.checkpointed` holds from
+    * `interior` before freeing its state. That answer's own plan is a
+    * `Scan ExistingRDD`, so Explain and PlanSpec read the interior. */
+  def checkpointed(name: String, interior: Interior,
+      oracle: Option[String]): QueryDef = QueryDef(name,
+    operators.Rounds.checkpointed(interior), oracle, Some(interior))
 }

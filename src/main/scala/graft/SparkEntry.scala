@@ -37,6 +37,10 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(q => q.name -> q.fn).toMap
 
+  /** The interior of every `QueryDef.checkpointed` query. */
+  def interiors: Map[String, QueryDef.Interior] =
+    allDefs.flatMap(q => q.interior.map(q.name -> _)).toMap
+
   /** Ingest-time artifacts (the IVF coarse quantizer, PQ codebooks, and
     * the d03 near-dup cluster labels). In production these are fitted
     * once when data lands and persisted next to it; callers that model

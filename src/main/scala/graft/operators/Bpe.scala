@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.{TextFunctions => T}
@@ -16,9 +16,10 @@ import graft.functions.Rounding.r4
   * compression). Every training round is then: one map-side-combined
   * pair-count aggregate over the types table, a collect of exactly ONE
   * row (the argmax merge — the only driver traffic, 1 row × M rounds),
-  * and a typed map applying the merge to the symbol arrays. Lineage is
-  * cut with localCheckpoint every few rounds (q73's iterated-join
-  * hygiene); the types table stays cached and partition-stable
+  * and a typed map applying the merge to the symbol arrays. Each round
+  * is a `Rounds.iterate` cut whose one action is that argmax, so lineage
+  * never grows and a superseded round is freed as soon as its successor
+  * is cached; the types table stays cached and partition-stable
   * throughout. Application to unseen text reuses the learned merge list
   * as a broadcast ranking — per-word greedy lowest-rank-first merging,
   * embarrassingly parallel.
@@ -69,15 +70,25 @@ object Bpe {
     * cost is dominated by job latency, not data. */
   private[graft] def train(spark: SparkSession, types: DataFrame,
       m: Int): Seq[Merge] = {
-    // (count, symbols) per word type; symbols start as characters
-    var cur = types.select(col("wc"),
-        expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-          .as("syms"))
-      .coalesce(8)
-      .cache()
-    val merges = Seq.newBuilder[Merge]
-    var r = 0
-    var exhausted = false
+    // the argmax merge of a round: at most one (a, b, n) row
+    val argmax: DataFrame => Seq[Row] = _.filter(size(col("syms")) >= 2)
+      .select(col("wc"), explode(expr(
+        "transform(sequence(0, size(syms) - 2), " +
+          "i -> struct(syms[i] AS a, syms[i + 1] AS b))")).as("p"))
+      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(sum("wc").as("n"))
+      .orderBy(col("n").desc, col("a"), col("b"))
+      .take(1).toSeq
+    def fuse(cur: DataFrame, top: Seq[Row]): DataFrame = {
+      val (a, b) = (top.head.getString(0), top.head.getString(1))
+      cur.select(col("wc"), aggregate(col("syms"),
+        array().cast("array<string>"),
+        (acc, x) =>
+          when(size(acc) > 0 &&
+              element_at(acc, -1) === lit(a) && x === lit(b),
+            concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
+            .otherwise(concat(acc, array(x)))).as("syms"))
+    }
     // AQE OFF for the loop (r15, guide §1/§2.4): the types table is a
     // few thousand rows coalesced to 8 partitions, so each round is pure
     // job-dispatch latency — with AQE on, every round's take(1)
@@ -93,46 +104,25 @@ object Bpe {
     val prevAqe = spark.conf.get(aqeKey)
     spark.conf.set(aqeKey, "false")
     try {
-    // ONE job per round: the pair-count take(1) both finds the merge and
-    // materializes the current round's cache; the superseded round's
-    // blocks are freed one round later (after its successor is cached)
-    // so nothing in the live lineage is ever recomputed.
-    var toFree: DataFrame = null
-    while (r < m && !exhausted) {
-      val top = cur.filter(size(col("syms")) >= 2)
-        .select(col("wc"), explode(expr(
-          "transform(sequence(0, size(syms) - 2), " +
-            "i -> struct(syms[i] AS a, syms[i + 1] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("wc").as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .take(1)
-      if (toFree != null) { toFree.unpersist(blocking = false); toFree = null }
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += Merge(r, a, b)
-        val prev = cur
-        val fused = aggregate(col("syms"),
-          array().cast("array<string>"),
-          (acc, x) =>
-            when(size(acc) > 0 &&
-                element_at(acc, -1) === lit(a) && x === lit(b),
-              concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-              .otherwise(concat(acc, array(x))))
-        cur = prev.select(col("wc"), fused.as("syms")).cache()
-        // cut lineage periodically so round M doesn't replay rounds 1..M-1
-        if (r % 8 == 7) {
-          cur = cur.localCheckpoint(eager = true)
-          prev.unpersist(blocking = false)
-        } else toFree = prev
+      // (count, symbols) per word type; symbols start as characters. One
+      // job per round: the argmax both finds the merge and fills the
+      // round's cache; `m` merges take the start and m - 1 rounds.
+      val trajectory = Seq.newBuilder[Row]
+      val probe: DataFrame => Seq[Row] = df => {
+        val top = argmax(df); trajectory ++= top; top }
+      if (m > 0) {
+        val start = Rounds.cut(types.select(col("wc"),
+            expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+              .as("syms"))
+          .coalesce(8), probe)
+        val (last, _) = Rounds.iterate(start, m - 1,
+          (_, top) => top.isEmpty, probe)(fuse)
+        start._1.unpersist(blocking = false)
+        last.unpersist(blocking = false)
       }
-      r += 1
-    }
-    if (toFree != null) toFree.unpersist(blocking = false)
-    cur.unpersist(blocking = false)
+      trajectory.result().zipWithIndex.map { case (r, i) =>
+        Merge(i, r.getString(0), r.getString(1)) }
     } finally spark.conf.set(aqeKey, prevAqe)
-    merges.result()
   }
 
   // ---------------------------------------------------------------- t20
@@ -143,7 +133,7 @@ object Bpe {
     * registered rows-only; TextPropertySpec carries the correctness
     * gates (round-trip concat, zero-merge = characters, planted-merge
     * recovery, monotone token counts). */
-  val t20BpeTokenize = QueryDef(
+  val t20BpeTokenize = QueryDef.checkpointed(
     "t20_bpe_tokenize",
     (s, d) => {
       import s.implicits._
@@ -151,8 +141,10 @@ object Bpe {
         .select(col("source"), explode(T.tokens(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("wc"))
         .cache()
-      val globalTypes = types.groupBy("w").agg(sum("wc").as("wc"))
-      val merges = train(s, globalTypes, 30)
+      val free = () => types.unpersist(blocking = false): Unit
+      val merges =
+        try train(s, types.groupBy("w").agg(sum("wc").as("wc")), 30)
+        catch { case t: Throwable => free(); throw t }
       val rank = merges.map(mg => (mg.a, mg.b) -> mg.rank).toMap
       val bRank = s.sparkContext.broadcast(rank)
       val perWord = types.as[(String, String, Long)].map {
@@ -167,8 +159,7 @@ object Bpe {
           r4(sum(col("n_chars") * col("wc")).cast("double") /
             sum(col("n_toks") * col("wc"))).as("chars_per_token"))
         .orderBy("source")
-      types.unpersist(blocking = false)
-      out
+      (out, free)
     },
     None)
 

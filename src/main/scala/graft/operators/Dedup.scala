@@ -93,10 +93,15 @@ object Dedup {
   /** MinHash + LSH clustering with TRANSITIVE cluster labels: bucket-mates
     * are edges, `cluster_id` = min doc_id of the connected component,
     * computed by iterating min-label propagation (doc → bucket → doc) to
-    * fixpoint. Labels only decrease, so the label sum is a strictly
-    * decreasing convergence witness — no join needed to detect stability.
-    * Chains A~B~C where A,C share no bucket now co-cluster (a single
-    * propagation pass would split them).
+    * fixpoint. Chains A~B~C where A,C share no bucket co-cluster (a
+    * single propagation pass would split them).
+    *
+    * Each round is the per-bucket (bmin, bmax) label range, cut by
+    * `Rounds.iterate`: a doc's next label is the minimum bmin over its
+    * buckets (every bucket's bmin is at most each member's current
+    * label), so the range table alone carries the labels from round to
+    * round. Converged ⇔ every bucket is label-homogeneous, and that
+    * test — count(bmin <> bmax) — is the round's one action.
     *
     * 100 TB posture: each round is two hash-agg shuffles moving only
     * (id, label) pairs, and round count is the candidate-graph diameter
@@ -105,51 +110,44 @@ object Dedup {
     * oracle replays the same clustering as recursive-CTE connected
     * components over bucket-sharing edges. */
   private[graft] def minhashClusters(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Rounds.checkpoint(minhashClusterRounds(docs))
+
+  /** `minhashClusters` up to its answer, plus the thunk that frees the
+    * buckets, the round-0 labels and the last round. */
+  private[graft] def minhashClusterRounds(docs: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, () => Unit) = {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.expressions.Window
     val bands = minhashBands(docs).persist()
-    // Round 0 as a window pass (2 shuffles, no joins): label = min doc_id
-    // across all of the doc's buckets. Identical to one propagation round
-    // from identity labels, so the loop below usually runs exactly one
-    // confirming round. Docs too short to shingle self-label via the
-    // right-side coalesce instead of silently disappearing.
-    val firstPass = bands
-      .withColumn("bmin", min("doc_id").over(Window.partitionBy("band_hash")))
-      .groupBy("doc_id").agg(min("bmin").as("label"))
-    var labels = docs.select(col("doc_id"))
-      .join(firstPass, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("label"))
-      .persist()
-    // Converged ⇔ every bucket is label-homogeneous. Checking min==max per
-    // bucket costs one join + one agg — roughly half a propagation round —
-    // and makes the final (confirming) iteration cheap, instead of paying
-    // a full propagate-and-compare round just to observe no change.
-    var iterating = true
-    while (iterating) {
-      val bucketAgg = bands.join(labels, "doc_id")
-        .groupBy("band_hash")
-        .agg(min("label").as("bmin"), max("label").as("bmax"))
-        .persist()
-      if (bucketAgg.filter(col("bmin") =!= col("bmax")).isEmpty) {
-        bucketAgg.unpersist()
-        iterating = false
-      } else {
-        val prop = bands.join(bucketAgg, "band_hash")
-          .groupBy("doc_id").agg(min("bmin").as("cand"))
-        val next = labels.join(prop, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("label"), coalesce(col("cand"), col("label"))).as("label"))
-          .persist()
-        next.count() // materialize before dropping parents
-        bucketAgg.unpersist()
-        labels.unpersist()
-        labels = next
-      }
-    }
-    bands.unpersist()
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+    // a doc's label is the min bmin over its buckets; docs too short to
+    // shingle have no bucket and self-label
+    def labels(bmins: DataFrame) =
+      bmins.groupBy("doc_id").agg(min("bmin").as("label"))
+    def withDocs(labels: DataFrame) = docs.select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
+    def range(labels: DataFrame) = bands.join(labels, "doc_id")
+      .groupBy("band_hash")
+      .agg(min("label").as("bmin"), max("label").as("bmax"))
+    val mixed = Rounds.countWhere(col("bmin") =!= col("bmax"))
+    // Round 0 as a window pass (2 shuffles, no joins): bmin = min doc_id
+    // of the bucket. Identical to one propagation round from identity
+    // labels, so the loop usually runs no round at all; its labels are
+    // persisted, as they are then the answer.
+    val labels0 = withDocs(labels(bands.withColumn("bmin",
+      min("doc_id").over(Window.partitionBy("band_hash"))))).persist()
+    val start = Rounds.cut(range(labels0), mixed)
+    val (last, _) = Rounds.iterate(start, Int.MaxValue,
+      (_, m) => m.head.getLong(0) == 0, mixed)(
+      (r, _) => range(labels(bands.join(r, "band_hash"))))
+    if (last ne start._1) start._1.unpersist()
+    // at the fixpoint each bucket's bmin is its members' label
+    val res = (if (last eq start._1) labels0
+      else withDocs(labels(bands.join(last, "band_hash"))))
+      .select(col("doc_id"), col("label").as("cluster_id"))
       .orderBy("doc_id")
+    (res, () => { last.unpersist(); labels0.unpersist(); bands.unpersist() })
   }
 
   /** The d03 clustering as an INGEST-TIME ARTIFACT (the s03 ivfModel
@@ -228,9 +226,9 @@ object Dedup {
       |lbl AS (SELECT u AS doc_id, min(w) AS cluster_id
       |  FROM reach GROUP BY 1)""".stripMargin
 
-  val d03MinHashLsh = QueryDef(
+  val d03MinHashLsh = QueryDef.checkpointed(
     "d03_dedup_minhash_lsh",
-    (s, d) => minhashClusters(Tables.documents(s, d)),
+    (s, d) => minhashClusterRounds(Tables.documents(s, d)),
     Some(minhashCteSql +
       "\nSELECT doc_id, cluster_id FROM lbl ORDER BY doc_id"))
 

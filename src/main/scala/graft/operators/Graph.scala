@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.Rounding.r6
+import Rounds.{cut, iterate}
 
 /** Graph-propagation operators. Web-graph centrality is a standard
   * crawl-curation quality signal (rank-weighted sampling of pretraining
@@ -12,79 +13,6 @@ import graft.functions.Rounding.r6
   * same shape: sparse, skewed, symmetric.
   */
 object Graph {
-
-  private val RowCount: Seq[Column] = Seq(count(lit(1)))
-
-  /** Lineage cut for the iterative loops: re-root `df` on its RDD and
-    * persist it, then run ONE aggregate action that both fills the cache
-    * and returns the round's signature row (default: the row count).
-    * Persist alone leaves the logical plan nesting, and Catalyst
-    * analysis over stacked join+agg rounds blows up super-linearly; the
-    * re-rooted frame is a LogicalRDD leaf, so plan depth stays constant,
-    * and — unlike localCheckpoint, whose blocks only die at a driver
-    * GC — the round can be freed deterministically. (On a cluster:
-    * checkpoint() to reliable storage, same contract.) */
-  private def cut(df: DataFrame, sig: Seq[Column] = RowCount)
-      : (DataFrame, Row) = {
-    val out = df.sparkSession.createDataFrame(df.rdd, df.schema).persist()
-    (out, out.agg(sig.head, sig.tail: _*).collect()(0))
-  }
-
-  /** Fixpoint driver for q73/q82/q96/q120/q152: `cut`s `step` of the
-    * previous round, `maxRounds` times or — with `untilStable` — until a
-    * round's signature equals its predecessor's (at least one round
-    * runs). Each intermediate round is freed once its successor is cut;
-    * `start` never is, and the returned last round belongs to the
-    * caller too. */
-  private def iterate(start: (DataFrame, Row), maxRounds: Int,
-      untilStable: Boolean = false, sig: Seq[Column] = RowCount)
-      (step: DataFrame => DataFrame): (DataFrame, Row) = {
-    var cur = start
-    var stable = false
-    var rounds = 0
-    while (rounds < maxRounds && !stable) {
-      val next = cut(step(cur._1), sig)
-      stable = untilStable && next._2 == cur._2
-      if (cur ne start) cur._1.unpersist()
-      cur = next
-      rounds += 1
-    }
-    cur
-  }
-
-  /** Pre-checkpoint "interior" builders (r15). Every graph query ends in
-    * `.localCheckpoint(true)` so its cached state can be freed once the
-    * 20-50-row answer is materialized — but that makes the query's OWN
-    * executed plan a 5-line `Scan ExistingRDD`, which made the r14 plan
-    * pins vacuous and the plans/r14 after-dumps unauditable (verdict
-    * items 1/2). Each builder returns the full pipeline UP TO the final
-    * checkpoint plus a thunk that frees the cached graph state; the
-    * QueryDefs below are exactly `interior → localCheckpoint → free`,
-    * so what PlanSpec pins and Explain dumps IS the shipped plan. */
-  private[graft] val interiors
-      : Map[String, (SparkSession, String) => (DataFrame, () => Unit)] = Map(
-    "q73_copurchase_rank" -> (q73Interior _),
-    "q81_triangles" -> (q81Interior _),
-    "q82_bfs_levels" -> (q82Interior _),
-    "q96_connected_components" -> (q96Interior _),
-    "q98_link_prediction" -> (q98Interior _),
-    "q105_mutual_top_partner" -> (q105Interior _),
-    "q152_label_communities" -> (q152Interior _),
-    "q163_two_hop" -> (q163Interior _),
-    "q164_anf_sketch" -> (q164Interior _),
-    "q180_harmonic_centrality" -> (q180Interior _),
-    "q186_assortativity" -> (q186Interior _))
-
-  private[graft] def checkpointed(interior: (SparkSession, String)
-      => (DataFrame, () => Unit)): (SparkSession, String) => DataFrame =
-    (s, d) => {
-      val (res, free) = interior(s, d)
-      // materialize the bounded answer, then free ALL cached state, also
-      // when the answer fails — Verify and Bench keep the session going
-      // past a failed query, and a persist left alive taxes every LATER
-      // query in the session (the d03-artifact lesson)
-      try res.localCheckpoint(true) finally free()
-    }
 
   /** Co-purchase pair substrate shared by the family: unordered part
     * pairs (u < v) with their DISTINCT shared-order count, built
@@ -160,8 +88,9 @@ object Graph {
     * N comes from one count() — a catalog stat at ingest in production
     * (the d08 precedent). The classic GraphX/Pregel formulation maps
     * 1:1 onto this loop if a corpus ever needs vertex-cut partitioning. */
-  private[graft] def q73Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q73CopurchaseRank = QueryDef.checkpointed(
+    "q73_copurchase_rank",
+    (s, d) => {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       // Adjacency aggregation in two batched exchanges (r14, guide §2.3):
@@ -213,17 +142,13 @@ object Graph {
       // the dominant cost of a small-graph iteration — halves.
       val start = cut(nodes.select(col("node"),
         lit(1000000000000L / n).as("r")))
-      val (ranks, _) = iterate(start, 4)(r => rankStep(rankStep(r)))
+      val (ranks, _) = iterate(start, 4)((r, _) => rankStep(rankStep(r)))
       start._1.unpersist()
       val res = ranks.select(col("node").as("part"),
           col("r").as("rank_micro"), r6(col("r") / 1e12).as("rank"))
         .orderBy("part")
       (res, () => { ranks.unpersist(); e.unpersist(); nodes.unpersist() })
-  }
-
-  val q73CopurchaseRank = QueryDef(
-    "q73_copurchase_rank",
-    checkpointed(q73Interior),
+    },
     Some("""WITH RECURSIVE
            |li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |edges AS (SELECT DISTINCT a.p AS src, b.p AS dst
@@ -267,8 +192,9 @@ object Graph {
     * an explicit two-column comparison, not a packed deg·K+id BIGINT,
     * which would stop being a total order (and silently drop wedges)
     * once ids reach K. */
-  private[graft] def q81Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q81Triangles = QueryDef.checkpointed(
+    "q81_triangles",
+    (s, d) => {
       // set-first build (r15): the count-agg IS the distinct — same
       // (u < v) pair set as the former self-join + distinct, with the
       // Σ fanout² co-occurrence stream born after the one order-keyed
@@ -347,11 +273,7 @@ object Graph {
         .orderBy(col("n_triangles").desc, col("part"))
         .limit(20)
       (top, () => { arcs.unpersist(); und.unpersist() })
-  }
-
-  val q81Triangles = QueryDef(
-    "q81_triangles",
-    checkpointed(q81Interior),
+    },
     Some("""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |und AS (SELECT DISTINCT a.p AS u, b.p AS v
            |  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p),
@@ -390,8 +312,9 @@ object Graph {
     * the O(V) level table against it, hash-aggs min(level) on node
     * (partial agg map-side), and `iterate` `cut`s each round's lineage.
     * Per-round traffic is O(V). */
-  private[graft] def q82Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q82BfsLevels = QueryDef.checkpointed(
+    "q82_bfs_levels",
+    (s, d) => {
       // ≥2 shared orders (set-first build, r15), then symmetrize: one
       // exchange on the order key, one on the pair key, one on src.
       val pairs = sparsePairs(s, d)
@@ -402,7 +325,7 @@ object Graph {
         .filter(col("p_partkey") % 97 === 0)
         .select(col("p_partkey").as("node"), lit(0).as("lvl"))
       val start = cut(seeds)
-      val (levels, _) = iterate(start, 4) { lv =>
+      val (levels, _) = iterate(start, 4) { (lv, _) =>
         edges.join(lv.hint("shuffle_hash"), col("src") === col("node"))
           .select(col("dst").as("node"), (col("lvl") + 1).as("lvl"))
           .unionByName(lv)
@@ -412,11 +335,7 @@ object Graph {
       val res = levels.select(col("node").as("part"), col("lvl").as("level"))
         .orderBy("part")
       (res, () => { levels.unpersist(); edges.unpersist() })
-  }
-
-  val q82BfsLevels = QueryDef(
-    "q82_bfs_levels",
-    checkpointed(q82Interior),
+    },
     Some("""WITH RECURSIVE
            |li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |pairs AS (SELECT a.p AS u, b.p AS v
@@ -450,8 +369,9 @@ object Graph {
     * map-side-combined min-agg on the gather key + one equi-join —
     * d03/q73/q82's iterated-exchange pattern, run by `iterate` until
     * the signature is stable; nothing driver-sized ever collects. */
-  private[graft] def q96Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q96ConnectedComponents = QueryDef.checkpointed(
+    "q96_connected_components",
+    (s, d) => {
       val pairs = sparsePairs(s, d)
       def star(e: org.apache.spark.sql.DataFrame, large: Boolean) = {
         val n = e.select(col("lo").as("u"), col("hi").as("v"))
@@ -472,15 +392,16 @@ object Graph {
       }
       // the fixpoint signature (count + order-invariant xor) rides the
       // ONE action `cut` runs per round to fill the round's cache
-      val ccSig = Seq(count(lit(1)), expr("bit_xor(xxhash64(lo, hi))"))
+      val ccSig = (e: DataFrame) => e.agg(count(lit(1)),
+        expr("bit_xor(xxhash64(lo, hi))")).collect().toSeq
       val start = cut(pairs.select(col("u").as("lo"), col("v").as("hi")),
         ccSig)
       // NOTE (r14): wrapping this loop in an AQE-off scope was measured
       // 4-8× SLOWER (34-80 s vs 9.4 s) — AQE's partition coalescing on
       // the tiny per-round exchanges is worth far more than the
       // query-stage job submissions cost. Loop stays AQE-on.
-      val (edges, _) = iterate(start, 12, untilStable = true, ccSig)(
-        e => star(star(e, large = true), large = false))
+      val (edges, _) = iterate(start, 12, Rounds.Stable, ccSig)(
+        (e, _) => star(star(e, large = true), large = false))
       start._1.unpersist()
       // at the fixpoint every edge is (root, member)
       val lbl = edges.select(col("hi").as("node"), col("lo").as("root"))
@@ -491,11 +412,7 @@ object Graph {
         .orderBy(col("n_nodes").desc, col("root"))
         .limit(20)
       (res, () => edges.unpersist())
-  }
-
-  val q96ConnectedComponents = QueryDef(
-    "q96_connected_components",
-    checkpointed(q96Interior),
+    },
     Some("""WITH RECURSIVE
            |li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |pairs AS (SELECT a.p AS u, b.p AS v
@@ -533,8 +450,9 @@ object Graph {
     * row_number-window form it replaced). d03/q82's iterated-exchange
     * pattern, run by `iterate` for 3 rounds; labels move as
     * (node, label) pairs; nothing driver-sized ever collects. */
-  private[graft] def q152Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q152LabelCommunities = QueryDef.checkpointed(
+    "q152_label_communities",
+    (s, d) => {
       val pairs = sparsePairs(s, d)
       val (edges, _) = cut(
         pairs.select(col("u").as("src"), col("v").as("dst"))
@@ -543,7 +461,7 @@ object Graph {
         .distinct().withColumn("lab", col("node")))
       // plurality winner via min-of-struct argmax — both aggs combine
       // map-side, no per-node sort (beats row_number-over-window here)
-      val (labels, _) = iterate(start, 3) { lb =>
+      val (labels, _) = iterate(start, 3) { (lb, _) =>
         edges.join(lb.hint("shuffle_hash"), col("dst") === col("node"))
           .groupBy(col("src"), col("lab"))
           .agg(count(lit(1)).as("c"))
@@ -560,11 +478,7 @@ object Graph {
           col("n_members"))
         .orderBy("part")
       (res, () => { labels.unpersist(); edges.unpersist() })
-  }
-
-  val q152LabelCommunities = QueryDef(
-    "q152_label_communities",
-    checkpointed(q152Interior),
+    },
     Some("""WITH
            |li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |pairs AS (SELECT a.p AS u, b.p AS v
@@ -622,8 +536,9 @@ object Graph {
     * graph; existing edges leave via a left-anti equi-join; degrees
     * attach by two equi-joins on the pair endpoints. Every shuffle key
     * (center, pair, endpoint) scales with the edge set. */
-  private[graft] def q98Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q98LinkPrediction = QueryDef.checkpointed(
+    "q98_link_prediction",
+    (s, d) => {
       val pairs = sparsePairs(s, d)
         .select("u", "v")
         .persist()
@@ -659,11 +574,7 @@ object Graph {
           col("aa_micro").desc, col("u"), col("v"))
         .limit(20)
       (res, () => pairs.unpersist())
-  }
-
-  val q98LinkPrediction = QueryDef(
-    "q98_link_prediction",
-    checkpointed(q98Interior),
+    },
     Some("""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |pairs AS (SELECT a.p AS u, b.p AS v
            |  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
@@ -704,8 +615,9 @@ object Graph {
     * lineitem; the mutual check is a self-equi-join of the (part →
     * best) table with itself on the reversed key. No global window, no
     * cartesian step. */
-  private[graft] def q105Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q105MutualTop = QueryDef.checkpointed(
+    "q105_mutual_top_partner",
+    (s, d) => {
       // Pair counts once per UNORDERED pair (u < v), mirrored from cache
       // (r14): counting half and unioning the flipped copy halves the
       // bytes through the count's exchange — the counts are symmetric by
@@ -728,11 +640,7 @@ object Graph {
         .orderBy(col("n_shared_orders").desc, col("part_a"))
         .limit(50)
       (res, () => cnt.unpersist())
-  }
-
-  val q105MutualTop = QueryDef(
-    "q105_mutual_top_partner",
-    checkpointed(q105Interior),
+    },
     Some("""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |counts AS (
            |  SELECT a.p AS u, b.p AS v, count(DISTINCT a.ok) AS n_ord
@@ -769,49 +677,49 @@ object Graph {
     * Scale shape: per round ONE symmetric-degree hash-agg + two
     * left-semi equi-joins of the edge list against the survivor set —
     * O(E) per round, run by `iterate` until the edge count (`cut`'s
-    * default 1-row signature) stops changing. Cores are NESTED, so the
-    * k=3 peel starts from the k=2 fixpoint instead of the full graph —
-    * identical fixpoints (peeling is confluent), ~half the rounds. */
-  val q120KCore = QueryDef(
+    * default row-count probe) stops changing.
+    *
+    * Input: an undirected edge frame (u, v), each edge once. The answer
+    * reads both cores, which the returned thunk frees; a peel that
+    * throws frees its round and the core it started from (`iterate`). */
+  private[graft] def kcores(edges: DataFrame): (DataFrame, () => Unit) = {
+    def nodes(e: DataFrame) =
+      e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+    def peel(k: Int)(e: DataFrame, probe: Seq[Row]): DataFrame = {
+      val keep = nodes(e).groupBy("node").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select("node")
+      e.join(keep, e("u") === keep("node"), "left_semi")
+        .join(keep, e("v") === keep("node"), "left_semi")
+    }
+    // k-cores are NESTED (3-core ⊆ 2-core ⊆ G): each k's peel starts
+    // from the PREVIOUS k's fixpoint instead of the full graph (r15,
+    // guide §1 / dispatch-floor item). Peeling is confluent — the
+    // k-core is the unique maximal subgraph of min degree ≥ k, and
+    // removing a node of degree < k can never evict a k-core member —
+    // so 3-core(2-core(G)) = 3-core(G): identical results with ~half
+    // the peel rounds (and their job dispatches), and later rounds
+    // scan the already-shrunk core.
+    val g = cut(edges)
+    val core2 = iterate(g, KCoreRounds, Rounds.Stable)(peel(2))
+    g._1.unpersist()
+    val core3 = iterate(core2, KCoreRounds, Rounds.Stable)(peel(3))
+    def summary(k: Int, core: Rounds.Round): DataFrame =
+      nodes(core._1).distinct().agg(count(lit(1)).as("n_nodes"))
+        .select(lit(k).as("k"), col("n_nodes"),
+          lit(core._2.head.getLong(0)).as("n_edges"))
+    val res = summary(2, core2).union(summary(3, core3))
+      .select(col("k"), col("n_nodes"), col("n_edges"),
+        r6(when(col("n_nodes") >= 2L,
+            col("n_edges").cast("double") * 2.0
+              / (col("n_nodes").cast("double") * (col("n_nodes") - 1L)))
+          .otherwise(lit(0.0))).as("density"))
+      .orderBy("k")
+    (res, () => { core3._1.unpersist(); core2._1.unpersist() })
+  }
+
+  val q120KCore = QueryDef.checkpointed(
     "q120_kcore",
-    (s, d) => {
-      // k-cores are NESTED (3-core ⊆ 2-core ⊆ G): each k's peel starts
-      // from the PREVIOUS k's fixpoint instead of the full graph (r15,
-      // guide §1 / dispatch-floor item). Peeling is confluent — the
-      // k-core is the unique maximal subgraph of min degree ≥ k, and
-      // removing a node of degree < k can never evict a k-core member —
-      // so 3-core(2-core(G)) = 3-core(G): identical results with ~half
-      // the peel rounds (and their job dispatches), and later rounds
-      // scan the already-shrunk core.
-      var core = cut(sparsePairs(s, d).select("u", "v"))
-      val rows = Seq(2, 3).map { k =>
-        val peeled = iterate(core, KCoreRounds, untilStable = true) { e =>
-          val keep = e.select(col("u").as("node"))
-            .union(e.select(col("v").as("node")))
-            .groupBy("node").agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= k).select("node")
-          e.join(keep, e("u") === keep("node"), "left_semi")
-            .join(keep, e("v") === keep("node"), "left_semi")
-        }
-        core._1.unpersist()
-        core = peeled
-        val edges = peeled._1
-        val nNodes = edges.select(col("u").as("node"))
-          .union(edges.select(col("v").as("node")))
-          .distinct().count()
-        (k, nNodes, peeled._2.getLong(0))
-      }
-      core._1.unpersist()
-      import s.implicits._
-      rows.toDF("k", "n_nodes", "n_edges")
-        .select(col("k"), col("n_nodes"), col("n_edges"),
-          graft.functions.Rounding.r6(
-            when(col("n_nodes") >= 2L,
-              col("n_edges").cast("double") * 2.0
-                / (col("n_nodes").cast("double") * (col("n_nodes") - 1L)))
-              .otherwise(lit(0.0))).as("density"))
-        .orderBy("k")
-    },
+    (s, d) => kcores(sparsePairs(s, d).select("u", "v")),
     Some {
       // every survivor CTE is referenced twice by the next peel —
       // MATERIALIZED stops the planner from inlining the chain
@@ -864,8 +772,9 @@ object Graph {
     * HyperBall sketch, which is the registered scale path for r ≥ 2 on
     * graphs where distinct-sets stop fitting (the d07↔d08 /
     * q54↔q59 exact↔sketch split). */
-  private[graft] def q163Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q163TwoHop = QueryDef.checkpointed(
+    "q163_two_hop",
+    (s, d) => {
       val pairs = sparsePairs(s, d)
       val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
         .union(pairs.select(col("v").as("src"), col("u").as("dst")))
@@ -880,11 +789,7 @@ object Graph {
         .select(col("src").as("part"), col("n_within_2"))
         .orderBy("part")
       (res, () => edges.unpersist())
-  }
-
-  val q163TwoHop = QueryDef(
-    "q163_two_hop",
-    checkpointed(q163Interior),
+    },
     Some("""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS p FROM lineitem),
            |pairs AS (SELECT a.p AS u, b.p AS v
            |  FROM li a JOIN li b ON a.ok = b.ok AND a.p < b.p
@@ -918,8 +823,9 @@ object Graph {
     * pattern with sketches as the message payload. At 100 TB the
     * registers stream through shuffles at O(V · 2^lgK) bytes while the
     * exact form's O(Σ|B_2(v)|) pair stream does not. */
-  private[graft] def q164Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q164AnfSketch = QueryDef.checkpointed(
+    "q164_anf_sketch",
+    (s, d) => {
       val pairs = sparsePairs(s, d)
       val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
         .union(pairs.select(col("v").as("src"), col("u").as("dst")))
@@ -941,11 +847,7 @@ object Graph {
           expr("hll_sketch_estimate(sk2)").as("ball2_est"))
         .orderBy("part")
       (res, () => { b1.unpersist(); edges.unpersist() })
-  }
-
-  val q164AnfSketch = QueryDef(
-    "q164_anf_sketch",
-    checkpointed(q164Interior),
+    },
     None)
 
   // --------------------------------------------------------------- q180
@@ -965,8 +867,9 @@ object Graph {
     * one TakeOrdered(20) at the end. Rows-only (sketch estimates are
     * implementation-defined); SketchSpec gates the r≤2 truncation
     * against the EXACT harmonic from degree + q163's two-hop counts. */
-  private[graft] def q180Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q180HarmonicCentrality = QueryDef.checkpointed(
+    "q180_harmonic_centrality",
+    (s, d) => {
       val pairs = sparsePairs(s, d)
       val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
         .union(pairs.select(col("v").as("src"), col("u").as("dst")))
@@ -1005,11 +908,7 @@ object Graph {
         .orderBy(col("harmonic").desc, col("part").asc)
         .limit(20)
       (res, () => { b2.unpersist(); b1.unpersist(); edges.unpersist() })
-  }
-
-  val q180HarmonicCentrality = QueryDef(
-    "q180_harmonic_centrality",
-    checkpointed(q180Interior),
+    },
     None)
 
   // --------------------------------------------------------------- q186
@@ -1027,8 +926,9 @@ object Graph {
     * Scale shape: q82's two-exchange edge build; the degree table is
     * |nodes|-sized and BROADCASTS back onto the edge list twice; one
     * map-side-combined 1-row reduce. */
-  private[graft] def q186Interior(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
+  val q186Assortativity = QueryDef.checkpointed(
+    "q186_assortativity",
+    (s, d) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val pairs = sparsePairs(s, d)
       val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
@@ -1055,11 +955,7 @@ object Graph {
             " * cast(n_edges * syy - sy * sy as double))) as bigint)")
             .as("assortativity_micro"))
       (res, () => edges.unpersist())
-  }
-
-  val q186Assortativity = QueryDef(
-    "q186_assortativity",
-    checkpointed(q186Interior),
+    },
     Some("""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS p
            |  FROM lineitem),
            |pairs AS (SELECT a.p AS u, b.p AS v

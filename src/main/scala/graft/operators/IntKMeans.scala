@@ -19,7 +19,7 @@ import graft.expressions.VectorExpressions
   *    per dim — the x15/t17/q73 fixed-point trick),
   *  - init is Gonzalez's farthest-point traversal (seed = lowest vec_id,
   *    argmax ties to lowest vec_id) — the s22 coreset recursion, already
-  *    proven SQL-unrollable,
+  *    proven SQL-unrollable (s22 calls `gonzalezArgmax` too),
   *  - Lloyd assignment compares exact BIGINT distances (ties to the
   *    lowest cell), and centroid updates are exact integer sums rounded
   *    half-up back onto the grid (floorDiv(2·sum + n, 2·n)) — commutative
@@ -56,16 +56,16 @@ object IntKMeans {
   private def floorDiv2(s: Long, n: Long): Long =
     Math.floorDiv(2 * s + n, 2 * n)
 
-  /** One Gonzalez round's farthest-point argmax over (vec_id, m, ei,
-    * mind): the already-picked rows are anti-joined away (broadcast — the
-    * picked set is ≤ k rows), then the per-subspace argmax is expressed
+  /** One Gonzalez round's farthest-point (m, vec_id, ei, mind) per
+    * subspace m: the already-picked rows are anti-joined away
+    * (broadcast — the picked set is ≤ k rows), then the argmax is expressed
     * as the RANK-PREDICATE PATTERN — `row_number() over (partition by m
     * order by mind desc, vec_id)` filtered to `rn === 1` — NOT as a sort.
     * The pattern is load-bearing at scale: Catalyst rewrites it into a
     * bounded heap — per-partition WindowGroupLimit (the q08/q52 idiom)
     * when m is a data-born column (the shipped IVF+PQ fit), or a global
     * TakeOrderedAndProject(1) when a single-subspace caller passes a
-    * constant m that folds out of the partition spec — so
+    * constant m that folds out of the partition spec (s22) — so
     * each of the k-1 init rounds costs one corpus-linear pass + an
     * O(1)-state heap per task, never a full per-subspace sort inside
     * every ingest fit. PlanSpec pins both shapes on this exact stage. */
@@ -77,7 +77,7 @@ object IntKMeans {
       .withColumn("mind", mind)
       .withColumn("rn", row_number().over(wMax))
       .filter(col("rn") === 1)
-      .select("m", "vec_id", "ei")
+      .select("m", "vec_id", "ei", "mind")
   }
 
   /** Fit one independent k-means per subspace in lockstep over a frame

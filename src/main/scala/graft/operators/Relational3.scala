@@ -1596,9 +1596,9 @@ object Relational3 {
     * corpus scan — ScanProbe-measured, the q154/q157 lesson); the
     * ≤64-row band-class table broadcasts back; nothing part-sized
     * sorts globally. Weekly CV runs on exact integer Σq/Σq² (milli-CV
-    * via one sqrt at the end). The answer materializes before return
-    * so the cache frees deterministically (the q81/d03 lesson). */
-  val q166AbcXyz = QueryDef(
+    * via one sqrt at the end). The answer is checkpointed before the
+    * cache is freed, also when it fails (the q81/d03 lesson). */
+  val q166AbcXyz = QueryDef.checkpointed(
     "q166_abc_xyz",
     (s, d) => {
       val wk = Tables.lineitem(s, d)
@@ -1644,9 +1644,7 @@ object Relational3 {
         .agg(count(lit(1)).as("n_parts"),
           sum("rev_cents").as("rev_cents_total"))
         .orderBy("abc_class", "xyz_class")
-        .localCheckpoint(true)
-      per.unpersist()
-      out
+      (out, () => per.unpersist(): Unit)
     },
     Some("""WITH wk AS (
            |  SELECT l_partkey AS part,

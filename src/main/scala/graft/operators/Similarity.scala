@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
@@ -1501,10 +1502,10 @@ object Similarity {
     * still pins recall@10 vs s01 plus the structural gates. */
   /** The ingest-time navigable graph: symmetrized banded-SRP
     * candidates, top-`Degree` by exact cosine per node (s09's
-    * construction, wider). Callers eagerly localCheckpoint the result:
-    * the walk's plan references the edge list once per hop, and an
-    * unmaterialized graph would be recomputed (bucketedPairs included)
-    * at every reference — in production it IS a persisted artifact. */
+    * construction, wider). Callers `Rounds.hold` the result: the walk's
+    * plan references the edge list once per hop, and an unmaterialized
+    * graph would be recomputed (bucketedPairs included) at every
+    * reference — in production it IS a persisted artifact. */
   private def navGraph(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1541,9 +1542,8 @@ object Similarity {
 
   /** The beam walk: seeds → `hops` × (edge-join, exact score, prune to
     * `beam` per query) → everything visited, ranked. Shared by s19
-    * (fixed beam) and s20 (the beam sweep); `graph` and `seedScores`
-    * arrive pre-materialized so neither is recomputed per hop or per
-    * beam. */
+    * (fixed beam) and s20 (the beam sweep); `graph` arrives held, so it
+    * is not recomputed per hop or per beam. */
   private def graphWalkVisited(s: org.apache.spark.sql.SparkSession,
       d: String, beam: Int, hops: Int,
       graph: org.apache.spark.sql.DataFrame,
@@ -1579,21 +1579,22 @@ object Similarity {
     visited.dropDuplicates("qid", "vec_id")
   }
 
-  val s19GraphWalk = QueryDef(
+  val s19GraphWalk = QueryDef.checkpointed(
     "s19_graph_walk",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val wq = Window.partitionBy("qid")
         .orderBy(col("sim").desc, col("vec_id"))
-      val graph = navGraph(s, d).localCheckpoint(true)
-      val seeds = seedScoresDf(s, d).localCheckpoint(true)
-      graphWalkVisited(s, d, beam = 8, hops = 3, graph, seeds)
+      val graph = Rounds.hold(navGraph(s, d))
+      val seeds = seedScoresDf(s, d)
+      val res = graphWalkVisited(s, d, beam = 8, hops = 3, graph, seeds)
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("rank", row_number().over(wq))
         .filter(col("rank") <= K)
         .select(col("qid"), col("rank"), col("vec_id"),
           r4(col("sim")).as("sim"))
         .orderBy("qid", "rank")
+      (res, () => Rounds.release(graph))
     },
     // d08's seed-42 LCG plane replay builds the degree-8 nav graph;
     // the seed slice replays Spark's hash() (Murmur3 x86_32 of the
@@ -1716,7 +1717,7 @@ object Similarity {
     * walk over a full corpus, same audit posture as s15's nprobe sweep.
     * FULLY ORACLE-CHECKED (round 10) via the s19 walk replay at all
     * three beams; RecallSpec still pins both monotonicities. */
-  val s20BeamSweep = QueryDef(
+  val s20BeamSweep = QueryDef.checkpointed(
     "s20_beam_sweep",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
@@ -1724,14 +1725,14 @@ object Similarity {
         .orderBy(col("sim").desc, col("vec_id"))
       val exact = s01BruteForceTopK.fn(s, d).select(col("qid"),
         col("vec_id"))
-      val graph = navGraph(s, d).localCheckpoint(true)
-      val seeds = seedScoresDf(s, d).localCheckpoint(true)
+      val graph = Rounds.hold(navGraph(s, d))
+      val seeds = seedScoresDf(s, d)
       // materialized once: both the hit ranking and the visited-cost
       // rollup read it, and the 3-beam walk must not execute twice
-      val perBeam = Seq(2, 4, 8).map { beam =>
+      val perBeam = Rounds.hold(Seq(2, 4, 8).map { beam =>
         graphWalkVisited(s, d, beam, hops = 3, graph, seeds)
           .withColumn("beam", lit(beam))
-      }.reduce(_ unionByName _).localCheckpoint(true)
+      }.reduce(_ unionByName _))
       val hits = perBeam
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("rank", row_number().over(wq))
@@ -1740,7 +1741,7 @@ object Similarity {
           "left")
       val visitedCost = perBeam.groupBy("beam")
         .agg(count(lit(1)).as("n_visited"))
-      hits.groupBy("beam")
+      val res = hits.groupBy("beam")
         .agg(sum(coalesce(col("ex"), lit(0L))).as("n_hit"),
           count(lit(1)).as("n_returned"))
         .join(broadcast(visitedCost), "beam")
@@ -1749,6 +1750,7 @@ object Similarity {
           r4(col("n_hit").cast("double")
             / (lit(NQueries) * K)).as("recall_at_10"))
         .orderBy("beam")
+      (res, () => Seq(perBeam, graph).foreach(Rounds.release))
     },
     // the s19 walk replay instantiated at beams 2/4/8 plus the exact
     // s01 top-10 as the recall denominator — the whole sweep
@@ -2051,11 +2053,10 @@ object Similarity {
     * SemDeDup (which PRUNES dense regions; this SELECTS spread
     * representatives).
     *
-    * Scale shape: the iterate-a-bounded-op idiom (t20/q73) — k rounds,
-    * each one corpus-linear map (fold the min-distance column against
-    * the single broadcast last-picked center) + a TakeOrdered(1)
-    * argmax to the driver, with localCheckpoint lineage cuts; never a
-    * pairwise matrix. Deterministic end to end: seed = smallest
+    * Scale shape: k of IntKMeans's Gonzalez rounds (`gonzalezArgmax`)
+    * over ONE persisted (vec_id, embedding) frame, each a corpus-linear
+    * min-distance map + a TakeOrderedAndProject(1) argmax to the driver;
+    * never a pairwise matrix. Deterministic end to end: seed = smallest
     * vec_id, argmax ties break on vec_id, distances are exact double
     * folds — reproducible at any partitioning. FULLY ORACLE-CHECKED
     * (round 10): determinism makes the recursion unrollable — the
@@ -2068,26 +2069,24 @@ object Similarity {
       val KSel = 16
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding"))
-      val first = emb.orderBy("vec_id").limit(1)
-        .select("vec_id", "embedding").collect()(0)
-      // (pick order, vec_id, cover radius of the PREVIOUS pick set —
-      // 2.0 = the whole cosine sphere for the seed)
-      var picked = Vector[(Int, Long, Double)]((1, first.getLong(0), 2.0))
-      var last: (Long, Seq[Float]) = (first.getLong(0),
-        first.getSeq[Float](1))
-      var cur = emb.withColumn("mind", lit(2.0))
-      for (i <- 2 to KSel) {
-        cur = cur.filter(col("vec_id") =!= last._1)
-          .withColumn("mind", least(col("mind"),
-            lit(1.0) - V.cosine(col("embedding"), typedLit(last._2))))
-          .localCheckpoint(true)
-        val top = cur.orderBy(col("mind").desc, col("vec_id").asc)
-          .limit(1).select("vec_id", "embedding", "mind").collect()(0)
-        last = (top.getLong(0), top.getSeq[Float](1))
-        picked = picked :+ ((i, top.getLong(0), top.getDouble(2)))
-      }
       import s.implicits._
-      val sel = picked.toDF("pick_order", "vec_id", "radius")
+      val q = emb.select(col("vec_id"), col("embedding").as("ei")).persist()
+      // (vec_id, embedding, cover radius of the PREVIOUS pick set) in pick
+      // order; with no pick yet every radius is 2.0 (the whole cosine
+      // sphere), so the seed is the lowest vec_id
+      val picks = try (1 to KSel).foldLeft(Vector.empty[Row]) { (picks, _) =>
+        // picks as ONE literal, so every round compiles the same code; a
+        // literal m plans TakeOrderedAndProject(1); picks filtered up front
+        // leave the anti-join an empty set, which plans away (no broadcast)
+        val mind = aggregate(typedLit(picks.map(_.getSeq[Float](1))),
+          lit(2.0), (m, p) => least(m, lit(1.0) - V.cosine(col("ei"), p)))
+        val rest = q.filter(!col("vec_id").isin(picks.map(_.getLong(0)): _*))
+        picks ++ IntKMeans.gonzalezArgmax(rest.withColumn("m", lit(0)),
+          Seq.empty[(Int, Long)].toDF("m", "vec_id"), mind)
+          .select("vec_id", "ei", "mind").collect()
+      } finally q.unpersist()
+      val sel = picks.zipWithIndex.map { case (p, i) => (i + 1, p.getLong(0),
+        p.getDouble(2)) }.toDF("pick_order", "vec_id", "radius")
       emb.select(col("vec_id").as("v2"), col("label"))
         .join(broadcast(sel), col("v2") === col("vec_id"))
         .select(col("pick_order"), col("vec_id"), col("label"),

@@ -20,6 +20,17 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `createDataFrame(df.rdd, df.schema)` — a fresh leaf over `df`'s
+    * rows — without turning every row into a `Row` and back. */
+  def reroot(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val spark = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = df.queryExecution
+    ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
+      qe.analyzed.output.map(_.newInstance()), qe.toRdd.map(_.copy()))(spark))
+  }
+
   /** The analyzed logical plan of a DataFrame (for building resolved
     * custom plan nodes against its output attributes). */
   def analyzed(df: org.apache.spark.sql.DataFrame)

@@ -37,7 +37,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d03: minhash plan has no cartesian/nested-loop join") {
-    val p = plan("d03_dedup_minhash_lsh")
+    val p = interiorPlan("d03_dedup_minhash_lsh")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "candidate generation must stay equi-join/window based")
   }
@@ -220,7 +220,7 @@ class PlanSpec extends SparkSpec {
     * executed plan is a `Scan ExistingRDD` — pinning THAT is vacuous
     * (the r14 lesson). Pin the pre-checkpoint interior plan instead. */
   private def interiorPlan(name: String): String = {
-    val (df, free) = operators.Graph.interiors(name)(spark, sf)
+    val (df, free) = SparkEntry.interiors(name)(spark, sf)
     val p = df.queryExecution.executedPlan.toString
     free()
     p
@@ -410,7 +410,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("s19: the walk never scans the corpus after seeding") {
-    val p = plan("s19_graph_walk")
+    val p = interiorPlan("s19_graph_walk")
     assert(!p.contains("CartesianProduct"),
       "hops must be equi-joins on the edge key (seed crossJoin broadcasts)")
     assert(p.contains("cosine_similarity"), "scoring must stay native")
