@@ -17,6 +17,9 @@ Usage: diff_bench.py <old_bench_full.json> <new_bench_full.json>
                      [--confirm <capture.json>]... [--rerun]
 Exit 1 if any query regresses >1.5x normalized AND >1.0s absolute —
 the double gate that host noise on sub-second queries cannot trip.
+When both captures carry per-query layer records (graft.Layers), each
+listed query also shows its jobs and task-CPU deltas beside its wall
+delta.
 
 Reproducibility gate (round 13 — q112 in round 12 tripped the gate on
 one noisy capture that the driver's own re-run contradicted): before
@@ -75,6 +78,21 @@ def main():
     no, nn = norms(old), norms(new)
     per_query_norm = no is not None and nn is not None
 
+    # Captures written since the layer record (graft.Layers) carry one
+    # per query; older ones do not, and then no layer delta is printed.
+    def layers(cap):
+        return {k: v["layers"] for k, v in cap["queries"].items()
+                if "layers" in v}
+    lo, ln = layers(old), layers(new)
+
+    def layer_delta(n):
+        if n not in lo or n not in ln:
+            return ""
+        a, b = lo[n], ln[n]
+        jobs = b["dispatch.jobs"] - a["dispatch.jobs"]
+        cpu = b["compute.task_cpu_s"] - a["compute.task_cpu_s"]
+        return f"  jobs {jobs:+d}  task cpu {cpu:+.2f}s"
+
     ratios = sorted(qn[n] / qo[n] for n in names if qo[n] > 0)
     med = ratios[len(ratios) // 2]
     print(f"queries compared: {len(names)} "
@@ -112,7 +130,7 @@ def main():
     print("\nworst normalized ratios:")
     for norm, delta, n, a, b in rows[:10]:
         print(f"  {n:40s} {a:7.2f}s -> {b:7.2f}s  "
-              f"{norm:5.2f}x norm  {delta:+6.2f}s")
+              f"{norm:5.2f}x norm  {delta:+6.2f}s{layer_delta(n)}")
 
     bad = [(n, norm, delta) for norm, delta, n, a, b in rows
            if norm > 1.5 and delta > 1.0]
@@ -208,7 +226,8 @@ def main():
         print("\nREPRODUCED REGRESSIONS (normalized >1.5x AND >1.0s, "
               "not cleared by any confirm/rerun):")
         for n, norm, delta, src in still:
-            print(f"  {n}: {norm:.2f}x norm, {delta:+.2f}s [{src}]")
+            print(f"  {n}: {norm:.2f}x norm, {delta:+.2f}s{layer_delta(n)} "
+                  f"[{src}]")
     if not still and not real_failures:
         print("\nno regressions past the 1.5x-normalized + 1.0s-absolute "
               "double gate" + (" (after reproducibility adjudication)"

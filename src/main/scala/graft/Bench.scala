@@ -26,6 +26,20 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{},"sf":"$sfDir"}""")
   }
 
+  /** Materialize through the noop sink, not count(): count() lets
+    * Catalyst prune every projected column, so a pure-projection query
+    * would be timed as "parquet scan + count" with the expressions it
+    * claims to measure optimized away. The noop DSv2 sink evaluates
+    * every output column and discards rows executor-side. */
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The calibration probe: a fixed CPU+shuffle-shaped synthetic whose
+    * drift is a pure host-load signal (it never changes round to round). */
+  private[graft] def calibration(spark: SparkSession): DataFrame =
+    spark.range(50000000L).selectExpr("id % 1000 as k", "id as v")
+      .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
+
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared posture lives in Sessions.builder (r15): bench, verify,
@@ -35,6 +49,22 @@ object Bench {
         ProgressCap.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** A warm session with `sfDir`'s ingest-time artifacts prepared, ready
+    * for its first timed query. */
+  private[graft] def prepared(sfDir: String): SparkSession = {
+    val spark = session()
+    // Warm the session (codegen compiler, shuffle machinery, FS client)
+    // so per-query numbers measure the query, not JVM/session init.
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    SparkEntry.prepare(spark, sfDir) // ingest-time artifacts (IVF model)
+    // Clear prepare's allocation debt before the FIRST timed query —
+    // time1 gc's between trials, but the first one would otherwise
+    // inherit the k-means fit's garbage as measured GC pauses.
+    System.gc()
     spark
   }
 
@@ -65,66 +95,49 @@ object Bench {
     * threshold after — q82/q120/q163/q186 sit at 2-8 s and fell between
     * the 5 s brackets on a noisy host (round-12 verdict), leaving their
     * norm_sec interpolated from probes minutes away. */
-  private val IterativeFamily: Set[String] = Set(
-    "q73_copurchase_rank", "q81_triangles", "q82_bfs_levels",
-    "q96_connected_components", "q98_link_prediction",
-    "q105_mutual_top_partner", "q120_kcore", "q152_label_communities",
-    "q163_two_hop", "q164_anf_sketch", "q180_harmonic_centrality",
-    "q186_assortativity")
+  private val IterativeFamily: Set[String] =
+    graft.operators.Graph.all.map(_.name).toSet
 
   private def slowProbeSec(name: String): Double =
     if (IterativeFamily(name)) 2.0 else SlowProbeSec
 
+  /** One timed run of a query: seconds (-1 if it failed), its position
+    * among the timed runs, and its layer record. */
+  private final case class Trial(sec: Double, at: Int, layers: Layers.Record)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    // Warm the session (codegen compiler, shuffle machinery, FS client)
-    // so per-query numbers measure the query, not JVM/session init.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
-    SparkEntry.prepare(spark, sfDir) // ingest-time artifacts (IVF model)
-    // Clear prepare's allocation debt before the FIRST timed query —
-    // time1 gc's between trials, but the first one would otherwise
-    // inherit the k-means fit's garbage as measured GC pauses.
-    System.gc()
     // optional args = query-name prefixes for targeted local timing;
     // the driver passes none and benches everything
-    val wanted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => args.isEmpty || args.exists(n.startsWith) }
-    // Materialize through the noop sink, not count(): count() lets
-    // Catalyst prune every projected column, so a pure-projection query
-    // would be timed as "parquet scan + count" with the expressions it
-    // claims to measure optimized away. The noop DSv2 sink evaluates
-    // every output column and discards rows executor-side.
+    val wanted = SparkEntry.select(args.toSeq)
+    val spark = prepared(sfDir)
     // a failed query reports -1, not its (meaningless) time-to-failure
-    def time1(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+    def time1(name: String, fn: (SparkSession, String) => DataFrame)
+        : (Double, Layers.Record) = {
+      var ok = true
+      val (dt, layers) = Layers.measure(spark) {
+        try noop(fn(spark, sfDir))
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          ok = false }
+      }
       // Collect OUTSIDE the timed window: a heavy query (iterative
       // shuffles, cached graph tables) otherwise leaves its garbage +
       // ContextCleaner debt to whichever query runs next — measured as
       // 10-20× spikes on the victim, not the culprit. Standard
       // per-trial isolation.
       System.gc()
-      if (ok) dt else -1.0
+      (if (ok) dt else -1.0, layers)
     }
-    // Calibration probe: a fixed CPU+shuffle-shaped synthetic whose drift
-    // is a pure host-load signal (the probe never changes round to
-    // round). Round 10 ran it only at the endpoints, which couldn't
-    // explain a 30 s total swing (verdict nit #1); it now ALSO runs
-    // every ProbeEvery timed queries, and each query's seconds are
-    // normalized by its g-position-interpolated local probe — so a
-    // reader (and diff_bench.py) can separate host weather from code
-    // mechanically at per-query granularity.
+    // Calibration probe (`calibration`). Round 10 ran it only at the
+    // endpoints, which couldn't explain a 30 s total swing (verdict nit
+    // #1); it now ALSO runs every ProbeEvery timed queries, and each
+    // query's seconds are normalized by its g-position-interpolated
+    // local probe — so a reader (and diff_bench.py) can separate host
+    // weather from code mechanically at per-query granularity.
     def calibrate(): Double = {
       val t0 = System.nanoTime()
-      spark.range(50000000L).selectExpr("id % 1000 as k", "id as v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .write.format("noop").mode("overwrite").save()
+      noop(calibration(spark))
       System.gc()
       (System.nanoTime() - t0) / 1e9
     }
@@ -137,11 +150,11 @@ object Bench {
     def probeTight(): Unit =
       if (calibSeries.lastOption.forall(_._1 != timed)) probeNow()
     def timeAt(name: String, fn: (SparkSession, String) => DataFrame)
-        : (Double, Int) = {
+        : Trial = {
       // the iterative family is probe-bracketed unconditionally: its
       // norm must divide by a probe at most one query away (round 13)
       if (IterativeFamily(name) || timed % ProbeEvery == 0) probeTight()
-      val t = time1(name, fn)
+      val (t, layers) = time1(name, fn)
       timed += 1
       // The ProbeEvery cadence integrates load ACROSS queries but is
       // blind to a burst INSIDE one long query (the round-11 graph-family
@@ -150,7 +163,7 @@ object Bench {
       // immediately after it — its norm_sec then divides by a probe
       // taken seconds, not minutes, from the measurement.
       if (t > slowProbeSec(name)) probeTight()
-      (t, timed)
+      Trial(t, timed, layers)
     }
     // local probe estimate at a timing's g-position: linear interpolation
     // between the bracketing probe points (clamped at the ends)
@@ -166,54 +179,50 @@ object Bench {
       }
     }
 
-    val firstPass = wanted.map { case (name, fn) =>
-      val (t, g) = timeAt(name, fn); (name, t, g)
-    }
+    val firstPass = wanted.map { case (name, fn) => name -> timeAt(name, fn) }
     // One-off spikes (a full-GC pause, driver-machine contention, a cold
     // page cache) can inflate a single query 10-20×; re-time outliers once
     // and keep the min so the bench reflects the plan, not the weather.
-    val oks = firstPass.map(_._2).filter(_ >= 0).sorted
+    val oks = firstPass.map(_._2.sec).filter(_ >= 0).sorted
     val median = if (oks.isEmpty) 0.0 else oks(oks.length / 2)
     // Any query ≥1s swings with GC/page-cache weather run-to-run, so all
     // of them get a second trial; min-of-2 pins the reported number to the
     // plan's cost rather than the run's. (Sub-second queries are dominated
     // by fixed job-scheduling overhead and stay single-trial.)
-    val trials = firstPass.map { case (name, t1, g1) =>
-      if (t1 > 1.0 || t1 > math.max(2.0, 3 * median)) {
+    val trials = firstPass.map { case (name, t1) =>
+      if (t1.sec > 1.0 || t1.sec > math.max(2.0, 3 * median)) {
         // slow queries get a tight BEFORE-probe too: their second trial
         // is then bracketed by probes seconds apart on both sides
-        if (t1 > slowProbeSec(name)) probeTight()
-        val (t2, g2) = timeAt(name, wanted.toMap.apply(name))
-        (name, t1, g1, t2, g2)
-      } else (name, t1, g1, -1.0, -1)
+        if (t1.sec > slowProbeSec(name)) probeTight()
+        name -> Seq(t1, timeAt(name, wanted.toMap.apply(name)))
+      } else name -> Seq(t1)
     }
     probeNow() // close the series
-    // raw best = min of trials; normalized best = min of the
-    // load-corrected trials (each trial divided by ITS local probe ratio)
-    def norm(t: Double, g: Int): Double =
-      if (t < 0) -1.0 else t * ProbeRefSec / probeAt(g)
-    val results = trials.map { case (name, t1, g1, t2, g2) =>
-      val best = if (t2 >= 0) math.min(t1, t2) else t1
-      val nbest =
-        if (t2 >= 0) math.min(norm(t1, g1), norm(t2, g2)) else norm(t1, g1)
-      (name, best, nbest)
+    // raw best = min of trials, whose layer record bench_full.json
+    // keeps; normalized best = min of the load-corrected trials (each
+    // trial divided by ITS local probe ratio)
+    def norm(t: Trial): Double =
+      if (t.sec < 0) -1.0 else t.sec * ProbeRefSec / probeAt(t.at)
+    val results = trials.map { case (name, ts) =>
+      // a failed trial counts only when no trial succeeded
+      val ok = Some(ts.filter(_.sec >= 0)).filter(_.nonEmpty).getOrElse(ts)
+      (name, ok.minBy(_.sec), ok.map(norm).min)
     }
     val calibBefore = calibSeries.head._2
     val calibAfter = calibSeries.last._2
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2.sec).filter(_ >= 0).sum
     val normTotal = results.map(_._3).filter(_ >= 0).sum
     // Calibration drift and the probe-normalized total go on their own
     // line, before the report lines.
     println(f"""{"calib_sec":{"before":$calibBefore%.3f,"after":$calibAfter%.3f},"norm_value":$normTotal%.3f,"n_queries":${results.size}}""")
-    val lines = reportLines(results.map(r => r._1 -> r._2), total, sfDir)
+    val lines = reportLines(results.map(r => r._1 -> r._2.sec), total, sfDir)
     lines.foreach(println)
-    val line = lines.last
     // Also persist the metric JSON next to the repo: the driver parses a
     // bounded tail of sbt stdout (and sbt may prefix lines with [info]),
     // so the perf signal must not depend on that parsing surviving.
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
-        (line + "\n").getBytes("UTF-8"))
+        (lines.last + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write bench_last.json: ${e.getMessage}") }
     // Durable FULL artifact: every query under its full name with both
@@ -223,10 +232,9 @@ object Bench {
     // stdout-tail capture (BENCH_r07.json lost 129 of 286 entries to it).
     try {
       val ts = java.time.Instant.now().toString
-      val entries = trials.map { case (name, t1, _, t2, _) =>
-        val (_, best, nbest) = results.find(_._1 == name).get
-        f"""    "$name": {"sec": $best%.3f, "norm_sec": $nbest%.3f, "t1": $t1%.3f, "t2": ${
-          if (t2 >= 0) f"$t2%.3f" else "null"}}"""
+      val entries = trials.zip(results).map { case ((name, ts), (_, best, nbest)) =>
+        f"""    "$name": {"sec": ${best.sec}%.3f, "norm_sec": $nbest%.3f, "t1": ${ts.head.sec}%.3f, "t2": ${
+          ts.lift(1).filter(_.sec >= 0).fold("null")(t => f"${t.sec}%.3f")}, "layers": ${best.layers.json}}"""
       }.mkString(",\n")
       val series = calibSeries
         .map { case (g, p) => f"""{"at": $g, "sec": $p%.3f}""" }

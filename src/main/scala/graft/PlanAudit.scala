@@ -18,9 +18,8 @@ object PlanAudit {
     sb.append("# Physical plan audit (generated by graft.PlanAudit)\n\n")
     sb.append("The `scans` column counts executed file-scan nodes per table " +
       "(Spark has no subplan CSE, so a table referenced down two plan " +
-      "branches scans twice — `graft.ScanProbe` verifies against runtime " +
-      "metrics). `table×N` is PRESENT BY DESIGN for true self-joins " +
-      "(pairs, as-of, graph wedges, query-vs-corpus ANN), for " +
+      "branches scans twice). `table×N` is PRESENT BY DESIGN for true " +
+      "self-joins (pairs, as-of, graph wedges, query-vs-corpus ANN), for " +
       "differently-filtered passes whose scans each read a pruned slice " +
       "(funnel steps, timeline halves — pushdown makes N partial scans " +
       "≈ one full one), and for deliberate sweep replays (s15, d14). " +

@@ -37,6 +37,20 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map(q => q.name -> q.fn).toMap
 
+  /** The queries whose names start with one of `prefixes` (all of them
+    * when there are none), sorted by name. Throws, naming them, if any
+    * prefix matches no query: a mistyped name must not silently shrink
+    * a targeted run. */
+  def select(prefixes: Seq[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    val unknown = prefixes.filterNot(p => all.exists(_._1.startsWith(p)))
+    require(unknown.isEmpty,
+      s"no query name starts with: ${unknown.mkString(", ")}")
+    all.filter { case (n, _) =>
+      prefixes.isEmpty || prefixes.exists(n.startsWith) }
+  }
+
   /** The interior of every `QueryDef.checkpointed` query. */
   def interiors: Map[String, QueryDef.Interior] =
     allDefs.flatMap(q => q.interior.map(q.name -> _)).toMap

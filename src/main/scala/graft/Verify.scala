@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,16 +8,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args = query-name prefixes for targeted local runs;
     // the driver passes none and dumps everything
-    val prefixes = args.drop(2)
-    def wanted(name: String) =
-      prefixes.isEmpty || prefixes.exists(name.startsWith)
+    val wanted = SparkEntry.select(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared posture (incl. the cached-plan AQE flag) from Sessions (r15)
     val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
+    wanted.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -34,30 +32,20 @@ object Verify {
           s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}\n")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Jackson escapes backslash, quote and ALL control chars (<0x20) — a
+    // tab or CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness.
+    def writeJson(file: String, m: Iterable[(String, String)]): Unit =
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValue(
+        new java.io.File(s"$outDir/$file"), m.toMap.asJava)
     // Always dump the FULL oracle map, even on a targeted (prefix) run:
     // targeted runs usually refresh a couple of query dumps inside a dir
     // holding a full sweep, and a truncated oracle map silently degrades
     // every other query in that dir to a rows-only check on the next
     // whole-dir check_oracle pass.
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson("oracle_sql.json", SparkEntry.oracleSql)
     // Machine-readable failure summary alongside oracle_sql.json.
-    val errJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    writeJson("errors.json", failed)
     if (failed.nonEmpty)
       println(s"[verify] ${failed.size} queries failed: ${failed.map(_._1).mkString(", ")}")
     spark.stop()

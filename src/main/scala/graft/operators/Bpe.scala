@@ -92,7 +92,7 @@ object Bpe {
     // AQE OFF for the loop (r15, guide §1/§2.4): the types table is a
     // few thousand rows coalesced to 8 partitions, so each round is pure
     // job-dispatch latency — with AQE on, every round's take(1)
-    // materializes 2-3 query stages = 2-3 job submissions (JobProfile:
+    // materializes 2-3 query stages = 2-3 job submissions (layer record:
     // 100 jobs / 1.9 s of task time for a 8.8 s wall). AQE-off runs each
     // round's whole 2-stage plan as ONE job. This is the OPPOSITE call
     // from q96's loop, whose per-round exchanges carry real data and

@@ -134,16 +134,16 @@ object Dedup {
     // Round 0 as a window pass (2 shuffles, no joins): bmin = min doc_id
     // of the bucket. Identical to one propagation round from identity
     // labels, so the loop usually runs no round at all; its labels are
-    // persisted, as they are then the answer.
+    // persisted, as they are then the answer. Its range table is probed,
+    // not cut: in that common case nothing reads it again.
     val labels0 = withDocs(labels(bands.withColumn("bmin",
       min("doc_id").over(Window.partitionBy("band_hash"))))).persist()
-    val start = Rounds.cut(range(labels0), mixed)
-    val (last, _) = Rounds.iterate(start, Int.MaxValue,
+    val start = range(labels0)
+    val (last, _) = Rounds.iterate((start, mixed(start)), Int.MaxValue,
       (_, m) => m.head.getLong(0) == 0, mixed)(
       (r, _) => range(labels(bands.join(r, "band_hash"))))
-    if (last ne start._1) start._1.unpersist()
     // at the fixpoint each bucket's bmin is its members' label
-    val res = (if (last eq start._1) labels0
+    val res = (if (last eq start) labels0
       else withDocs(labels(bands.join(last, "band_hash"))))
       .select(col("doc_id"), col("label").as("cluster_id"))
       .orderBy("doc_id")

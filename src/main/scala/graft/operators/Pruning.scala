@@ -417,7 +417,7 @@ object Pruning {
     * cells (each cell row tests its own type against the four probe
     * weeks), so no probe relation and no second derivation of the cut
     * table exist to re-trigger the scan. The branchy original read
-    * events TEN times (ScanProbe-measured — zone/pairs/probes each
+    * events TEN times (scan.input_rows — zone/pairs/probes each
     * re-derived the cuts; no subplan CSE), while claiming "without
     * scanning a row twice"; now the claim is literally true. At write
     * time the same keys feed repartitionByRange. */

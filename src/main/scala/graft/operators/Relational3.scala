@@ -1210,7 +1210,8 @@ object Relational3 {
       : org.apache.spark.sql.DataFrame = {
     // corpus baseline via a full-frame window over the brand grid — a
     // separate totals branch would re-reference `brands` and re-run
-    // the fact join + aggregate (no subplan CSE, ScanProbe-measured)
+    // the fact join + aggregate (no subplan CSE; scan.input_rows shows
+    // it)
     import org.apache.spark.sql.expressions.Window
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1593,7 +1594,7 @@ object Relational3 {
     * part-level rollup on the same exchange — CACHED, because both the
     * band histogram and the classification join consume it and Spark
     * has no subplan CSE (unpersisted, the histogram branch re-runs the
-    * corpus scan — ScanProbe-measured, the q154/q157 lesson); the
+    * corpus scan — scan.input_rows shows it, the q154/q157 lesson); the
     * ≤64-row band-class table broadcasts back; nothing part-sized
     * sorts globally. Weekly CV runs on exact integer Σq/Σq² (milli-CV
     * via one sqrt at the end). The answer is checkpointed before the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.Bridge
 
 /** Lineage cuts, fixpoint rounds and state freeing for every operator that
@@ -14,8 +14,6 @@ private[graft] object Rounds {
   /** A cut frame and the rows its probe action returned. */
   type Round = (DataFrame, Seq[Row])
 
-  val RowCount: DataFrame => Seq[Row] = _.agg(count(lit(1))).collect().toSeq
-
   /** A probe counting the rows matching `cond` in ONE job (no exchange;
     * an aggregate probe costs three under AQE). */
   def countWhere(cond: Column): DataFrame => Seq[Row] =
@@ -26,13 +24,15 @@ private[graft] object Rounds {
 
   /** Lineage cut: re-root `df` on its RDD (`Bridge.reroot`) and persist
     * it, then run ONE action — `probe` — that both fills the cache and
-    * returns the round's rows. Persist alone leaves the logical plan
-    * nesting, and Catalyst analysis over stacked join+agg rounds blows
-    * up super-linearly; the re-rooted frame is a LogicalRDD leaf, so plan
+    * returns the round's rows (by default its row count, one job).
+    * Persist alone leaves the logical plan nesting, and Catalyst analysis
+    * over stacked join+agg rounds blows up super-linearly; the re-rooted
+    * frame is a LogicalRDD leaf, so plan
     * depth stays constant, and — unlike localCheckpoint, whose blocks
     * only die at a driver GC — the round can be freed deterministically.
     * (On a cluster: checkpoint() to reliable storage, same contract.) */
-  def cut(df: DataFrame, probe: DataFrame => Seq[Row] = RowCount): Round = {
+  def cut(df: DataFrame,
+      probe: DataFrame => Seq[Row] = countWhere(lit(true))): Round = {
     val out = Bridge.reroot(df).persist()
     try (out, probe(out))
     catch { case t: Throwable => out.unpersist(); throw t }
@@ -46,7 +46,7 @@ private[graft] object Rounds {
     * does `start`, unless a round throws: then both are freed. */
   def iterate(start: Round, maxRounds: Int,
       stop: (Seq[Row], Seq[Row]) => Boolean = (_, _) => false,
-      probe: DataFrame => Seq[Row] = RowCount)
+      probe: DataFrame => Seq[Row] = countWhere(lit(true)))
       (step: (DataFrame, Seq[Row]) => DataFrame): Round = {
     var cur = start
     var prev = Seq.empty[Row]

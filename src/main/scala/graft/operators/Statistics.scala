@@ -47,8 +47,9 @@ object Statistics {
     // per-type totals and the PSI rollup via full-frame windows over
     // the types×10 grid, NOT groupBy branches — each branch would
     // re-reference the grid and re-run the corpus aggregate (no
-    // subplan CSE; ScanProbe measured the branchy form scanning
-    // events twice). One scan, one grid exchange, zero joins.
+    // subplan CSE; the branchy form read events twice, as the layer
+    // record's scan.input_rows shows). One scan, one grid exchange, zero
+    // joins.
     import org.apache.spark.sql.expressions.Window
     val byType = Window.partitionBy("event_type")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -575,8 +576,8 @@ object Statistics {
       // min signup time beside every row, then a single grouped agg
       // takes the earliest purchase at-or-after it — the branchy
       // signup/purchase join re-ran the signup aggregate (and its
-      // scan) twice (ScanProbe-measured events×4; now events×2 —
-      // corpus + the 1-column span stat)
+      // scan) twice (events×4 in scan.input_rows of the layer record;
+      // now events×2 — corpus + the 1-column span stat)
       val byUser = Window.partitionBy("user_id")
         .rowsBetween(Window.unboundedPreceding,
           Window.unboundedFollowing)
@@ -808,8 +809,8 @@ object Statistics {
     // marginals via window aggregates over the R×C grid, NOT separate
     // groupBy branches: each branch would re-reference obs, and with no
     // subplan CSE the corpus aggregate (and its scan) re-executes per
-    // marginal — ScanProbe measured the old form reading lineitem FOUR
-    // times. Full-frame windows over ≤ R×C rows cost nothing and keep
+    // marginal — the old form read lineitem FOUR times (scan.input_rows
+    // of the layer record). Full-frame windows over ≤ R×C rows cost nothing and keep
     // the plan linear: one scan, one grid exchange.
     import org.apache.spark.sql.expressions.Window
     val byRf = Window.partitionBy("l_returnflag")

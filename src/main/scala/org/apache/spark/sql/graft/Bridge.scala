@@ -31,6 +31,11 @@ object Bridge {
       qe.analyzed.output.map(_.newInstance()), qe.toRdd.map(_.copy()))(spark))
   }
 
+  /** Wait until every event posted so far has reached the listeners (the
+    * listener bus is private[spark]). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The analyzed logical plan of a DataFrame (for building resolved
     * custom plan nodes against its output attributes). */
   def analyzed(df: org.apache.spark.sql.DataFrame)

@@ -137,4 +137,39 @@ class ObservabilitySpec extends SparkSpec {
         s"per-window reconciliation failed: $counts")
     } finally q.stop()
   }
+
+  // ---- Layers: the per-query layer record Bench and BenchOne write ----
+
+  private def shuffleQuery(): Unit = Bench.noop(spark.range(0, 200000, 1, 4)
+    .selectExpr("id % 97 as k").groupBy("k").count())
+
+  test("layers: a shuffle query's record shows its jobs, shuffle and CPU") {
+    val (wall, r) = Layers.measure(spark)(shuffleQuery())
+    assert(r.jobs >= 1 && r.stages >= 1 && r.tasks >= 4, r)
+    assert(r.failedTasks == 0, r)
+    assert(r.shuffleWriteBytes > 0 && r.shuffleReadBytes > 0, r)
+    assert(r.taskCpuS > 0 && r.taskRunS > 0, r)
+    // the union of task spans lies inside the query's window
+    assert(r.coverageShare > 0 && r.coverageShare <= 1.0, r)
+    assert(r.schedGapS >= 0 && r.schedGapS <= wall + 0.002, s"$wall $r")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(r.json)
+    assert(json.get("dispatch.jobs").asLong == r.jobs)
+    assert(json.get("shuffle.write_bytes").asLong == r.shuffleWriteBytes)
+    assert(json.size == 14, r.json)
+  }
+
+  test("layers: a second measure does not carry the first query's counts") {
+    Layers.measure(spark)(shuffleQuery())
+    val (_, r) = Layers.measure(spark)(
+      spark.sparkContext.parallelize(1 to 10, 1).count(): Unit)
+    assert(r.jobs == 1 && r.stages == 1 && r.tasks == 1, r)
+    assert(r.shuffleWriteBytes == 0 && r.shuffleReadBytes == 0, r)
+  }
+
+  test("layers: the record is complete when measure returns") {
+    val (_, r) = Layers.measure(spark)(shuffleQuery())
+    Thread.sleep(1000)
+    assert(Layers.of(spark.sparkContext).record == r)
+  }
 }
