@@ -19,7 +19,9 @@ Exit 1 if any query regresses >1.5x normalized AND >1.0s absolute —
 the double gate that host noise on sub-second queries cannot trip.
 When both captures carry per-query layer records (graft.Layers), each
 listed query also shows its jobs and task-CPU deltas beside its wall
-delta.
+delta; a jobs delta of one either way prints as `jobs ±1 (first-run
+noise)`, since a query's first run in a session can launch one job
+more than its repeats.
 
 Reproducibility gate (round 13 — q112 in round 12 tripped the gate on
 one noisy capture that the driver's own re-run contradicted): before
@@ -91,7 +93,11 @@ def main():
         a, b = lo[n], ln[n]
         jobs = b["dispatch.jobs"] - a["dispatch.jobs"]
         cpu = b["compute.task_cpu_s"] - a["compute.task_cpu_s"]
-        return f"  jobs {jobs:+d}  task cpu {cpu:+.2f}s"
+        # a query's first run in a session can launch one job more than
+        # its repeats, and a capture may report either trial
+        jobs_s = ("jobs ±1 (first-run noise)" if abs(jobs) == 1
+                  else f"jobs {jobs:+d}")
+        return f"  {jobs_s}  task cpu {cpu:+.2f}s"
 
     ratios = sorted(qn[n] / qo[n] for n in names if qo[n] > 0)
     med = ratios[len(ratios) // 2]

@@ -2028,8 +2028,8 @@ object Statistics {
     * windows over that domain-bounded grid, a 1-row reduce. Cross
     * products stay BIGINT to ~10⁹ rows per arm (decimal beyond — the
     * q132 note). */
-  /** q188's histogram → D/λ/p projection, shared with the ksStream
-    * twin (identical code over identical integer counters ⇒
+  /** q188's histogram → D/λ/p projection, shared with the
+    * mannWhitneyStream twin (identical code over identical integer counters ⇒
     * bit-for-bit — the q149Finish precedent). `h` columns: vm
     * (milli-unit value bin), n1 (purchase count), n2 (click count).
     * Sentinel / other-event bins arriving as (0, 0) cells are inert:

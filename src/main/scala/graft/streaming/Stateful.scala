@@ -20,8 +20,12 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * Scale posture: all state lives in the state store (RocksDB-backed on a
   * real cluster), partitioned by grouping key; watermarks bound state
   * growth; no driver-side state anywhere.
+  *
+  * Serializable because a twin's local helper that calls `halfUp` or
+  * `roundDiv` is lifted to a method of this object, so the state
+  * function that calls it captures the object.
   */
-object Stateful {
+object Stateful extends Serializable {
 
   /** Tumbling/sliding event-time window counts with late-data bound. */
   def windowedCounts(df: DataFrame, tsCol: String, watermark: String,
@@ -195,15 +199,16 @@ object Stateful {
     * event). Machines that use it set `watermarkWakeups = true` so every
     * key re-arms an event-time timeout each batch and the hook fires on
     * watermark-only (no-data) batches too. */
-  def orderedPerKeyBy[K, S, O](df: DataFrame, slack: String, zero: S)(
+  def orderedPerKeyBy[K: TypeTag, S: TypeTag, O: TypeTag](df: DataFrame,
+      slack: String, zero: S)(
       keyOf: Ev => K)(
       apply: (K, Ev, S) => (S, Seq[O]),
       onWatermark: (K, Long, S) => (S, Seq[O]) = (_: K, _: Long, s: S) => (s, Seq.empty[O]),
-      watermarkWakeups: Boolean = false)(
-      implicit stEnc: Encoder[(S, Seq[Ev])], outEnc: Encoder[O],
-      keyEnc: Encoder[K], evEnc: Encoder[Ev]): Dataset[O] = {
-    val ds = evRows(df, slack).as[Ev]
-    ds.groupByKey(keyOf)
+      watermarkWakeups: Boolean = false): Dataset[O] = {
+    implicit val stEnc: Encoder[(S, Seq[Ev])] = ExpressionEncoder[(S, Seq[Ev])]()
+    implicit val outEnc: Encoder[O] = ExpressionEncoder[O]()
+    evRows(df, slack).as[Ev](ExpressionEncoder[Ev]())
+      .groupByKey(keyOf)(ExpressionEncoder[K]())
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (key: K, rows: Iterator[Ev], state: GroupState[(S, Seq[Ev])]) =>
@@ -233,10 +238,8 @@ object Stateful {
   }
 
   /** The user-keyed specialization (CDC/funnel/retention machines). */
-  def orderedPerKey[S, O](df: DataFrame, slack: String, zero: S)(
-      apply: (Long, Ev, S) => (S, Seq[O]))(
-      implicit stEnc: Encoder[(S, Seq[Ev])], outEnc: Encoder[O],
-      keyEnc: Encoder[Long], evEnc: Encoder[Ev]): Dataset[O] =
+  def orderedPerKey[S: TypeTag, O: TypeTag](df: DataFrame, slack: String,
+      zero: S)(apply: (Long, Ev, S) => (S, Seq[O])): Dataset[O] =
     orderedPerKeyBy[Long, S, O](df, slack, zero)(_._1)(apply)
 
   /** The commutative-grid state family: fold each key's rows into an `S`
@@ -291,12 +294,6 @@ object Stateful {
     * contract documented above. Converges to exactly the batch q48
     * closed periods. */
   def scd2StreamOoo(df: DataFrame, slack: String = "2 hours"): Dataset[Scd2Period] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(Option[Scd2State], Seq[Ev])] =
-      Encoders.product[(Option[Scd2State], Seq[Ev])]
-    implicit val outEnc: Encoder[Scd2Period] = Encoders.product[Scd2Period]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKey[Option[Scd2State], Scd2Period](df, slack,
       Option.empty[Scd2State]) { (user, e, st) =>
       val (_, ts, _, et, _) = e
@@ -324,12 +321,6 @@ object Stateful {
       t2: Option[java.sql.Timestamp], t3: Option[java.sql.Timestamp])
 
   def funnelStream(df: DataFrame, slack: String = "2 hours"): Dataset[StepReached] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(FunnelState, Seq[Ev])] =
-      Encoders.product[(FunnelState, Seq[Ev])]
-    implicit val outEnc: Encoder[StepReached] = Encoders.product[StepReached]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKey[FunnelState, StepReached](df, slack,
       FunnelState(None, None, None)) { (user, e, st) =>
       val (_, ts, _, et, _) = e
@@ -356,13 +347,6 @@ object Stateful {
     * the O(1) three-timestamp state is exact. */
   def timedFunnelStream(df: DataFrame, windowUs: Long = 86400000000L,
       slack: String = "2 hours"): Dataset[StepReached] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(FunnelState, Seq[Ev])] =
-      Encoders.product[(FunnelState, Seq[Ev])]
-    implicit val outEnc: Encoder[StepReached] =
-      Encoders.product[StepReached]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKey[FunnelState, StepReached](df, slack,
       FunnelState(None, None, None)) { (user, e, st) =>
       val (_, ts, _, et, _) = e
@@ -396,12 +380,6 @@ object Stateful {
     * the transition matrix matches bit-for-bit. */
   def markovStream(df: DataFrame, slack: String = "2 hours")
       : Dataset[Transition] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(String, Seq[Ev])] =
-      Encoders.product[(String, Seq[Ev])]
-    implicit val outEnc: Encoder[Transition] = Encoders.product[Transition]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKey[String, Transition](df, slack, "") { (user, e, st) =>
       val next = e._4
       (next, if (st.nonEmpty) Seq(Transition(user, st, next)) else Nil)
@@ -425,12 +403,6 @@ object Stateful {
     * exact-µs sums, bit-for-bit with batch. */
   def attributionStream(df: DataFrame, slack: String = "2 hours")
       : Dataset[Attribution] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(AttrState, Seq[Ev])] =
-      Encoders.product[(AttrState, Seq[Ev])]
-    implicit val outEnc: Encoder[Attribution] = Encoders.product[Attribution]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val empty = AttrState("", "", 0L, converted = false)
     orderedPerKey[AttrState, Attribution](df, slack, empty) { (user, e, st) =>
       if (st.converted) (st, Nil)
@@ -464,12 +436,6 @@ object Stateful {
     * Behavioral.q62Rollup — identical all-integer code to batch. */
   def sessionPathStream(df: DataFrame, slack: String = "2 hours")
       : Dataset[SessionPath] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(PathState, Seq[Ev])] =
-      Encoders.product[(PathState, Seq[Ev])]
-    implicit val outEnc: Encoder[SessionPath] = Encoders.product[SessionPath]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val GapUs = 600L * 1000000L
     val empty = PathState(0L, "", "", "", open = false)
     def pathOf(st: PathState): String =
@@ -519,12 +485,6 @@ object Stateful {
     * collisions are measure-zero in real logs (and absent from the
     * testdata — the parity gate asserts exact equality). */
   def asofStream(df: DataFrame, slack: String = "2 hours"): Dataset[AsofMatch] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(AsofState, Seq[Ev])] =
-      Encoders.product[(AsofState, Seq[Ev])]
-    implicit val outEnc: Encoder[AsofMatch] = Encoders.product[AsofMatch]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKey[AsofState, AsofMatch](df, slack, AsofState(-1L, 0L)) {
       (_, e, st) =>
         val (_, ts, eid, et, _) = e
@@ -558,12 +518,6 @@ object Stateful {
     * moment the watermark proves absence, not at end-of-stream. */
   def asofFwdStream(df: DataFrame, tolUs: Long = 86400000000L,
       slack: String = "2 hours"): Dataset[FwdMatch] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(FwdState, Seq[Ev])] =
-      Encoders.product[(FwdState, Seq[Ev])]
-    implicit val outEnc: Encoder[FwdMatch] = Encoders.product[FwdMatch]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKeyBy[Long, FwdState, FwdMatch](df, slack, FwdState(Nil))(_._1)(
       apply = { (_, e, st) =>
         val (_, ts, eid, et, _) = e
@@ -602,13 +556,6 @@ object Stateful {
   final case class RetState(cohortDay: Long, lastDay: Long)
 
   def retentionStream(df: DataFrame, slack: String = "2 hours"): Dataset[CohortActivity] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(RetState, Seq[Ev])] =
-      Encoders.product[(RetState, Seq[Ev])]
-    implicit val outEnc: Encoder[CohortActivity] =
-      Encoders.product[CohortActivity]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     orderedPerKey[RetState, CohortActivity](df, slack,
       RetState(-1L, -1L)) { (user, e, st) =>
       val day = Math.floorDiv(e._2.getTime, 86400000L)
@@ -639,12 +586,6 @@ object Stateful {
       hist: Seq[(Long, Double)])
 
   def anomalyStream(df: DataFrame, slack: String = "2 hours"): Dataset[AnomalyPoint] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(TrailState, Seq[Ev])] =
-      Encoders.product[(TrailState, Seq[Ev])]
-    implicit val outEnc: Encoder[AnomalyPoint] = Encoders.product[AnomalyPoint]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     // close the open bucket: score against the trailing window, in the
     // same fold order and formula as the batch query, then push the
     // closed mean into the trailing history
@@ -703,13 +644,6 @@ object Stateful {
 
   def rollingQuantileStream(df: DataFrame, slack: String = "2 hours")
       : Dataset[QuantilePoint] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(TrailState, Seq[Ev])] =
-      Encoders.product[(TrailState, Seq[Ev])]
-    implicit val outEnc: Encoder[QuantilePoint] =
-      Encoders.product[QuantilePoint]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     def pct(sorted: IndexedSeq[Double], q: Double): Double = {
       val r = (sorted.length - 1) * q
       val lo = r.toInt
@@ -762,12 +696,6 @@ object Stateful {
       prev: Double, hasPrev: Boolean)
 
   def ewmaStream(df: DataFrame, slack: String = "2 hours"): Dataset[EwmaPoint] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(EwmaState, Seq[Ev])] =
-      Encoders.product[(EwmaState, Seq[Ev])]
-    implicit val outEnc: Encoder[EwmaPoint] = Encoders.product[EwmaPoint]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     def close(et: String, st: EwmaState): (EwmaState, Seq[EwmaPoint]) = {
       val mean = st.s / st.n
       val e = if (st.hasPrev) 0.2 * mean + 0.8 * st.prev else mean
@@ -811,12 +739,6 @@ object Stateful {
     * because Spark then guarantees that frame can never arrive. State
     * per doc is O(1) plus the harness's slack-bounded reorder buffer. */
   def vadStream(df: DataFrame, slack: String = "2 hours"): Dataset[VadSegment] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(VadState, Seq[Ev])] =
-      Encoders.product[(VadState, Seq[Ev])]
-    implicit val outEnc: Encoder[VadSegment] = Encoders.product[VadSegment]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val MinFrames = 2L
     def close(doc: Long, st: VadState): Seq[VadSegment] =
       if (st.start >= 0 && st.n >= MinFrames)
@@ -865,12 +787,6 @@ object Stateful {
       deltas: Map[Long, Long])
 
   def peakStream(df: DataFrame, slack: String = "2 hours"): Dataset[PeakDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(PeakState, Seq[Ev])] =
-      Encoders.product[(PeakState, Seq[Ev])]
-    implicit val outEnc: Encoder[PeakDay] = Encoders.product[PeakDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val empty = PeakState(-1L, 0L, Map.empty)
     def add(st: PeakState, m: Long, day: Long): PeakState = {
       val dayEnd = (day + 1L) * 1440L
@@ -927,17 +843,8 @@ object Stateful {
     * (BigDecimal.valueOf + HALF_UP) so streamed integers equal the batch
     * projection bit-for-bit. */
   def twapStream(df: DataFrame, slack: String = "2 hours"): Dataset[TwapDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(TwapState, Seq[Ev])] =
-      Encoders.product[(TwapState, Seq[Ev])]
-    implicit val outEnc: Encoder[TwapDay] = Encoders.product[TwapDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val DayUs = 86400000000L
     val empty = TwapState(-1L, 0L, 0L, 0L, 0L, 0L, 0L)
-    def centsOf(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 100)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
     def settle(st: TwapState, untilUs: Long): TwapState = {
       val w = Math.floorDiv(untilUs - st.lastUs, 1000L)
       st.copy(swv = st.swv + st.lastCents * w, durMs = st.durMs + w)
@@ -954,7 +861,7 @@ object Stateful {
       apply = { (et, e, st) =>
         val t = microsOf(e._2)
         val day = Math.floorDiv(t, DayUs)
-        val cents = centsOf(e._5)
+        val cents = halfUp(e._5 * 100)
         if (st.curDay == -1L) (open(day, t, cents), Nil)
         else if (day == st.curDay) {
           val s2 = settle(st, t)
@@ -1012,6 +919,14 @@ object Stateful {
   private def microsOf(t: java.sql.Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
+  /** Spark's Round(double) to an integer (BigDecimal.valueOf + HALF_UP),
+    * so streamed integers equal the batch projection bit-for-bit. */
+  private def halfUp(x: Double): Long =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+
+  private def roundDiv(s: Long, n: Long): Long = halfUp(s.toDouble / n)
+
   /** Streaming twin of q84's session side (Temporal.q84SessionIntervals):
     * per-user gap sessionization emitting each CLOSED [s0, s1] interval.
     * A session closes when a replayed event breaks the 10-minute gap, or
@@ -1022,13 +937,6 @@ object Stateful {
     * numbering exactly. */
   def sessionIntervalsStream(df: DataFrame, slack: String = "2 hours")
       : Dataset[SessionInterval] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(SessState, Seq[Ev])] =
-      Encoders.product[(SessState, Seq[Ev])]
-    implicit val outEnc: Encoder[SessionInterval] =
-      Encoders.product[SessionInterval]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val GapUs = 600L * 1000000L
     orderedPerKeyBy[Long, SessState, SessionInterval](df, slack,
       SessState(0L, -1L, -1L))(_._1)(
@@ -1074,12 +982,6 @@ object Stateful {
     * count + one open island. */
   def surgeIslandsStream(df: DataFrame, avgByType: Map[String, Double],
       slack: String = "2 hours"): Dataset[SurgeIsland] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(SurgeState, Seq[Ev])] =
-      Encoders.product[(SurgeState, Seq[Ev])]
-    implicit val outEnc: Encoder[SurgeIsland] = Encoders.product[SurgeIsland]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val BktUs = 300000000L
     val BktMs = 300000L
     val empty = SurgeState(-1L, 0L, -1L, -1L, -1L)
@@ -1157,20 +1059,8 @@ object Stateful {
     * emitted integers equal the batch aggregates bit-for-bit. */
   def cusumStream(df: DataFrame, refStats: Map[String, (Long, Long)],
       slack: String = "2 hours"): Dataset[CusumDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(CusumState, Seq[Ev])] =
-      Encoders.product[(CusumState, Seq[Ev])]
-    implicit val outEnc: Encoder[CusumDay] = Encoders.product[CusumDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val DayUs = 86400000000L
     val empty = CusumState(-1L, 0L, 0L, 0L)
-    def milliOf(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 1000)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-    def roundDiv(s: Long, n: Long): Long =
-      java.math.BigDecimal.valueOf(s.toDouble / n)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
     def close(et: String, st: CusumState): (CusumState, Seq[CusumDay]) =
       if (st.curDay < 0L) (st, Nil)
       else {
@@ -1183,7 +1073,7 @@ object Stateful {
     orderedPerKeyBy[String, CusumState, CusumDay](df, slack, empty)(_._4)(
       apply = { (et, e, st) =>
         val day = Math.floorDiv(microsOf(e._2), DayUs)
-        val vm = milliOf(e._5)
+        val vm = halfUp(e._5 * 1000)
         if (st.curDay == -1L)
           (st.copy(curDay = day, sumMilli = vm, n = 1L), Nil)
         else if (day == st.curDay)
@@ -1220,20 +1110,8 @@ object Stateful {
     * rows — identical code to batch. */
   def holtStream(df: DataFrame, slack: String = "2 hours")
       : Dataset[HoltDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(HoltState, Seq[Ev])] =
-      Encoders.product[(HoltState, Seq[Ev])]
-    implicit val outEnc: Encoder[HoltDay] = Encoders.product[HoltDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val DayUs = 86400000000L
     val empty = HoltState(-1L, 0L, 0L, 0.0, 0.0, false)
-    def milliOf(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 1000)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-    def roundDiv(s: Long, n: Long): Long =
-      java.math.BigDecimal.valueOf(s.toDouble / n)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
     def close(et: String, st: HoltState): (HoltState, Seq[HoltDay]) =
       if (st.curDay < 0L) (st, Nil)
       else {
@@ -1253,7 +1131,7 @@ object Stateful {
     orderedPerKeyBy[String, HoltState, HoltDay](df, slack, empty)(_._4)(
       apply = { (et, e, st) =>
         val day = Math.floorDiv(microsOf(e._2), DayUs)
-        val vm = milliOf(e._5)
+        val vm = halfUp(e._5 * 1000)
         if (st.curDay == -1L)
           (st.copy(curDay = day, sumMilli = vm, n = 1L), Nil)
         else if (day == st.curDay)
@@ -1462,13 +1340,6 @@ object Stateful {
   def beaconStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours")
       : Dataset[BeaconRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(BeaconState, Seq[Ev])] =
-      Encoders.product[(BeaconState, Seq[Ev])]
-    implicit val outEnc: Encoder[BeaconRow] = Encoders.product[BeaconRow]
-    implicit val keyEnc: Encoder[(Long, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
     val empty = BeaconState(-1L, 0L, 0L, 0L, done = false)
     orderedPerKeyBy[(Long, String), BeaconState, BeaconRow](df, slack,
       empty)(e => (e._1, e._4))(
@@ -1512,15 +1383,6 @@ object Stateful {
     * then bit-for-bit with batch. */
   def drawdownStream(df: DataFrame, endDayExclusive: Long,
       slack: String = "2 hours"): Dataset[DrawdownRow] = {
-    import org.apache.spark.sql.Encoders
-    implicit val stEnc: Encoder[(DrawdownState, Seq[Ev])] =
-      Encoders.product[(DrawdownState, Seq[Ev])]
-    implicit val outEnc: Encoder[DrawdownRow] = Encoders.product[DrawdownRow]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-    def centsOf(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 100.0)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
     val empty = DrawdownState(0L, Long.MinValue, 0L, 0L, done = false)
     orderedPerKeyBy[Long, DrawdownState, DrawdownRow](df, slack, empty)(
       _._1)(
@@ -1528,7 +1390,8 @@ object Stateful {
         val et = e._4
         if (st.done || (et != "purchase" && et != "error")) (st, Nil)
         else {
-          val delta = if (et == "purchase") centsOf(e._5) else -centsOf(e._5)
+          val cents = halfUp(e._5 * 100.0)
+          val delta = if (et == "purchase") cents else -cents
           val cum = st.cum + delta
           val peak = math.max(st.peak, cum)
           val maxdd = math.max(st.maxdd, peak - cum)
@@ -1617,17 +1480,9 @@ object Stateful {
     * type (≤ slack horizon / day) and removed on emission.
     * transformWithState requires the RocksDB state store provider —
     * the production backend the repo already pins. */
-  class DailyMeanProcessor
-      extends StatefulProcessor[String, Ev, TwsDay] {
+  trait DailyMeanCells extends StatefulProcessor[String, Ev, TwsDay] {
     import org.apache.spark.sql.Encoders
-    @transient private var cells: MapState[Long, (Long, Long)] = _
-
-    private def milliOf(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 1000)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-    private def roundDiv(s: Long, n: Long): Long =
-      java.math.BigDecimal.valueOf(s.toDouble / n)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+    @transient protected var cells: MapState[Long, (Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       cells = getHandle.getMapState[Long, (Long, Long)]("cells",
@@ -1635,16 +1490,18 @@ object Stateful {
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
         TTLConfig.NONE)
 
+    /** Add `n` rows summing to `sumMilli` to `day`'s cell and arm the
+      * day's close timer. */
+    protected def absorb(day: Long, n: Long, sumMilli: Long): Unit = {
+      val cur = if (cells.containsKey(day)) cells.getValue(day) else (0L, 0L)
+      cells.updateValue(day, (cur._1 + n, cur._2 + sumMilli))
+      getHandle.registerTimer((day + 1L) * 86400000L)
+    }
+
     override def handleInputRows(key: String, rows: Iterator[Ev],
         timerValues: TimerValues): Iterator[TwsDay] = {
-      val DayUs = 86400000000L
-      rows.foreach { e =>
-        val day = Math.floorDiv(microsOf(e._2), DayUs)
-        val cur =
-          if (cells.containsKey(day)) cells.getValue(day) else (0L, 0L)
-        cells.updateValue(day, (cur._1 + 1L, cur._2 + milliOf(e._5)))
-        getHandle.registerTimer((day + 1L) * 86400000L)
-      }
+      rows.foreach(e => absorb(Math.floorDiv(microsOf(e._2), 86400000000L),
+        1L, halfUp(e._5 * 1000)))
       Iterator.empty
     }
 
@@ -1658,6 +1515,10 @@ object Stateful {
       } else Iterator.empty
     }
   }
+
+  /** The live daily-mean processor; the warm-started variant below
+    * shares every cell and handler with it. */
+  class DailyMeanProcessor extends DailyMeanCells
 
   /** One warm-start cell for the initial-state variant: a day bucket's
     * accumulated (n, Σmilli) from batch history. */
@@ -1673,54 +1534,10 @@ object Stateful {
     * live days — history and tail emit through one code path. */
   class DailyMeanSeededProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        String, Ev, TwsDay, SeedCell] {
-    import org.apache.spark.sql.Encoders
-    @transient private var cells: MapState[Long, (Long, Long)] = _
-
-    private def milliOf(v: Double): Long =
-      java.math.BigDecimal.valueOf(v * 1000)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-    private def roundDiv(s: Long, n: Long): Long =
-      java.math.BigDecimal.valueOf(s.toDouble / n)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cells = getHandle.getMapState[Long, (Long, Long)]("cells",
-        Encoders.scalaLong,
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
+        String, Ev, TwsDay, SeedCell] with DailyMeanCells {
     override def handleInitialState(key: String, seed: SeedCell,
-        timerValues: TimerValues): Unit = {
-      val cur = if (cells.containsKey(seed.day)) cells.getValue(seed.day)
-        else (0L, 0L)
-      cells.updateValue(seed.day,
-        (cur._1 + seed.n, cur._2 + seed.sum_milli))
-      getHandle.registerTimer((seed.day + 1L) * 86400000L)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Ev],
-        timerValues: TimerValues): Iterator[TwsDay] = {
-      val DayUs = 86400000000L
-      rows.foreach { e =>
-        val day = Math.floorDiv(microsOf(e._2), DayUs)
-        val cur =
-          if (cells.containsKey(day)) cells.getValue(day) else (0L, 0L)
-        cells.updateValue(day, (cur._1 + 1L, cur._2 + milliOf(e._5)))
-        getHandle.registerTimer((day + 1L) * 86400000L)
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[TwsDay] = {
-      val day = expiredTimerInfo.getExpiryTimeInMs / 86400000L - 1L
-      if (cells.containsKey(day)) {
-        val (n, sum) = cells.getValue(day)
-        cells.removeKey(day)
-        Iterator.single(TwsDay(key, day, roundDiv(sum, n)))
-      } else Iterator.empty
-    }
+        timerValues: TimerValues): Unit =
+      absorb(seed.day, seed.n, seed.sum_milli)
   }
 
   /** The warm-started transformWithState daily-mean twin: `seed` is the
@@ -1859,84 +1676,6 @@ object Stateful {
         Some(QuantileCell(key, sk.getN, Math.round(sk.getQuantile(0.5)),
           Math.round(sk.getQuantile(0.9)), Math.round(sk.getQuantile(0.99))))
       })
-  }
-
-  /** KllQuantileProcessor — the sketch-bytes state family on Spark 4's
-    * `transformWithState`, retiring the fMGWS whole-cell rewrite for
-    * the fourth and last state family (dailyMeans, sessionize, twap,
-    * peak are the other three ports). State per event_type is ONE
-    * `ValueState[Array[Byte]]` holding the serialized KLL doubles
-    * sketch; every batch folds its rows into the sketch and re-arms
-    * the single end-of-timeline event-time timer (idempotent — the
-    * timer registry keys on (key, timestamp)), and `handleExpiredTimer`
-    * emits p50/p90/p99 exactly once, then CLEARS the state — the
-    * reclaim-on-close posture the fMGWS variant (kllQuantileStream,
-    * kept as the spec reference) adopted in round 9. Post-timeline
-    * rows are pre-filtered so a cleared key can never re-open. */
-  class KllQuantileProcessor(endDayExclusive: Long)
-      extends StatefulProcessor[String, (String, java.sql.Timestamp,
-        Long), QuantileCell] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.datasketches.memory.Memory
-    @transient private var sketch: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sketch = getHandle.getValueState[Array[Byte]]("sketch",
-        Encoders.BINARY, TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[(String, java.sql.Timestamp, Long)],
-        timerValues: TimerValues): Iterator[QuantileCell] = {
-      val bytes =
-        if (sketch.exists()) sketch.get() else Array.emptyByteArray
-      val sk =
-        if (bytes.isEmpty) KllDoublesSketch.newHeapInstance(200)
-        else KllDoublesSketch.heapify(Memory.wrap(bytes))
-      rows.foreach(r => sk.update(r._3.toDouble))
-      sketch.update(sk.toByteArray)
-      getHandle.registerTimer(endDayExclusive * 86400000L + 2L)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String,
-        timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo)
-        : Iterator[QuantileCell] = {
-      val bytes =
-        if (sketch.exists()) sketch.get() else Array.emptyByteArray
-      sketch.clear()
-      if (bytes.isEmpty) Iterator.empty
-      else {
-        val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
-        if (sk.isEmpty) Iterator.empty
-        else Iterator.single(QuantileCell(key, sk.getN,
-          Math.round(sk.getQuantile(0.5)),
-          Math.round(sk.getQuantile(0.9)),
-          Math.round(sk.getQuantile(0.99))))
-      }
-    }
-  }
-
-  /** The transformWithState KLL quantile twin (see
-    * KllQuantileProcessor). Input: the standard event columns. */
-  def kllQuantileTws(df: DataFrame, endDayExclusive: Long,
-      slack: String = "2 hours"): Dataset[QuantileCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[QuantileCell] =
-      Encoders.product[QuantileCell]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val rowEnc: Encoder[(String, java.sql.Timestamp, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP,
-        Encoders.scalaLong)
-    val rows = df.withWatermark("ts", slack)
-      .filter(expr(
-        s"unix_micros(ts) < ${endDayExclusive * 86400000000L}L"))
-      .select(col("event_type"), col("ts"),
-        expr("cast(round(value * 1000) as bigint)").as("vm"))
-      .as[(String, java.sql.Timestamp, Long)]
-    rows.groupByKey(_._1)
-      .transformWithState(new KllQuantileProcessor(endDayExclusive),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** HllDistinctProcessor — live approximate distinct users per
@@ -2156,194 +1895,6 @@ object Stateful {
         OutputMode.Append())
   }
 
-  /** q100's TWAP machine on Spark 4's `transformWithState` — the
-    * second gap-sensitive twin ported off the fMGWS reorder harness
-    * (after SessionProcessor): twapStream's orderedPerKeyBy must
-    * rewrite its whole pending-row Seq into one state cell every
-    * batch, while state-v2's `ListState.appendValue` absorbs the
-    * out-of-order feed O(1) per row. A `ValueState` carries the open
-    * day's integer accumulators (exact cents, ms-weighted cent-ms
-    * products), and one re-armed event-time timer per key drains rows
-    * strictly below the watermark in (ts, event_id) order: each
-    * drained tick settles the PREVIOUS tick's piecewise-constant
-    * weight; a day closes on drain-order midnight crossover (last
-    * tick runs to day end — the batch lead()-coalesce) or, via the
-    * same timer, when the watermark passes day end with no successor.
-    * Emissions are the same all-integer TwapDay rows as twapStream,
-    * so parity with batch q100 is bit-for-bit. Requires the RocksDB
-    * provider. */
-  class TwapProcessor extends StatefulProcessor[String, Ev, TwapDay] {
-    import org.apache.spark.sql.Encoders
-    private val DayUs = 86400000000L
-    @transient private var buf: ListState[Ev] = _
-    @transient private var open: ValueState[TwapState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[Ev]("buf",
-        Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-          Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble),
-        TTLConfig.NONE)
-      open = getHandle.getValueState[TwapState]("open",
-        Encoders.product[TwapState], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Ev],
-        timerValues: TimerValues): Iterator[TwapDay] = {
-      rows.foreach(buf.appendValue)
-      getHandle.registerTimer(timerValues.getCurrentWatermarkInMs() + 1L)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[TwapDay] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val all = buf.get().toSeq
-      // strict <: the orderedPerKey microsecond-boundary caveat
-      val (ready, hold) = all.partition(_._2.getTime < wm)
-      val out = Seq.newBuilder[TwapDay]
-      def centsOf(v: Double): Long =
-        java.math.BigDecimal.valueOf(v * 100)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-      def settle(st: TwapState, untilUs: Long): TwapState = {
-        val w = Math.floorDiv(untilUs - st.lastUs, 1000L)
-        st.copy(swv = st.swv + st.lastCents * w, durMs = st.durMs + w)
-      }
-      def close(st: TwapState): Unit =
-        if (st.curDay >= 0L) {
-          val fin = settle(st, (st.curDay + 1L) * DayUs)
-          out += TwapDay(key, fin.curDay, fin.n, fin.durMs, fin.swv,
-            fin.scents)
-        }
-      val empty = TwapState(-1L, 0L, 0L, 0L, 0L, 0L, 0L)
-      var st: TwapState = if (open.exists()) open.get() else empty
-      ready.sortBy(e => (e._2.getTime, e._2.getNanos, e._3)).foreach { e =>
-        val t = microsOf(e._2)
-        val day = Math.floorDiv(t, DayUs)
-        val cents = centsOf(e._5)
-        if (st.curDay == -1L)
-          st = TwapState(day, 1L, 0L, cents, 0L, t, cents)
-        else if (day == st.curDay) {
-          val s2 = settle(st, t)
-          st = s2.copy(n = s2.n + 1L, scents = s2.scents + cents,
-            lastUs = t, lastCents = cents)
-        } else {
-          close(st)
-          st = TwapState(day, 1L, 0L, cents, 0L, t, cents)
-        }
-      }
-      // no successor can precede the watermark anymore: once it passes
-      // day end, the open day's last tick runs to midnight and closes
-      if (st.curDay >= 0L && wm >= (st.curDay + 1L) * 86400000L) {
-        close(st)
-        st = empty
-      }
-      buf.clear()
-      hold.foreach(buf.appendValue)
-      open.update(st)
-      if (hold.nonEmpty || st.curDay >= 0L)
-        getHandle.registerTimer(wm + 1L)
-      out.result().iterator
-    }
-  }
-
-  /** The transformWithState TWAP twin (see TwapProcessor). */
-  def twapTws(df: DataFrame, slack: String = "2 hours")
-      : Dataset[TwapDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[TwapDay] = Encoders.product[TwapDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = evRows(df, slack).as[Ev]
-    ds.groupByKey(_._4)
-      .transformWithState(new TwapProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  /** q83's peak-concurrency sweep on Spark 4's `transformWithState` —
-    * the THIRD state-v2 port, and the one where the migration CHANGES
-    * the state shape instead of transplanting it: the fMGWS twin
-    * (peakStream) holds the open day's whole minute→net map in one
-    * state cell behind a reorder buffer, rewriting both every batch.
-    * But the +1/−1 interval deltas COMMUTE within a day, so state-v2
-    * needs no buffer at all: every row folds on arrival as two
-    * granular `MapState.updateValue` point-writes (global minute →
-    * net) plus a per-day session counter, and one event-time timer per
-    * touched day (the DailyMeanProcessor pattern) sweeps that day's
-    * ≤1440 map entries in minute order when the watermark passes day
-    * end — the identical integer cumsum as batch q83, so parity is
-    * bit-for-bit. State per key is bounded by days-in-flight × 1440
-    * minutes, never by event volume. Requires the RocksDB provider. */
-  class PeakProcessor extends StatefulProcessor[String, Ev, PeakDay] {
-    import org.apache.spark.sql.Encoders
-    @transient private var minuteNet: MapState[Long, Long] = _
-    @transient private var sessions: MapState[Long, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      minuteNet = getHandle.getMapState[Long, Long]("minuteNet",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      sessions = getHandle.getMapState[Long, Long]("sessions",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Ev],
-        timerValues: TimerValues): Iterator[PeakDay] = {
-      def bump(k: Long, by: Long): Unit = {
-        val cur =
-          if (minuteNet.containsKey(k)) minuteNet.getValue(k) else 0L
-        minuteNet.updateValue(k, cur + by)
-      }
-      rows.foreach { e =>
-        val m = Math.floorDiv(e._2.getTime, 60000L)
-        val day = Math.floorDiv(m, 1440L)
-        val dayEnd = (day + 1L) * 1440L
-        val end = math.min(m + 30L, dayEnd)
-        bump(m, 1L)
-        if (end < dayEnd) bump(end, -1L)
-        val sc =
-          if (sessions.containsKey(day)) sessions.getValue(day) else 0L
-        sessions.updateValue(day, sc + 1L)
-        getHandle.registerTimer((day + 1L) * 86400000L)
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[PeakDay] = {
-      val day = expiredTimerInfo.getExpiryTimeInMs / 86400000L - 1L
-      if (!sessions.containsKey(day)) Iterator.empty
-      else {
-        val n = sessions.getValue(day)
-        sessions.removeKey(day)
-        val mins = minuteNet.iterator()
-          .filter { case (m, _) => Math.floorDiv(m, 1440L) == day }
-          .toArray.sortBy(_._1)
-        mins.foreach { case (m, _) => minuteNet.removeKey(m) }
-        var cum = 0L; var peak = Long.MinValue
-        mins.foreach { case (_, net) =>
-          cum += net; if (cum > peak) peak = cum
-        }
-        Iterator.single(PeakDay(key, day, n, peak))
-      }
-    }
-  }
-
-  /** The transformWithState peak-concurrency twin (see PeakProcessor). */
-  def peakTws(df: DataFrame, slack: String = "2 hours")
-      : Dataset[PeakDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[PeakDay] = Encoders.product[PeakDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = evRows(df, slack).as[Ev]
-    ds.groupByKey(_._4)
-      .transformWithState(new PeakProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
   /** One user's closed time-to-event observation (q143's `durs` row). */
   final case class DurRow(user_id: Long, t: Long, ev: Long)
   final case class SurvState(minSignupUs: Long, minQualUs: Long,
@@ -2505,6 +2056,14 @@ object Stateful {
     * aggregate treats as exact zeros; rows past `endDay` (harness
     * sentinels) form no bin at all (see closeOnce).
     *
+    * The same histogram is q188's twin, the LIVE two-sample
+    * Kolmogorov–Smirnov monitor: the KS supremum folds over exactly
+    * these counters, so one state store serves both the location test
+    * (rank-sum) and the whole-distribution test (KS). The D/λ/p
+    * projection runs via operators.Statistics.q188Finish — identical
+    * code to batch; (0, 0) sentinel bins are inert (see q188Finish's
+    * scaladoc).
+    *
     * Input columns: vm (BIGINT milli-value bin), grp (1 purchase /
     * 0 click / anything else ignored), ts. */
   def mannWhitneyStream(df: DataFrame, endDay: Long,
@@ -2518,24 +2077,6 @@ object Stateful {
         else s
       },
       (key, s) => Some(MwBin(key, s.n1, s.n2)))
-
-  /** Streaming twin of q188's histogram pass — the LIVE two-sample
-    * Kolmogorov–Smirnov monitor. The KS supremum folds over EXACTLY
-    * the state mannWhitneyStream already keeps: two commutative
-    * counters per milli-unit value bin, closed once when the watermark
-    * passes `endDay`. One state store therefore serves BOTH the
-    * location test (rank-sum) and the whole-distribution test (KS) —
-    * at 100 TB the ingest pays for the histogram once and every
-    * readout is a projection over the emitted domain-bounded grid.
-    * The D/λ/p projection runs via operators.Statistics.q188Finish —
-    * identical code to batch, so the twin is bit-for-bit; (0, 0)
-    * sentinel bins are inert (see q188Finish's scaladoc).
-    *
-    * Input columns: vm (BIGINT milli-value bin), grp (1 purchase /
-    * 0 click / anything else ignored), ts. */
-  def ksStream(df: DataFrame, endDay: Long,
-      slack: String = "2 hours"): Dataset[MwBin] =
-    mannWhitneyStream(df, endDay, slack)
 
   /** One closed order's SLA observation (q131's `j` table). */
   final case class SlaGap(o_orderpriority: String, gap_days: Long)

@@ -248,37 +248,10 @@ class OrderedReplaySpec extends SparkSpec {
         s"batch-only: ${batch.toSet.diff(streamed.toSet).take(3)}")
   }
 
-  test("transformWithState peak: MapState minute deltas == batch q83") {
-    val s = spark
-    val prev = s.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // no reorder buffer: the commutative +1/-1 deltas fold on arrival
-      // as granular MapState point-writes; per-day timers sweep
-      val out = runStream("tws_peak")(df => Stateful.peakTws(df))
-      val streamed = out.filter("event_type <> 'zz_sentinel'").collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3))).toMap
-      val batch = SparkEntry.queries("q83_peak_concurrency")(s, sf)
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3))).toMap
-      assert(streamed.nonEmpty)
-      assert(streamed == batch,
-        s"stream-only: ${streamed.toSet.diff(batch.toSet).take(3)}; " +
-          s"batch-only: ${batch.toSet.diff(streamed.toSet).take(3)}")
-    } finally {
-      if (prev.isEmpty)
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      else s.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    }
-  }
-
-  test("transformWithState peak survives a checkpoint restart") {
-    // MapState point-writes + per-day timers must round-trip RocksDB:
-    // a restart that drops map entries understates the peak, one that
-    // replays them double-counts the deltas
+  test("streaming peak survives a checkpoint restart (RocksDB)") {
+    // the open day's minute→net map and the reorder buffer must
+    // round-trip RocksDB: a restart that drops map entries understates
+    // the peak, one that replays them double-counts the deltas
     val s = spark
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -295,7 +268,7 @@ class OrderedReplaySpec extends SparkSpec {
         .newKeySet[(String, Long, Long, Long)]()
       val input = MemoryStream[Stateful.Ev]
       def start() =
-        Stateful.peakTws(
+        Stateful.peakStream(
             input.toDS().toDF("user_id", "ts", "event_id", "event_type",
               "value"))
           .writeStream
@@ -330,7 +303,7 @@ class OrderedReplaySpec extends SparkSpec {
           (r.getLong(2), r.getLong(3))).toMap
       assert(streamed.nonEmpty)
       assert(streamed == batch,
-        s"restart broke PeakProcessor recovery: stream-only " +
+        s"restart broke peakStream recovery: stream-only " +
           s"${streamed.toSet.diff(batch.toSet).take(3)}; batch-only " +
           s"${batch.toSet.diff(streamed.toSet).take(3)}")
     } finally {
@@ -1808,47 +1781,9 @@ class OrderedReplaySpec extends SparkSpec {
     }
   }
 
-  test("transformWithState twap: ListState buffer == batch q100") {
-    val s = spark
-    import graft.functions.Rounding.r6
-    val prev = s.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val out = runStream("tws_twap")(df => Stateful.twapTws(df))
-      // identical final-division expressions over the streamed integers
-      // as the batch query applies to its aggregates — bit-for-bit
-      val streamed = out.filter("event_type <> 'zz_sentinel'")
-        .select(col("event_type"), col("day"), col("n_events"),
-          col("dur_ms"),
-          r6(col("swv").cast("double") / col("dur_ms") / 100).as("twap"),
-          r6(col("scents").cast("double") / col("n_events") / 100)
-            .as("mean_value"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))
-        .toMap
-      val batch = SparkEntry.queries("q100_twap")(s, sf)
-        .withColumn("day",
-          datediff(col("day"), lit("1970-01-01")).cast("long"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))
-        .toMap
-      assert(streamed.nonEmpty)
-      assert(streamed == batch,
-        s"stream-only: ${streamed.toSet.diff(batch.toSet).take(3)}; " +
-          s"batch-only: ${batch.toSet.diff(streamed.toSet).take(3)}")
-    } finally {
-      if (prev.isEmpty)
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      else s.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    }
-  }
-
-  test("transformWithState twap survives a checkpoint restart") {
-    // the TwapProcessor recovery pin: the ListState buffer, the open
-    // day's integer accumulators, and the re-armed timer must all
+  test("streaming twap survives a checkpoint restart (RocksDB)") {
+    // the twapStream recovery pin: the reorder buffer, the open day's
+    // integer accumulators, and the re-armed timeout must all
     // round-trip RocksDB — a restart that drops buffered ticks would
     // mis-weight the day, one that replays them twice would inflate n
     val s = spark
@@ -1868,7 +1803,7 @@ class OrderedReplaySpec extends SparkSpec {
         .newKeySet[(String, Long, Long, Long, Long, Long)]()
       val input = MemoryStream[Stateful.Ev]
       def start() =
-        Stateful.twapTws(
+        Stateful.twapStream(
             input.toDS().toDF("user_id", "ts", "event_id", "event_type",
               "value"))
           .writeStream
@@ -1917,7 +1852,7 @@ class OrderedReplaySpec extends SparkSpec {
           (r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))
         .toMap
       assert(streamed == batch,
-        s"restart broke TwapProcessor recovery: stream-only " +
+        s"restart broke twapStream recovery: stream-only " +
           s"${streamed.toSet.diff(batch.toSet).take(3)}; batch-only " +
           s"${batch.toSet.diff(streamed.toSet).take(3)}")
     } finally {
@@ -2075,51 +2010,11 @@ class OrderedReplaySpec extends SparkSpec {
     }
   }
 
-  test("transformWithState KLL: sketch-bytes ValueState hits target ranks") {
-    // the sketch-bytes family's state-v2 port: one ValueState[Array[Byte]]
-    // per type + an idempotent end-of-timeline timer; same rank-error
-    // gate as the fMGWS twin (kept as the spec reference)
-    val s = spark
-    val prev = s.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val endDay = Tables.events(s, sf)
-        .select(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(max("day")).head.getLong(0)
-      val out = runStream("tws_kll")(df =>
-        Stateful.kllQuantileTws(df, endDay + 1L))
-      val est = out.collect()
-        .map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      assert(est.nonEmpty)
-      val exact = Tables.events(s, sf)
-        .select(col("event_type"),
-          expr("cast(round(value * 1000) as bigint)").as("vm"))
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sorted }
-      assert(est.keySet == exact.keySet, "type sets diverge")
-      est.foreach { case (t, (n, p50, p90, p99)) =>
-        val vals = exact(t)
-        assert(n == vals.length.toLong, s"$t n=$n != ${vals.length}")
-        for ((q, e) <- Seq(0.5 -> p50, 0.9 -> p90, 0.99 -> p99)) {
-          val rank = vals.count(_ <= e).toDouble / vals.length
-          assert(math.abs(rank - q) <= 0.03,
-            s"$t p$q estimate $e sits at true rank $rank")
-        }
-      }
-    } finally {
-      if (prev.isEmpty)
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      else s.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    }
-  }
-
-  test("transformWithState KLL survives a checkpoint restart") {
-    // sketch bytes in a ValueState must round-trip RocksDB across a
-    // restart — n is exact, so dropped bytes or replayed rows are both
-    // caught by the n equality alone (the kllQuantileStream pin,
-    // re-proven on the state-v2 store)
+  test("streaming KLL survives a checkpoint restart (RocksDB)") {
+    // sketch bytes as state must round-trip RocksDB across a restart —
+    // n is exact, so dropped bytes or replayed rows are both caught by
+    // the n equality alone (the kllQuantileStream pin, re-proven on the
+    // RocksDB store)
     val s = spark
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -2139,7 +2034,7 @@ class OrderedReplaySpec extends SparkSpec {
         .newKeySet[(String, Long, Long, Long, Long)]()
       val input = MemoryStream[Stateful.Ev]
       def start() =
-        Stateful.kllQuantileTws(
+        Stateful.kllQuantileStream(
             input.toDS().toDF("user_id", "ts", "event_id", "event_type",
               "value"), endDay + 1L)
           .writeStream
@@ -2485,7 +2380,7 @@ class OrderedReplaySpec extends SparkSpec {
       .select(expr("unix_micros(ts) div 86400000000L").as("day"))
       .agg(max("day")).head.getLong(0)
     val out = runStream("ooo_ks")(df =>
-      Stateful.ksStream(df.select(
+      Stateful.mannWhitneyStream(df.select(
         expr("cast(round(value * 1000) as bigint)").as("vm"),
         when(col("event_type") === "purchase", 1)
           .when(col("event_type") === "click", 0)
