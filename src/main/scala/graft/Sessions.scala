@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * (false) — so plan pins and dumps exercised a different cached-plan AQE
   * posture than the verified/benched path (ADVICE r14). Every builder now
   * starts here; surfaces add only their own extras (Bench: streaming
-  * progress cap; tests: appName).
+  * progress cap; tests: appName). That includes the local filesystem:
+  * Hadoop caches one `file:` FileSystem per JVM, so a session built
+  * elsewhere, or a FileSystem made before the session, keeps Hadoop's.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -28,4 +30,11 @@ object Sessions {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.ui.enabled", "false")
+      // `file:` through graft.io's fork-free local filesystem: without
+      // libhadoop, Hadoop's own launches chmod and readlink processes
+      // for the files and renames of every epoch commit
+      .config("spark.hadoop.fs.file.impl",
+        classOf[io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[io.ForkFreeLocalFs].getName)
 }

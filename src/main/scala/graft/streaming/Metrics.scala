@@ -19,6 +19,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
   *   - `dst.send`       → sink numOutputRows + commitOffsets ms
   *   - `full`           → triggerExecution ms
   *
+  * Beside `dst.send` each epoch also carries its state commit, the other
+  * half of the durable write that acks it: the summed `commitTimeMs` of
+  * the state operators, and the part of it RocksDB spent syncing
+  * checkpoint files (0 when the provider does not report it).
+  *
   * Spans are appended to an in-memory ring (inspectable by tests /
   * dashboards) and logged at INFO. At 100 TB this is driver-side
   * metadata only — a few hundred bytes per epoch, never touching the
@@ -50,13 +55,18 @@ class ProcessorMetrics(maxSpans: Int = 4096) extends StreamingQueryListener {
       handlerHandleMs = dur("addBatch"),
       dstSendRows = Option(p.sink).map(_.numOutputRows).getOrElse(-1L),
       dstSendMs = dur("commitOffsets") + dur("walCommit"),
-      fullMs = dur("triggerExecution"))
+      fullMs = dur("triggerExecution"),
+      stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum,
+      stateFileSyncMs = p.stateOperators.map(o => Option(o.customMetrics
+        .get("rocksdbCommitFileSyncLatencyMs")).fold(0L)(_.longValue)).sum)
     ring.add(span)
     while (ring.size() > maxSpans) ring.poll()
     log.info(s"graft.processor.full name=${span.queryName} batch=${span.batchId} " +
       s"ms=${span.fullMs} | src.recv rows=${span.srcRecvRows} ms=${span.srcRecvMs} " +
       s"| handler.handle ms=${span.handlerHandleMs} " +
-      s"| dst.send rows=${span.dstSendRows} ms=${span.dstSendMs}")
+      s"| dst.send rows=${span.dstSendRows} ms=${span.dstSendMs} " +
+      s"| state.commit ms=${span.stateCommitMs} " +
+      s"file_sync_ms=${span.stateFileSyncMs}")
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[ProcessorMetrics])
@@ -112,7 +122,9 @@ object ProcessorMetrics {
       handlerHandleMs: Long,
       dstSendRows: Long,
       dstSendMs: Long,
-      fullMs: Long)
+      fullMs: Long,
+      stateCommitMs: Long,
+      stateFileSyncMs: Long)
 
   /** Attach a fresh listener to the session (Metrics(true) option,
     * processor.go:54-58); returns it for inspection. */

@@ -288,6 +288,14 @@ object Stateful extends Serializable {
       }
   }
 
+  /** Encoders derived from TypeTags, as the two combinators above derive
+    * theirs: the transformWithState twins import `encoder` for their
+    * row, key, output and seed encoders, and SessionProcessor builds its
+    * state variables' with it. */
+  private object Derived {
+    implicit def encoder[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
+  }
+
   /** Out-of-order-tolerant streaming SCD2: same output as `scd2Stream`
     * but the feed may be shuffled within `slack` of true event order —
     * the watermark-bounded buffering variant of the CDC ordering
@@ -1545,15 +1553,8 @@ object Stateful extends Serializable {
     * rows. */
   def dailyMeansTwsSeeded(df: DataFrame, seed: Dataset[SeedCell],
       slack: String = "2 hours"): Dataset[TwsDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[TwsDay] = Encoders.product[TwsDay]
-    implicit val seedEnc: Encoder[SeedCell] = Encoders.product[SeedCell]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = evRows(df, slack).as[Ev]
-    ds.groupByKey(_._4)
+    import Derived.encoder
+    evRows(df, slack).as[Ev].groupByKey(_._4)
       .transformWithState(new DailyMeanSeededProcessor,
         TimeMode.EventTime(), OutputMode.Append(),
         seed.groupByKey(_.event_type))
@@ -1563,14 +1564,8 @@ object Stateful extends Serializable {
     * Input: the standard event columns. */
   def dailyMeansTws(df: DataFrame, slack: String = "2 hours")
       : Dataset[TwsDay] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[TwsDay] = Encoders.product[TwsDay]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val evEnc: Encoder[Ev] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = evRows(df, slack).as[Ev]
-    ds.groupByKey(_._4)
+    import Derived.encoder
+    evRows(df, slack).as[Ev].groupByKey(_._4)
       .transformWithState(new DailyMeanProcessor, TimeMode.EventTime(),
         OutputMode.Append())
   }
@@ -1737,13 +1732,7 @@ object Stateful extends Serializable {
     * HllDistinctProcessor). Input: the standard event columns. */
   def hllDistinctTws(df: DataFrame, slack: String = "2 hours")
       : Dataset[DistinctCell] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[DistinctCell] =
-      Encoders.product[DistinctCell]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    implicit val rowEnc: Encoder[(String, java.sql.Timestamp, Long)] =
-      Encoders.tuple(Encoders.STRING, Encoders.TIMESTAMP,
-        Encoders.scalaLong)
+    import Derived.encoder
     val rows = df.withWatermark("ts", slack)
       .select(col("event_type"), col("ts"), col("user_id"))
       .as[(String, java.sql.Timestamp, Long)]
@@ -1819,18 +1808,15 @@ object Stateful extends Serializable {
     * q37 is bit-for-bit. Requires the RocksDB provider. */
   class SessionProcessor
       extends StatefulProcessor[Long, Ev, TwsSession] {
-    import org.apache.spark.sql.Encoders
     private val GapUs = 600L * 1000000L
     @transient private var buf: ListState[Ev] = _
     @transient private var open: ValueState[TwsSessState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[Ev]("buf",
-        Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-          Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble),
+      buf = getHandle.getListState[Ev]("buf", Derived.encoder[Ev],
         TTLConfig.NONE)
       open = getHandle.getValueState[TwsSessState]("open",
-        Encoders.product[TwsSessState], TTLConfig.NONE)
+        Derived.encoder[TwsSessState], TTLConfig.NONE)
     }
 
     override def handleInputRows(key: Long, rows: Iterator[Ev],
@@ -1883,14 +1869,8 @@ object Stateful extends Serializable {
   /** The transformWithState sessionize twin (see SessionProcessor). */
   def sessionizeTws(df: DataFrame, slack: String = "2 hours")
       : Dataset[TwsSession] = {
-    import org.apache.spark.sql.Encoders
-    implicit val outEnc: Encoder[TwsSession] = Encoders.product[TwsSession]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val evEnc: Encoder[Ev] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
-        Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble)
-    val ds = evRows(df, slack).as[Ev]
-    ds.groupByKey(_._1)
+    import Derived.encoder
+    evRows(df, slack).as[Ev].groupByKey(_._1)
       .transformWithState(new SessionProcessor, TimeMode.EventTime(),
         OutputMode.Append())
   }

@@ -251,7 +251,42 @@ class SinkConformanceSpec extends SparkSpec {
       assert(mine.nonEmpty, "listener observed progress for the query")
       assert(mine.map(_.srcRecvRows).sum == 50, "src.recv rows accounted")
       assert(mine.forall(_.fullMs >= 0) && mine.exists(_.handlerHandleMs >= 0))
+      assert(mine.forall(sp => sp.stateCommitMs >= 0 && sp.stateFileSyncMs >= 0),
+        "state commit spans are never negative (0 without state)")
     } finally s.streams.removeListener(m)
+  }
+
+  test("processor metrics carry the state commit of a RocksDB stateful query") {
+    val s = spark
+    import s.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val m = ProcessorMetrics.attach(s)
+    try {
+      val input = MemoryStream[Int]
+      val q = input.toDF().groupBy($"value" % 7).count()
+        .writeStream.format("noop").outputMode("update")
+        .queryName("metrics_state").option("checkpointLocation",
+          tmpDir("metrics_state_ck")).start()
+      (0 until 3).foreach { i =>
+        input.addData(i * 50 until (i + 1) * 50: _*)
+        q.processAllAvailable()
+      }
+      q.stop()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      def mine = m.spans.filter(_.queryName == "metrics_state")
+      while (mine.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(mine.size >= 3, "listener observed every epoch")
+      assert(mine.map(_.stateCommitMs).sum > 0,
+        "RocksDB state commits report their time")
+      assert(mine.forall(_.stateFileSyncMs >= 0))
+    } finally {
+      s.streams.removeListener(m)
+      prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    }
   }
 
   test("batch DSv2 write: two-phase commit publishes all rows atomically") {

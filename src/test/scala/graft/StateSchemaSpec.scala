@@ -11,7 +11,10 @@ import graft.streaming.Stateful
   * derives its key and state encoders strands existing checkpoints even
   * when every emitted row stays the same. One twin per key shape:
   * scd2StreamOoo (`Long`, the benchmark's reorder-buffer twin),
-  * cusumStream (`String`) and beaconStream (`(Long, String)`). */
+  * cusumStream (`String`) and beaconStream (`(Long, String)`). The
+  * transformWithState twins keep one schema per state variable; the
+  * daily-means MapState and the sessionize ListState and ValueState pin
+  * the encoders those twins derive. */
 class StateSchemaSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -28,10 +31,9 @@ class StateSchemaSpec extends SparkSpec {
     case other => other.simpleString
   }
 
-  /** Run `op` over the sf0.001 event log with a checkpoint and read its
-    * one operator's state (key, value) schemas back through Spark's
-    * `statestore` data source. */
-  private def stateSchemas(op: DataFrame => Dataset[_]): (String, String) = {
+  /** Run `op` over the sf0.001 event log with a checkpoint; returns the
+    * checkpoint's path. */
+  private def checkpointOf(op: DataFrame => Dataset[_]): String = {
     val s = spark
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -51,13 +53,39 @@ class StateSchemaSpec extends SparkSpec {
     input.addData(events.toSeq)
     q.processAllAvailable()
     q.stop()
-    val st = s.read.format("statestore").load(ck).schema
+    ck
+  }
+
+  /** `op`'s one operator's state (key, value) schemas, read back through
+    * Spark's `statestore` data source. */
+  private def stateSchemas(op: DataFrame => Dataset[_]): (String, String) = {
+    val st = spark.read.format("statestore").load(checkpointOf(op)).schema
     (render(st("key").dataType), render(st("value").dataType))
   }
 
-  /** The reorder buffer every twin carries beside its machine state. */
-  private val buffer =
-    "[{_1:bigint!,_2:timestamp,_3:bigint!,_4:string,_5:double!}]"
+  /** A transformWithState twin's state schema per state variable, as the
+    * `statestore` data source reads each back (RocksDB, the provider
+    * transformWithState requires). */
+  private def twsSchemas(op: DataFrame => Dataset[_], vars: String*)
+      : Seq[String] = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
+      "RocksDBStateStoreProvider")
+    try {
+      val ck = checkpointOf(op)
+      vars.map { v =>
+        val st = spark.read.format("statestore").option("stateVarName", v)
+          .load(ck).schema
+        render(StructType(st.filterNot(_.name == "partition_id")))
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** One `Stateful.Ev` row, and the reorder buffer of them every
+    * orderedPerKeyBy twin carries beside its machine state. */
+  private val ev = "{_1:bigint!,_2:timestamp,_3:bigint!,_4:string,_5:double!}"
+  private val buffer = s"[$ev]"
 
   test("orderedPerKeyBy state schemas: Long, String and (Long, String) keys") {
     assert(stateSchemas(df => Stateful.scd2StreamOoo(df)) == (
@@ -72,5 +100,15 @@ class StateSchemaSpec extends SparkSpec {
       "{_1:bigint!,_2:string}",
       "{groupState:{_1:{lastUs:bigint!,n:bigint!,sg:bigint!,sg2:bigint!," +
         s"done:boolean!},_2:$buffer},timeoutTimestamp:bigint!}"))
+  }
+
+  test("transformWithState state schemas: dailyMeansTws and sessionizeTws") {
+    assert(twsSchemas(df => Stateful.dailyMeansTws(df), "cells") ==
+      Seq("{key:{value:string},user_map_key:{value:bigint!}," +
+        "user_map_value:{_1:bigint!,_2:bigint!}}"))
+    assert(twsSchemas(df => Stateful.sessionizeTws(df), "buf", "open") ==
+      Seq(s"{key:{value:bigint!},list_element:$ev}",
+        "{key:{value:bigint!},value:{seq:bigint!,lastUs:bigint!," +
+          "nEvents:bigint!,firstEvent:bigint!,active:boolean!}}"))
   }
 }
