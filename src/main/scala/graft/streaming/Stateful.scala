@@ -127,24 +127,14 @@ object Stateful extends Serializable {
       }
   }
 
-  /** Streaming SCD2: the incremental twin of the batch history build
-    * (operators/Temporal.q48Scd2). Per-key state carries the one OPEN
-    * period; an attribute change closes it (emitted downstream, append
-    * mode) and opens the next. State is O(1) per key — the closed
-    * history lives in the sink, not the state store.
-    *
-    * Ordering contract: rows are applied in (ts, event_id) order within
-    * each micro-batch; cross-batch order must be non-decreasing per key
-    * (the CDC-source contract — a log-sequence-ordered feed). Handling
-    * arbitrary out-of-order arrival needs watermark-bounded buffering in
-    * the state, which trades state size for reordering slack. */
+  /** scd2StreamOoo's open period per user, and the closed period it
+    * emits. */
   final case class Scd2State(eventType: String, validFrom: java.sql.Timestamp,
       version: Int, nEvents: Long)
   final case class Scd2Period(user_id: Long, event_type: String,
       valid_from: java.sql.Timestamp, valid_to: java.sql.Timestamp,
       version: Int, n_events: Long)
 
-  /** Input rows: (user_id, ts, event_id, event_type). */
   /** Streaming twin of the batch OHLC resample (Temporal.q56Ohlc):
     * watermarked 6-hour tumbling candles per event_type. Open/close are
     * min_by/max_by on the (ts, event_id) struct — a declarative
@@ -175,7 +165,7 @@ object Stateful extends Serializable {
   // sub-watermark input), so draining `pending` up to the watermark in
   // (ts, event_id) order replays the exact batch order incrementally.
   // State per key = machine state + the O(slack-horizon) pending buffer —
-  // the size-for-reordering-slack trade documented on scd2Stream.
+  // the size-for-reordering-slack trade documented on scd2StreamOoo.
   // ------------------------------------------------------------------
 
   /** One event-log row: (user_id, ts, event_id, event_type, value). */
@@ -192,19 +182,18 @@ object Stateful extends Serializable {
     * grouping key from the row (user for the CDC machines, event_type
     * for the series machines).
     *
-    * `onWatermark(key, wmMs, state)` runs after each drain with the
-    * current watermark — the hook for machines whose state must FLUSH on
-    * time passing alone (a bucket whose end the watermark crossed can
-    * never see another row, so it is safe to close without a successor
-    * event). Machines that use it set `watermarkWakeups = true` so every
-    * key re-arms an event-time timeout each batch and the hook fires on
-    * watermark-only (no-data) batches too. */
+    * `onWatermark(key, wmMs, state)`, when given, runs after each drain
+    * with the current watermark — the hook for machines whose state must
+    * FLUSH on time passing alone (a bucket whose end the watermark
+    * crossed can never see another row, so it is safe to close without
+    * a successor event). A key re-arms an event-time timeout while its
+    * buffer holds rows, and on every batch when the hook is given, so
+    * the hook fires on watermark-only (no-data) batches too. */
   def orderedPerKeyBy[K: TypeTag, S: TypeTag, O: TypeTag](df: DataFrame,
       slack: String, zero: S)(
       keyOf: Ev => K)(
       apply: (K, Ev, S) => (S, Seq[O]),
-      onWatermark: (K, Long, S) => (S, Seq[O]) = (_: K, _: Long, s: S) => (s, Seq.empty[O]),
-      watermarkWakeups: Boolean = false): Dataset[O] = {
+      onWatermark: Option[(K, Long, S) => (S, Seq[O])] = None): Dataset[O] = {
     implicit val stEnc: Encoder[(S, Seq[Ev])] = ExpressionEncoder[(S, Seq[Ev])]()
     implicit val outEnc: Encoder[O] = ExpressionEncoder[O]()
     evRows(df, slack).as[Ev](ExpressionEncoder[Ev]())
@@ -226,12 +215,13 @@ object Stateful extends Serializable {
           ready.sortBy(e => (e._2.getTime, e._2.getNanos, e._3)).foreach { e =>
             val (s2, os) = apply(key, e, s); s = s2; out ++= os
           }
-          val (s3, extra) = onWatermark(key, wm, s)
-          out ++= extra
+          val s3 = onWatermark.fold(s) { hook =>
+            val (s4, extra) = hook(key, wm, s); out ++= extra; s4
+          }
           state.update((s3, hold))
           // re-arm so the next watermark advance drains the buffer even
           // if no new rows arrive for this key (timeouts clear per call)
-          if (hold.nonEmpty || watermarkWakeups)
+          if (hold.nonEmpty || onWatermark.isDefined)
             state.setTimeoutTimestamp(wm + 1)
           out.result().iterator
       }
@@ -241,6 +231,33 @@ object Stateful extends Serializable {
   def orderedPerKey[S: TypeTag, O: TypeTag](df: DataFrame, slack: String,
       zero: S)(apply: (Long, Ev, S) => (S, Seq[O])): Dataset[O] =
     orderedPerKeyBy[Long, S, O](df, slack, zero)(_._1)(apply)
+
+  /** The series-bucket family over `orderedPerKeyBy`, keyed by
+    * event_type: each row falls in bucket `floorDiv(ts ms, bucketMs)`,
+    * and `add(state, bucket, row)` folds it into the open bucket, or
+    * opens one when `bucketOf(state)` is −1. `close(key, state)` emits
+    * the open bucket and returns the state with none open (−1), keeping
+    * whatever the twin carries across buckets. A bucket closes when
+    * replay crosses into a later one, or when the watermark reaches its
+    * end: no row of it can arrive after that. */
+  private def perBucket[S: TypeTag, O: TypeTag](df: DataFrame, slack: String,
+      bucketMs: Long, zero: S)(bucketOf: S => Long)(
+      add: (S, Long, Ev) => S, close: (String, S) => (S, Seq[O]))
+      : Dataset[O] =
+    orderedPerKeyBy[String, S, O](df, slack, zero)(_._4)(
+      apply = { (et, e, st) =>
+        val b = Math.floorDiv(e._2.getTime, bucketMs)
+        val cur = bucketOf(st)
+        if (cur >= 0L && b != cur) {
+          val (closed, out) = close(et, st)
+          (add(closed, b, e), out)
+        } else (add(st, b, e), Nil)
+      },
+      onWatermark = Some { (et, wm, st) =>
+        val cur = bucketOf(st)
+        if (cur >= 0L && wm >= (cur + 1L) * bucketMs) close(et, st)
+        else (st, Nil)
+      })
 
   /** The commutative-grid state family: fold each key's rows into an `S`
     * and emit the key's output once, when the watermark passes the key's
@@ -252,11 +269,12 @@ object Stateful extends Serializable {
     * drops it under EventTimeTimeout. An emitted key therefore never sees
     * another row: its state is reclaimed, never kept as a tombstone, and
     * a key whose only rows are past its close never gets state at all
-    * (harness sentinels form no cells). `fold(state, rows, wm)` takes the
-    * key's whole micro-batch, so a sketch state is deserialized once per
-    * batch rather than per row, plus the watermark, for folds that prune
-    * pending rows below it. An open key sleeps until the watermark
-    * passes its close or new rows arrive.
+    * (a harness sentinel past a fixed close forms no cell; under a
+    * per-day close it forms one that never closes). `fold(state, rows,
+    * wm)` takes the key's whole micro-batch, so a sketch state is
+    * deserialized once per batch rather than per row, plus the
+    * watermark, for folds that prune pending rows below it. An open key
+    * sleeps until the watermark passes its close or new rows arrive.
     *
     * Drop unwanted rows in `fold`, not with a filter in `rows`: Spark
     * pushes a filter on a non-time column below the watermark, and the
@@ -296,11 +314,20 @@ object Stateful extends Serializable {
     implicit def encoder[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
   }
 
-  /** Out-of-order-tolerant streaming SCD2: same output as `scd2Stream`
-    * but the feed may be shuffled within `slack` of true event order —
-    * the watermark-bounded buffering variant of the CDC ordering
-    * contract documented above. Converges to exactly the batch q48
-    * closed periods. */
+  /** Streaming SCD2: the incremental twin of the batch history build
+    * (operators/Temporal.q48Scd2). Per-user state carries the one OPEN
+    * period; an attribute change closes it (emitted downstream, append
+    * mode) and opens the next. State is O(1) per user plus the reorder
+    * buffer — the closed history lives in the sink, not the state store.
+    *
+    * Ordering contract: a CDC source delivers a log-sequence-ordered
+    * feed, non-decreasing per key. This twin relaxes it to a feed
+    * shuffled within `slack` of true event order: rows are buffered in
+    * state and applied in (ts, event_id) order once the watermark passes
+    * them, trading state size for reordering slack. A closed period
+    * therefore emits once the watermark passes its successor row, even
+    * for an in-order feed. Converges to exactly the batch q48 closed
+    * periods. */
   def scd2StreamOoo(df: DataFrame, slack: String = "2 hours"): Dataset[Scd2Period] = {
     orderedPerKey[Option[Scd2State], Scd2Period](df, slack,
       Option.empty[Scd2State]) { (user, e, st) =>
@@ -463,12 +490,11 @@ object Stateful extends Serializable {
             Seq(SessionPath(user, pathOf(st))))
         else (push(st, e._4).copy(lastUs = t), Nil)
       },
-      onWatermark = { (user, wm, st) =>
+      onWatermark = Some { (user, wm, st) =>
         if (st.open && wm > st.lastUs / 1000L + 600000L)
           (empty, Seq(SessionPath(user, pathOf(st))))
         else (st, Nil)
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** One backward as-of enrichment: a click paired with the latest
@@ -543,13 +569,12 @@ object Stateful extends Serializable {
           case _ => (st, Nil)
         }
       },
-      onWatermark = { (_, wmMs, st) =>
+      onWatermark = Some { (_, wmMs, st) =>
         val (dead, live) = st.pending.partition {
           case (_, cus) => cus + tolUs < wmMs * 1000L }
         (FwdState(live),
           dead.map { case (ceid, _) => FwdMatch(ceid, None, None) })
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** Streaming twin of the cohort-retention matrix (Behavioral
@@ -584,20 +609,27 @@ object Stateful extends Serializable {
     * means. When event-time-ordered replay crosses a bucket boundary the
     * closing bucket is scored against the trailing window (emitted once
     * ≥ 4 trailing buckets exist, mirroring the batch nt filter) and
-    * pushed into it. The final open bucket per key never emits — close
-    * it with a per-key sentinel event past the horizon, exactly like the
-    * OHLC flush. State is O(1) per key. */
+    * pushed into it; a bucket whose end the watermark reaches closes on
+    * time passing alone (perBucket), no successor event needed. State
+    * is O(1) per key. */
   final case class AnomalyPoint(event_type: String, bucket: Long,
       mean_value: Double, trailing_mu: Double, trailing_sd: Double,
       z: Double, is_anomaly: Int)
   final case class TrailState(curBucket: Long, s: Double, n: Long,
       hist: Seq[(Long, Double)])
 
-  def anomalyStream(df: DataFrame, slack: String = "2 hours"): Dataset[AnomalyPoint] = {
+  /** Open a bucket with the row's value, or add the value to it. The
+    * opened sum is the value itself: 0.0 + v would turn a −0.0 into 0.0. */
+  private def addTrail(st: TrailState, b: Long, e: Ev): TrailState =
+    if (st.curBucket < 0L) st.copy(curBucket = b, s = e._5, n = 1L)
+    else st.copy(s = st.s + e._5, n = st.n + 1)
+
+  def anomalyStream(df: DataFrame, slack: String = "2 hours"): Dataset[AnomalyPoint] =
     // close the open bucket: score against the trailing window, in the
     // same fold order and formula as the batch query, then push the
     // closed mean into the trailing history
-    def close(et: String, st: TrailState): (TrailState, Seq[AnomalyPoint]) = {
+    perBucket(df, slack, 21600000L, TrailState(-1L, 0.0, 0L, Nil))(
+      _.curBucket)(addTrail, { (et, st) =>
       val mean = st.s / st.n
       val out =
         if (st.hist.length >= 4) {
@@ -614,29 +646,7 @@ object Stateful extends Serializable {
         } else Nil
       (TrailState(-1L, 0.0, 0L,
         (st.hist :+ (st.curBucket, mean)).takeRight(12)), out)
-    }
-    orderedPerKeyBy[String, TrailState, AnomalyPoint](df, slack,
-      TrailState(-1L, 0.0, 0L, Nil))(_._4)(
-      apply = { (et, e, st) =>
-        val bucket = Math.floorDiv(e._2.getTime, 21600000L)
-        val v = e._5
-        if (st.curBucket == -1L) (st.copy(curBucket = bucket, s = v, n = 1L), Nil)
-        else if (bucket == st.curBucket)
-          (st.copy(s = st.s + v, n = st.n + 1), Nil)
-        else {
-          val (closed, out) = close(et, st)
-          (closed.copy(curBucket = bucket, s = v, n = 1L), out)
-        }
-      },
-      // a bucket whose END the watermark crossed can never see another
-      // row — close it on time passing alone (no successor event needed)
-      onWatermark = { (et, wm, st) =>
-        if (st.curBucket >= 0L && wm >= (st.curBucket + 1L) * 21600000L)
-          close(et, st)
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
-  }
+    })
 
   /** Streaming twin of the rolling exact-quantile monitor (Temporal
     * .q95RollingQuantiles): same bucket state machine as anomalyStream,
@@ -658,7 +668,8 @@ object Stateful extends Serializable {
       val hi = math.ceil(r).toInt
       sorted(lo) + (sorted(hi) - sorted(lo)) * (r - lo)
     }
-    def close(et: String, st: TrailState): (TrailState, Seq[QuantilePoint]) = {
+    perBucket(df, slack, 21600000L, TrailState(-1L, 0.0, 0L, Nil))(
+      _.curBucket)(addTrail, { (et, st) =>
       val mean = st.s / st.n
       val win = (st.hist.map(_._2) :+ mean).takeRight(12)
         .sorted.toIndexedSeq
@@ -668,26 +679,7 @@ object Stateful extends Serializable {
         if (mean > p75 + iqr * 1.5 || mean < p25 - iqr * 1.5) 1 else 0)
       (TrailState(-1L, 0.0, 0L,
         (st.hist :+ ((st.curBucket, mean))).takeRight(12)), Seq(out))
-    }
-    orderedPerKeyBy[String, TrailState, QuantilePoint](df, slack,
-      TrailState(-1L, 0.0, 0L, Nil))(_._4)(
-      apply = { (et, e, st) =>
-        val bucket = Math.floorDiv(e._2.getTime, 21600000L)
-        val v = e._5
-        if (st.curBucket == -1L) (st.copy(curBucket = bucket, s = v, n = 1L), Nil)
-        else if (bucket == st.curBucket)
-          (st.copy(s = st.s + v, n = st.n + 1), Nil)
-        else {
-          val (closed, out) = close(et, st)
-          (closed.copy(curBucket = bucket, s = v, n = 1L), out)
-        }
-      },
-      onWatermark = { (et, wm, st) =>
-        if (st.curBucket >= 0L && wm >= (st.curBucket + 1L) * 21600000L)
-          close(et, st)
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
+    })
   }
 
   /** Streaming twin of the exact recursive EWMA (Temporal.q64Ewma),
@@ -703,33 +695,18 @@ object Stateful extends Serializable {
   final case class EwmaState(curBucket: Long, s: Double, n: Long,
       prev: Double, hasPrev: Boolean)
 
-  def ewmaStream(df: DataFrame, slack: String = "2 hours"): Dataset[EwmaPoint] = {
-    def close(et: String, st: EwmaState): (EwmaState, Seq[EwmaPoint]) = {
-      val mean = st.s / st.n
-      val e = if (st.hasPrev) 0.2 * mean + 0.8 * st.prev else mean
-      (EwmaState(-1L, 0.0, 0L, e, hasPrev = true),
-        Seq(EwmaPoint(et, st.curBucket, mean, e)))
-    }
-    orderedPerKeyBy[String, EwmaState, EwmaPoint](df, slack,
-      EwmaState(-1L, 0.0, 0L, 0.0, hasPrev = false))(_._4)(
-      apply = { (et, e, st) =>
-        val bucket = Math.floorDiv(e._2.getTime, 21600000L)
-        val v = e._5
-        if (st.curBucket == -1L) (st.copy(curBucket = bucket, s = v, n = 1L), Nil)
-        else if (bucket == st.curBucket)
-          (st.copy(s = st.s + v, n = st.n + 1), Nil)
-        else {
-          val (closed, out) = close(et, st)
-          (closed.copy(curBucket = bucket, s = v, n = 1L), out)
-        }
-      },
-      onWatermark = { (et, wm, st) =>
-        if (st.curBucket >= 0L && wm >= (st.curBucket + 1L) * 21600000L)
-          close(et, st)
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
-  }
+  def ewmaStream(df: DataFrame, slack: String = "2 hours"): Dataset[EwmaPoint] =
+    perBucket(df, slack, 21600000L,
+      EwmaState(-1L, 0.0, 0L, 0.0, hasPrev = false))(_.curBucket)(
+      (st, b, e) =>
+        if (st.curBucket < 0L) st.copy(curBucket = b, s = e._5, n = 1L)
+        else st.copy(s = st.s + e._5, n = st.n + 1),
+      { (et, st) =>
+        val mean = st.s / st.n
+        val e = if (st.hasPrev) 0.2 * mean + 0.8 * st.prev else mean
+        (EwmaState(-1L, 0.0, 0L, e, hasPrev = true),
+          Seq(EwmaPoint(et, st.curBucket, mean, e)))
+      })
 
   final case class VadSegment(doc_id: Long, seg_start: Long, seg_end: Long,
       n_frames: Long, mean_energy: Double)
@@ -767,14 +744,13 @@ object Stateful extends Serializable {
           (VadState(idx, idx, 1L, energy, ts), out)
         }
       },
-      onWatermark = { (doc, wm, st) =>
+      onWatermark = Some { (doc, wm, st) =>
         // the successor frame would carry ts = lastTs + 1 s; once the
         // watermark passes it, the segment can never be extended
         if (st.start >= 0 && wm > st.lastTsMs + 1000L)
           (empty, close(doc, st))
         else (st, Nil)
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** Streaming twin of the interval-sweep peak-concurrency metric
@@ -796,35 +772,22 @@ object Stateful extends Serializable {
 
   def peakStream(df: DataFrame, slack: String = "2 hours"): Dataset[PeakDay] = {
     val empty = PeakState(-1L, 0L, Map.empty)
-    def add(st: PeakState, m: Long, day: Long): PeakState = {
-      val dayEnd = (day + 1L) * 1440L
-      val end = math.min(m + 30L, dayEnd)
-      var d = st.deltas.updated(m, st.deltas.getOrElse(m, 0L) + 1L)
-      if (end < dayEnd) d = d.updated(end, d.getOrElse(end, 0L) - 1L)
-      PeakState(day, st.nSessions + 1L, d)
-    }
-    def close(et: String, st: PeakState): Seq[PeakDay] =
-      if (st.curDay < 0L) Nil
-      else {
+    perBucket(df, slack, 86400000L, empty)(_.curDay)(
+      { (st, day, e) =>
+        val m = Math.floorDiv(e._2.getTime, 60000L)
+        val dayEnd = (day + 1L) * 1440L
+        val end = math.min(m + 30L, dayEnd)
+        var d = st.deltas.updated(m, st.deltas.getOrElse(m, 0L) + 1L)
+        if (end < dayEnd) d = d.updated(end, d.getOrElse(end, 0L) - 1L)
+        PeakState(day, st.nSessions + 1L, d)
+      },
+      { (et, st) =>
         var cum = 0L; var peak = Long.MinValue
         st.deltas.toSeq.sortBy(_._1).foreach { case (_, net) =>
           cum += net; if (cum > peak) peak = cum
         }
-        Seq(PeakDay(et, st.curDay, st.nSessions, peak))
-      }
-    orderedPerKeyBy[String, PeakState, PeakDay](df, slack, empty)(_._4)(
-      apply = { (et, e, st) =>
-        val m = Math.floorDiv(e._2.getTime, 60000L)
-        val day = Math.floorDiv(m, 1440L)
-        if (st.curDay == -1L || day == st.curDay) (add(st, m, day), Nil)
-        else (add(empty, m, day), close(et, st))
-      },
-      onWatermark = { (et, wm, st) =>
-        if (st.curDay >= 0L && wm >= (st.curDay + 1L) * 1440L * 60000L)
-          (empty, close(et, st))
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
+        (empty, Seq(PeakDay(et, st.curDay, st.nSessions, peak)))
+      })
   }
 
   /** One closed TWAP day: all-INTEGER accumulators (exact cents,
@@ -857,56 +820,23 @@ object Stateful extends Serializable {
       val w = Math.floorDiv(untilUs - st.lastUs, 1000L)
       st.copy(swv = st.swv + st.lastCents * w, durMs = st.durMs + w)
     }
-    def open(day: Long, t: Long, cents: Long): TwapState =
-      TwapState(day, 1L, 0L, cents, 0L, t, cents)
-    def close(et: String, st: TwapState): Seq[TwapDay] =
-      if (st.curDay < 0L) Nil
-      else {
-        val fin = settle(st, (st.curDay + 1L) * DayUs)
-        Seq(TwapDay(et, fin.curDay, fin.n, fin.durMs, fin.swv, fin.scents))
-      }
-    orderedPerKeyBy[String, TwapState, TwapDay](df, slack, empty)(_._4)(
-      apply = { (et, e, st) =>
+    perBucket(df, slack, 86400000L, empty)(_.curDay)(
+      { (st, day, e) =>
         val t = microsOf(e._2)
-        val day = Math.floorDiv(t, DayUs)
         val cents = halfUp(e._5 * 100)
-        if (st.curDay == -1L) (open(day, t, cents), Nil)
-        else if (day == st.curDay) {
+        if (st.curDay < 0L) TwapState(day, 1L, 0L, cents, 0L, t, cents)
+        else {
           val s2 = settle(st, t)
-          (s2.copy(n = s2.n + 1L, scents = s2.scents + cents,
-            lastUs = t, lastCents = cents), Nil)
-        } else (open(day, t, cents), close(et, st))
+          s2.copy(n = s2.n + 1L, scents = s2.scents + cents,
+            lastUs = t, lastCents = cents)
+        }
       },
-      onWatermark = { (et, wm, st) =>
-        if (st.curDay >= 0L && wm >= (st.curDay + 1L) * 86400000L)
-          (empty, close(et, st))
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
+      { (et, st) =>
+        val fin = settle(st, (st.curDay + 1L) * DayUs)
+        (empty, Seq(TwapDay(et, fin.curDay, fin.n, fin.durMs, fin.swv,
+          fin.scents)))
+      })
   }
-
-  def scd2Stream(ds: Dataset[(Long, java.sql.Timestamp, Long, String)])(
-      implicit e1: Encoder[Scd2State], e2: Encoder[Scd2Period],
-      e3: Encoder[Long]): Dataset[Scd2Period] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[Scd2State]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Period]
-          rows.toSeq.sortBy(r => (r._2.getTime, r._2.getNanos, r._3)).foreach {
-            case (_, ts, _, et) => st match {
-              case null => st = Scd2State(et, ts, 1, 1L)
-              case s if s.eventType == et => st = s.copy(nEvents = s.nEvents + 1)
-              case s =>
-                out += Scd2Period(user, s.eventType, s.validFrom, ts,
-                  s.version, s.nEvents)
-                st = Scd2State(et, ts, s.version + 1, 1L)
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
 
   // ------------------------------------------------------------------
   // q84 / q85 incremental twins (the round-4 batch additions): the
@@ -956,15 +886,14 @@ object Stateful extends Serializable {
             Seq(SessionInterval(user, st.seq, st.s0, st.s1)))
         else (st.copy(s1 = t), Nil)
       },
-      onWatermark = { (user, wm, st) =>
+      onWatermark = Some { (user, wm, st) =>
         // any future row has ts ≥ wm (ms); once wm strictly clears the
         // ms ceiling of s1 + gap, every arrival breaks the gap
         if (st.s0 >= 0L && wm > Math.floorDiv(st.s1 + GapUs, 1000L) + 1L)
           (SessState(st.seq, -1L, -1L),
             Seq(SessionInterval(user, st.seq, st.s0, st.s1)))
         else (st, Nil)
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** One closed surge island: [m0, m1] closed 5-minute-bucket interval
@@ -1026,7 +955,7 @@ object Stateful extends Serializable {
           (s2.copy(curM = m, n = 1L), out)
         }
       },
-      onWatermark = { (et, wm, st) =>
+      onWatermark = Some { (et, wm, st) =>
         // finalize the open bucket once the watermark clears its end…
         val (s2, out1) =
           if (st.curM >= 0L && wm > (st.curM + 1L) * BktMs + 1L)
@@ -1039,8 +968,7 @@ object Stateful extends Serializable {
           (s2.copy(islandDay = -1L, m0 = -1L, m1 = -1L),
             out1 :+ SurgeIsland(et, s2.islandDay, s2.m0, s2.m1))
         else (s2, out1)
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** One closed day of the streaming CUSUM monitor — integer state only;
@@ -1066,38 +994,16 @@ object Stateful extends Serializable {
     * Round(double) semantics (BigDecimal.valueOf + HALF_UP), so the
     * emitted integers equal the batch aggregates bit-for-bit. */
   def cusumStream(df: DataFrame, refStats: Map[String, (Long, Long)],
-      slack: String = "2 hours"): Dataset[CusumDay] = {
-    val DayUs = 86400000000L
-    val empty = CusumState(-1L, 0L, 0L, 0L)
-    def close(et: String, st: CusumState): (CusumState, Seq[CusumDay]) =
-      if (st.curDay < 0L) (st, Nil)
-      else {
+      slack: String = "2 hours"): Dataset[CusumDay] =
+    perBucket(df, slack, 86400000L, CusumState(-1L, 0L, 0L, 0L))(_.curDay)(
+      (st, day, e) => st.copy(curDay = day,
+        sumMilli = st.sumMilli + halfUp(e._5 * 1000), n = st.n + 1L),
+      { (et, st) =>
         val (nd, sm) = refStats.getOrElse(et, (1L, 0L))
         val mi = roundDiv(st.sumMilli, st.n)
         val cus = st.cusums + (mi * nd - sm)
-        (CusumState(-1L, 0L, 0L, cus),
-          Seq(CusumDay(et, st.curDay, mi, cus)))
-      }
-    orderedPerKeyBy[String, CusumState, CusumDay](df, slack, empty)(_._4)(
-      apply = { (et, e, st) =>
-        val day = Math.floorDiv(microsOf(e._2), DayUs)
-        val vm = halfUp(e._5 * 1000)
-        if (st.curDay == -1L)
-          (st.copy(curDay = day, sumMilli = vm, n = 1L), Nil)
-        else if (day == st.curDay)
-          (st.copy(sumMilli = st.sumMilli + vm, n = st.n + 1L), Nil)
-        else {
-          val (closed, out) = close(et, st)
-          (closed.copy(curDay = day, sumMilli = vm, n = 1L), out)
-        }
-      },
-      onWatermark = { (et, wm, st) =>
-        if (st.curDay >= 0L && wm >= (st.curDay + 1L) * 86400000L)
-          close(et, st)
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
-  }
+        (CusumState(-1L, 0L, 0L, cus), Seq(CusumDay(et, st.curDay, mi, cus)))
+      })
 
   /** One closed day of the live Holt forecaster (q119's raw row): the
     * exact-milli daily mean and the forecast that was standing BEFORE
@@ -1117,12 +1023,12 @@ object Stateful extends Serializable {
     * the batch sort produces; q119Finish then runs over the emitted
     * rows — identical code to batch. */
   def holtStream(df: DataFrame, slack: String = "2 hours")
-      : Dataset[HoltDay] = {
-    val DayUs = 86400000000L
-    val empty = HoltState(-1L, 0L, 0L, 0.0, 0.0, false)
-    def close(et: String, st: HoltState): (HoltState, Seq[HoltDay]) =
-      if (st.curDay < 0L) (st, Nil)
-      else {
+      : Dataset[HoltDay] =
+    perBucket(df, slack, 86400000L,
+      HoltState(-1L, 0L, 0L, 0.0, 0.0, false))(_.curDay)(
+      (st, day, e) => st.copy(curDay = day,
+        sumMilli = st.sumMilli + halfUp(e._5 * 1000), n = st.n + 1L),
+      { (et, st) =>
         val mi = roundDiv(st.sumMilli, st.n)
         val m = mi.toDouble
         if (!st.started)
@@ -1135,27 +1041,7 @@ object Stateful extends Serializable {
           (HoltState(-1L, 0L, 0L, lNew, bNew, true),
             Seq(HoltDay(et, st.curDay, mi, Some(f))))
         }
-      }
-    orderedPerKeyBy[String, HoltState, HoltDay](df, slack, empty)(_._4)(
-      apply = { (et, e, st) =>
-        val day = Math.floorDiv(microsOf(e._2), DayUs)
-        val vm = halfUp(e._5 * 1000)
-        if (st.curDay == -1L)
-          (st.copy(curDay = day, sumMilli = vm, n = 1L), Nil)
-        else if (day == st.curDay)
-          (st.copy(sumMilli = st.sumMilli + vm, n = st.n + 1L), Nil)
-        else {
-          val (closed, out) = close(et, st)
-          (closed.copy(curDay = day, sumMilli = vm, n = 1L), out)
-        }
-      },
-      onWatermark = { (et, wm, st) =>
-        if (st.curDay >= 0L && wm >= (st.curDay + 1L) * 86400000L)
-          close(et, st)
-        else (st, Nil)
-      },
-      watermarkWakeups = true)
-  }
+      })
 
   /** One user's running rarity tally (q110's per-user row). */
   final case class RarityRow(user_id: Long, n_events: Long, sm: Long)
@@ -1363,13 +1249,12 @@ object Stateful extends Serializable {
           }
         }
       },
-      onWatermark = { (key, wm, st) =>
+      onWatermark = Some { (key, wm, st) =>
         if (!st.done && st.n > 0L && wm > endDayExclusive * 86400000L + 1L)
           (st.copy(done = true),
             Seq(BeaconRow(key._1, key._2, st.n, st.sg, st.sg2)))
         else (st, Nil)
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** One user's closed drawdown summary (q160's per-user row, sans the
@@ -1406,13 +1291,12 @@ object Stateful extends Serializable {
           (DrawdownState(cum, peak, maxdd, st.n + 1L, done = false), Nil)
         }
       },
-      onWatermark = { (key, wm, st) =>
+      onWatermark = Some { (key, wm, st) =>
         if (!st.done && st.n > 0L && wm > endDayExclusive * 86400000L + 1L)
           (st.copy(done = true),
             Seq(DrawdownRow(key, st.n, st.cum, st.peak, st.maxdd)))
         else (st, Nil)
-      },
-      watermarkWakeups = true)
+      })
   }
 
   /** One exposed user's experiment outcome (q106's `per` table). */
@@ -1608,20 +1492,21 @@ object Stateful extends Serializable {
     * rollup and the 100 TB live-distinct primitive: per-key state is a
     * fixed-size DataSketches HLL register array (the same library
     * behind Spark's hll_sketch_agg), folded commutatively as events
-    * arrive in ANY order, so a day's distinct-user estimate is
-    * available the moment the watermark closes it — no per-user state,
-    * no exact set. Unlike every bit-parity twin, a sketch's ESTIMATE
-    * is implementation-defined, so the gate is a tolerance spec
-    * (estimate within the lgK=14 error envelope of the exact count —
-    * the q67/q164 convention). */
-  def hllDistinctStream(df: DataFrame, endDayExclusive: Long,
-      slack: String = "2 hours"): Dataset[DistinctCell] = {
+    * arrive in ANY order. Each (type, day) cell closes at its own day's
+    * end, so a day's distinct-user estimate emits the moment the
+    * watermark crosses it and its registers are removed — no per-user
+    * state, no exact set, no end-of-timeline parameter. Unlike every
+    * bit-parity twin, a sketch's ESTIMATE is implementation-defined, so
+    * the gate is a tolerance spec (estimate within the lgK=14 error
+    * envelope of the exact count — the q67/q164 convention). */
+  def hllDistinctStream(df: DataFrame, slack: String = "2 hours")
+      : Dataset[DistinctCell] = {
     import org.apache.datasketches.hll.HllSketch
     closeOnce[(String, Timestamp, Long), (String, Long), Array[Byte],
         DistinctCell](df.withWatermark("ts", slack)
         .select(col("event_type"), col("ts"), col("user_id")),
       _._2, r => (r._1, Math.floorDiv(microsOf(r._2), 86400000000L)),
-      _ => endDayExclusive * 86400000L, Array.emptyByteArray)(
+      k => (k._2 + 1L) * 86400000L, Array.emptyByteArray)(
       (bytes, it, _) => {
         val sk =
           if (bytes.isEmpty) new HllSketch(14) else HllSketch.heapify(bytes)
@@ -1671,74 +1556,6 @@ object Stateful extends Serializable {
         Some(QuantileCell(key, sk.getN, Math.round(sk.getQuantile(0.5)),
           Math.round(sk.getQuantile(0.9)), Math.round(sk.getQuantile(0.99))))
       })
-  }
-
-  /** HllDistinctProcessor — live approximate distinct users per
-    * (type, day) on `transformWithState`, the TRUE live shape of the
-    * sketch family: `MapState[day → serialized HLL registers]` with one
-    * event-time timer PER OPEN DAY (the DailyMeanProcessor timer
-    * discipline), so each day's estimate emits the moment the
-    * watermark crosses the day's end — no end-of-timeline parameter,
-    * days close forever as the calendar advances and their register
-    * bytes are removed on emission. State is bounded by open days per
-    * type (≤ slack horizon / day) × the fixed lgK=14 register array. */
-  class HllDistinctProcessor
-      extends StatefulProcessor[String, (String, java.sql.Timestamp,
-        Long), DistinctCell] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.datasketches.hll.HllSketch
-    @transient private var days: MapState[Long, Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      days = getHandle.getMapState[Long, Array[Byte]]("days",
-        Encoders.scalaLong, Encoders.BINARY, TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[(String, java.sql.Timestamp, Long)],
-        timerValues: TimerValues): Iterator[DistinctCell] = {
-      // fold the batch day-locally FIRST: one heapify + one serialized
-      // write-back + one timer registration per TOUCHED DAY, not per
-      // row — a batch of N same-day rows would otherwise pay
-      // O(N × sketch-size) serialization churn
-      rows.toSeq
-        .groupBy(r => Math.floorDiv(microsOf(r._2), 86400000000L))
-        .foreach { case (day, dayRows) =>
-          val sk =
-            if (days.containsKey(day))
-              HllSketch.heapify(days.getValue(day))
-            else new HllSketch(14)
-          dayRows.foreach(r => sk.update(r._3))
-          days.updateValue(day, sk.toUpdatableByteArray)
-          getHandle.registerTimer((day + 1L) * 86400000L)
-        }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: String,
-        timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo)
-        : Iterator[DistinctCell] = {
-      val day = expiredTimerInfo.getExpiryTimeInMs / 86400000L - 1L
-      if (days.containsKey(day)) {
-        val est = Math.round(
-          org.apache.datasketches.hll.HllSketch
-            .heapify(days.getValue(day)).getEstimate)
-        days.removeKey(day)
-        Iterator.single(DistinctCell(key, day, est))
-      } else Iterator.empty
-    }
-  }
-
-  /** The transformWithState HLL distinct twin (see
-    * HllDistinctProcessor). Input: the standard event columns. */
-  def hllDistinctTws(df: DataFrame, slack: String = "2 hours")
-      : Dataset[DistinctCell] = {
-    import Derived.encoder
-    val rows = df.withWatermark("ts", slack)
-      .select(col("event_type"), col("ts"), col("user_id"))
-      .as[(String, java.sql.Timestamp, Long)]
-    rows.groupByKey(_._1)
-      .transformWithState(new HllDistinctProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** One (type, day, minute, kind) concurrency cell (q83's grids —

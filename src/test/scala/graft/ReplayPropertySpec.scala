@@ -102,6 +102,11 @@ class ReplayPropertySpec extends SparkSpec {
 
   test("property: any jitter < slack + any chunking replays to batch scd2") {
     assert(batchClosed.nonEmpty)
+    // pinned in-order case: the CDC-source contract itself (global ts
+    // order, per-key non-decreasing) split mid-stream; the random
+    // property below only sometimes samples jitter 0
+    assert(replayScd2(0L, 1L, Seq(0.5)) == batchClosed,
+      "an in-order feed split mid-stream must replay to batch scd2")
     // (slack, jitter-bound) pairs: the contract is jitter STRICTLY
     // inside the watermark delay, at any delay — not just the 2 h the
     // fixed-feed tests use. Jitter up to slack minus one minute.

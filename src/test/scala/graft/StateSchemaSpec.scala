@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.streaming.Stateful
@@ -11,8 +12,12 @@ import graft.streaming.Stateful
   * derives its key and state encoders strands existing checkpoints even
   * when every emitted row stays the same. One twin per key shape:
   * scd2StreamOoo (`Long`, the benchmark's reorder-buffer twin),
-  * cusumStream (`String`) and beaconStream (`(Long, String)`). The
-  * transformWithState twins keep one schema per state variable; the
+  * cusumStream (`String`) and beaconStream (`(Long, String)`); and one
+  * per state shape of the series-bucket family: twapStream (plain),
+  * anomalyStream (a `Seq` history) and peakStream (a `Map`). `closeOnce`
+  * is pinned by hllDistinctStream (a `(String, Long)` key over binary
+  * sketch state) and dailyRevenueStream (the benchmark's grid twin).
+  * The transformWithState twins keep one schema per state variable; the
   * daily-means MapState and the sessionize ListState and ValueState pin
   * the encoders those twins derive. */
 class StateSchemaSpec extends SparkSpec {
@@ -100,6 +105,32 @@ class StateSchemaSpec extends SparkSpec {
       "{_1:bigint!,_2:string}",
       "{groupState:{_1:{lastUs:bigint!,n:bigint!,sg:bigint!,sg2:bigint!," +
         s"done:boolean!},_2:$buffer},timeoutTimestamp:bigint!}"))
+    assert(stateSchemas(df => Stateful.twapStream(df)) == (
+      "{value:string}",
+      "{groupState:{_1:{curDay:bigint!,n:bigint!,swv:bigint!,scents:bigint!," +
+        "durMs:bigint!,lastUs:bigint!,lastCents:bigint!}," +
+        s"_2:$buffer},timeoutTimestamp:bigint!}"))
+    assert(stateSchemas(df => Stateful.anomalyStream(df)) == (
+      "{value:string}",
+      "{groupState:{_1:{curBucket:bigint!,s:double!,n:bigint!," +
+        "hist:[{_1:bigint!,_2:double!}]}," +
+        s"_2:$buffer},timeoutTimestamp:bigint!}"))
+    assert(stateSchemas(df => Stateful.peakStream(df)) == (
+      "{value:string}",
+      "{groupState:{_1:{curDay:bigint!,nSessions:bigint!," +
+        "deltas:map<bigint,bigint!>}," +
+        s"_2:$buffer},timeoutTimestamp:bigint!}"))
+  }
+
+  test("closeOnce state schemas: (String, Long) key with binary state, grid") {
+    assert(stateSchemas(df => Stateful.hllDistinctStream(df)) == (
+      "{_1:string,_2:bigint!}",
+      "{groupState:{value:binary},timeoutTimestamp:bigint!}"))
+    assert(stateSchemas(df => Stateful.dailyRevenueStream(df.select(
+        col("event_type"), col("ts"),
+        expr("cast(round(value * 100) as bigint)").as("cents")), 100000L)) == (
+      "{_1:string,_2:bigint!}",
+      "{groupState:{value:bigint!},timeoutTimestamp:bigint!}"))
   }
 
   test("transformWithState state schemas: dailyMeansTws and sessionizeTws") {

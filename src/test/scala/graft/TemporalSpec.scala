@@ -12,46 +12,6 @@ class TemporalSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("streaming scd2 closed periods == batch q48 closed periods") {
-    val s = spark
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-
-    // feed the event log in global ts order (the CDC-source contract:
-    // per-key non-decreasing), split across micro-batches mid-stream
-    val events = Tables.events(s, sf)
-      .select("user_id", "ts", "event_id", "event_type")
-      .orderBy("ts", "event_id")
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .collect()
-    val input = MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-    val (first, rest) = events.splitAt(events.length / 2)
-    val q = graft.streaming.Stateful.scd2Stream(input.toDS())
-      .writeStream.format("memory").queryName("scd2_out")
-      .trigger(Trigger.ProcessingTime(50)).start()
-    input.addData(first.toSeq)
-    q.processAllAvailable()
-    input.addData(rest.toSeq)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = s.sql(
-      "SELECT user_id, event_type, valid_from, valid_to, version, n_events FROM scd2_out")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2),
-        r.getTimestamp(3), r.getInt(4), r.getLong(5))).toSet
-    val batchClosed = SparkEntry.queries("q48_scd2")(s, sf)
-      .filter("is_current = 0").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2),
-        r.getTimestamp(3), r.getInt(4), r.getLong(6))).toSet
-    assert(streamed.nonEmpty)
-    assert(streamed == batchClosed,
-      s"stream-only: ${streamed.diff(batchClosed).take(3)}; " +
-        s"batch-only: ${batchClosed.diff(streamed).take(3)}")
-  }
-
   test("streaming ohlc candles == batch q56 resample") {
     val s = spark
     import s.implicits._
